@@ -49,15 +49,18 @@ object Bench {
     * broadcast attach + left join onto the reset frame, AQE on.
     *
     * ADVICE r11: the copy still executes through LIVE shared prims —
-    * Iterate.loopWithStatus / Iterate.materialize (localCheckpoint level
-    * Release.CkLevel), Hint.state, Mat.mat, and the session's AQE
-    * defaults. Changing any of those changes the probe's executed plan and
-    * silently shifts CalibNominalSec. Round-close discipline: any round
-    * that touches those prims must re-check the probe against its nominal
-    * band (idle ~0.9-1.3) before reading host_index across rounds. r12
-    * touched none of them (materializeCount's default flipped, but the
-    * probe's loop runs through loopWithStatus/materialize, which are
-    * byte-unchanged — the probe never calls materializeCount). */
+    * Iterate.loopWithStatus / Iterate.materialize (the packed-chunk
+    * checkpoint), Hint.state, Mat.mat, and the session's AQE defaults.
+    * Changing any of those changes the probe's executed plan and silently
+    * shifts CalibNominalSec. Round-close discipline: any round that
+    * touches those prims must re-check the probe against its nominal band
+    * (idle ~0.9-1.3) before reading host_index across rounds. r12 touched
+    * none of them. The packed-chunk materialize (which replaced
+    * localCheckpoint at MEMORY_AND_DISK_SER) does: CalibProbe 3 reps at
+    * local[4] on a 4-core / 16 GB host measured the probe at median
+    * 14.51s (13.48-15.54) before it and 6.26s (5.66-8.10) after, so
+    * host_index values from before and after that change are not
+    * comparable, and the local[32] CalibNominalSec predates both. */
   private def pinnedProbePr(g: graft.core.PropertyGraph, iters: Int)
       : org.apache.spark.sql.DataFrame = {
     import graft.core.Gr._

@@ -4,7 +4,7 @@ import graft.prims.Mat._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.{PropertyGraph, Structure, Gr}
-import graft.prims.{Iterate, Hint}
+import graft.prims.{Iterate, Hint, Regime}
 
 /** Katz / eigenvector / HITS / degree centrality — the PageRank-shaped
   * dense-iteration family, plus Brandes betweenness.
@@ -84,9 +84,7 @@ object Centrality {
     // edge attach is Hint.state-broadcast, the remaining per-round joins
     // are V-row-sized — AQE's per-exchange stage jobs were pure scheduler
     // floor on this loop (same audit as the r11-opt PageRank change).
-    def loops[T](body: => T): T =
-      if (nV <= 5000000L) graft.prims.Aqe.off(verts.sparkSession, nV)(body) else body
-    val (res, converged, _) = loops {
+    val (res, converged, _) = Regime.scope(verts.sparkSession, nV) {
       Iterate.loopWithStatus(init, maxIter, step, conv,
         checkpointEvery = 1, releasePrev = true)
     }
@@ -120,10 +118,7 @@ object Centrality {
         .agg(sum(abs(col("ec") - col("prev")))).first().getDouble(0) < tol
     }
     // scoped AQE-off under the gate — same rationale as katzRaw (r11-opt)
-    def loops[T](body: => T): T =
-      if (nV.toLong <= 5000000L)
-        graft.prims.Aqe.off(verts.sparkSession, nV.toLong)(body) else body
-    loops {
+    Regime.scope(verts.sparkSession, nV.toLong) {
       Iterate.loop(init, maxIter, step, conv, checkpointEvery = 1,
         releasePrev = true)
     }
@@ -190,9 +185,7 @@ object Centrality {
         .agg(sum(abs(col("hubs") - col("ph")))).first().getDouble(0) < tol
     }
     // scoped AQE-off under the gate — same rationale as katzRaw (r11-opt)
-    def loops[T](body: => T): T =
-      if (nV <= 5000000L) graft.prims.Aqe.off(verts.sparkSession, nV)(body) else body
-    val res = loops {
+    val res = Regime.scope(verts.sparkSession, nV) {
       Iterate.loop(init, maxIter, step, conv, checkpointEvery = 1,
         releasePrev = true)
     }
@@ -209,7 +202,7 @@ object Centrality {
 
   /** Degree centrality: degree / (V-1) (reference `degree_centrality.py:7`). */
   def degreeCentrality(g: PropertyGraph): DataFrame = {
-    val nV = g.vertices.count().toDouble
+    val nV = g.numVertices.toDouble
     Structure.degrees(g).select(col(ID),
       (col("degree") / lit(nV - 1.0)).as("degree_centrality"))
   }
@@ -275,7 +268,7 @@ object Centrality {
     val nVL = nV.toLong
     val nRoots = k.map(_.toLong).getOrElse(nVL)
     val stateBound =
-      if (nVL > 0 && nRoots > 0 && nRoots <= 5000000L / nVL) nRoots * nVL else -1L
+      if (nVL > 0 && nRoots > 0 && nRoots <= Regime.BroadcastRows / nVL) nRoots * nVL else -1L
     def st(df: DataFrame): DataFrame = graft.prims.Hint.state(df, stateBound)
     // AQE off for the level loops when the state bound clears the broadcast
     // gate — every join inside is then explicitly broadcast-hinted, and
@@ -283,8 +276,6 @@ object Centrality {
     // extra jobs per BFS level; see prims.Aqe). Past the gate the joins are
     // stats-blind SMJs where AQE's runtime broadcast/skew rescue earns its
     // keep, so it stays on.
-    def loops[T](body: => T): T =
-      if (stateBound >= 0) graft.prims.Aqe.off(verts.sparkSession, stateBound)(body) else body
 
     // forward multi-source BFS: settled(root, id, dist, sigma)
     var settled = roots.select(col("root"), col("root").as(ID),
@@ -293,7 +284,7 @@ object Centrality {
     var level = 0
     var more = true
     var delta: DataFrame = null
-    loops {
+    Regime.scope(verts.sparkSession, stateBound) {
     while (more) {
       level += 1
       // frontier-size check rides the materialization job; `settled` stays
@@ -406,13 +397,11 @@ object Centrality {
     val nVL = nV.toLong
     val nRoots = k.map(_.toLong).getOrElse(nVL)
     val stateBound =
-      if (nVL > 0 && nRoots > 0 && nRoots <= 5000000L / nVL) nRoots * nVL else -1L
+      if (nVL > 0 && nRoots > 0 && nRoots <= Regime.BroadcastRows / nVL) nRoots * nVL else -1L
     def st(df: DataFrame): DataFrame = graft.prims.Hint.state(df, stateBound)
     // same AQE gating as the vertex variant (prims.Aqe) — loops only; the
     // final contribE three-way join deliberately stays under Catalyst+AQE
     // planning (the measured-2.7×-faster unhinted route below)
-    def loops[T](body: => T): T =
-      if (stateBound >= 0) graft.prims.Aqe.off(verts.sparkSession, stateBound)(body) else body
 
     var settled = roots.select(col("root"), col("root").as(ID),
       lit(0).as("dist"), lit(1.0).as("sigma")).mat
@@ -420,7 +409,7 @@ object Centrality {
     var level = 0
     var more = true
     var delta: DataFrame = null
-    loops {
+    Regime.scope(verts.sparkSession, stateBound) {
     while (more) {
       level += 1
       // same shape as the vertex variant: count rides the materialization,

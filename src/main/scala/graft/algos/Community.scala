@@ -5,6 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.{PropertyGraph, Structure, Gr}
+import graft.prims.Regime
 
 /** Community detection: Louvain (+ Leiden-style refinement hook, ECG) and
   * the clustering-quality analyzers (modularity / edge cut / ratio cut).
@@ -170,9 +171,11 @@ object Community {
     if (ownsLvlEdges) graft.prims.Release.free(lvlEdges)
     // maxLevel <= 0 means no level ever ran and the lazy flat is still
     // null — return the identity (singleton-community) labels the pre-r12
-    // eager build produced for that degenerate call.
+    // eager build produced for that degenerate call. Materialized like the
+    // loop-built flat, so the returned frame is self-contained and freeing
+    // it never reaches the caller's base.
     if (flat == null)
-      flat = Structure.extractVertexList(base).select(col(ID), col(ID).as("louvain"))
+      flat = Structure.extractVertexList(base).select(col(ID), col(ID).as("louvain")).mat
     (flat, prevQ, level)
   }
 
@@ -250,7 +253,7 @@ object Community {
     // regime split decided once: under the gate the per-round state
     // broadcast serves every attach (see the round body); past it the
     // r10 shuffle-hash shape is kept verbatim
-    val broadcastRound = nState <= 5000000L
+    val broadcastRound = Regime.fits(nState)
     // the loop state carries k ALONGSIDE the label: every consumer of the
     // old per-round labels⋈ki join (community totals, candidate scoring)
     // now reads one checkpointed frame — two recomputed join subplans per
@@ -386,12 +389,8 @@ object Community {
     // power-law edge stream where AQE's runtime skew split and plan sizing
     // earn their keep — disabling it there OOM'd the 32g scale-22 ecg4
     // probe while the same code completed louvain at 4× the per-run data.
-    def loopAqe[T](body: => T): T =
-      if (nState <= 5000000L)
-        graft.prims.Aqe.off(e.sparkSession, math.max(nState, nEdgeStream))(body)
-      else body
     try {
-    loopAqe {
+    Regime.scope(e.sparkSession, nState, math.max(nState, nEdgeStream)) {
     while (zeroStreak < maskMod && it < maxIter) {
       it += 1
       // per-vertex weight to each neighboring community (self-loops
@@ -590,7 +589,7 @@ object Community {
       // long-loop deployments additionally set
       // spark.cleaner.periodicGC.interval (ScaleProbe pins 60s), which
       // bounds scratch continuously regardless of round cadence.
-      if (nState > 5000000L && it % 3 == 0) System.gc()
+      if (!Regime.fits(nState) && it % 3 == 0) System.gc()
       if (carryTot && moved > 0) {
         // movers' k leaves the old community and joins the new one; merge
         // the deltas into the carried totals (movers shrink per round, so

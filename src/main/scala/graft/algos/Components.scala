@@ -4,7 +4,7 @@ import graft.prims.Mat._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.{PropertyGraph, Structure, Gr}
-import graft.prims.Iterate
+import graft.prims.{Hint, Iterate, Regime, Release}
 
 /** Connected components, core decomposition, and related fixpoint programs.
   *
@@ -33,59 +33,59 @@ object Components {
     * the diameter exceeds `starSwitch`, the loop abandons propagation and
     * restarts with [[wccStar]], whose round count is O(log² V) regardless
     * of diameter (pathological chains, lattices). */
-  /** `assumeSymmetric`: the caller guarantees both directions of every
-    * edge are present — the symmetrize shuffle (a full distinct of the
-    * edge set) and its materialized copy are skipped; the edge frame is
+  /** `assumeSymmetric` (or a graph whose `props.symmetric` is set): both
+    * directions of every edge are present — the symmetrize shuffle (a full
+    * distinct of the edge set) is skipped and the edge frame is
     * materialized as-is for the round loop. */
   def wccWithRounds(g: PropertyGraph, maxIter: Int = 50,
                     starSwitch: Int = 12,
                     assumeSymmetric: Boolean = false): (DataFrame, Int) = {
-    val und = (if (assumeSymmetric) g.edges.select(SRC, DST)
+    val nV = g.numVertices
+    // the symmetrize is an edge-keyed distinct, so it runs before the
+    // vertex-sized regime scope below, under the session's planning
+    val und = (if (assumeSymmetric || g.props.symmetric) g.edges.select(SRC, DST)
                else Structure.symmetrize(g.edges.select(SRC, DST))).mat
-    val init = g.vertices.select(col(ID), col(ID).as("component"))
-    val nV = g.vertices.count()
-    var changed = 1L
-    var labels = init.mat
-    var it = 0
-    // AQE off under the broadcast gate — both per-round joins are
-    // Hint.state-hinted (prims.Aqe scaladoc)
-    def loops[T](body: => T): T =
-      if (nV <= 5000000L) graft.prims.Aqe.off(und.sparkSession, nV)(body) else body
-    loops {
-    while (changed > 0 && it < math.min(maxIter, starSwitch)) {
-      it += 1
-      val nbrMin = und.join(graft.prims.Hint.state(labels.withColumnRenamed(ID, SRC), nV), SRC)
-        .groupBy(col(DST).as(ID)).agg(min("component").as("nbr_min"))
-      // the convergence count rides the materialization job (observe
-      // metric) — one job per round, no separate count scan.
-      // labels ⋈ nbrMin is V-row × V-row (r11-opt): un-hinted — a
-      // broadcast of nbrMin bought no scan-in-place of a bigger side and
-      // cost one build job per round; the plain join rides the
-      // materialize job at the scoped width.
-      val (joined, ch) = graft.prims.Iterate.materializeCount(
-        labels.join(nbrMin, Seq(ID), "left")
-          .select(col(ID), col("component").as("old"),
-            least(col("component"), coalesce(col("nbr_min"), col("component"))).as("component")),
-        sum(when(col("component") < col("old"), 1L).otherwise(0L)),
-        _.filter(col("component") < col("old")).count())
-      changed = ch
-      // old labels fed the materialization above — free their blocks now
-      // instead of holding rounds × V rows (prims.Release scaladoc)
-      graft.prims.Release.free(labels)
-      labels = joined.select(col(ID), col("component"))
-    }
+    // the whole propagation (label setup and rounds) in one regime scope:
+    // both per-round joins are Hint.state-hinted or V-row-sized
+    val (labels, it, changed) = Regime.scope(g.spark, nV) {
+      var changed = 1L
+      var labels = g.vertices.select(col(ID), col(ID).as("component")).mat
+      var it = 0
+      while (changed > 0 && it < math.min(maxIter, starSwitch)) {
+        it += 1
+        val nbrMin = und.join(Hint.state(labels.withColumnRenamed(ID, SRC), nV), SRC)
+          .groupBy(col(DST).as(ID)).agg(min("component").as("nbr_min"))
+        // the convergence count rides the materialization job (observe
+        // metric) — one job per round, no separate count scan.
+        // labels ⋈ nbrMin is V-row × V-row (r11-opt): un-hinted — a
+        // broadcast of nbrMin bought no scan-in-place of a bigger side and
+        // cost one build job per round; the plain join rides the
+        // materialize job at the scoped width.
+        val (joined, ch) = Iterate.materializeCount(
+          labels.join(nbrMin, Seq(ID), "left")
+            .select(col(ID), col("component").as("old"),
+              least(col("component"), coalesce(col("nbr_min"), col("component"))).as("component")),
+          sum(when(col("component") < col("old"), 1L).otherwise(0L)),
+          _.filter(col("component") < col("old")).count())
+        changed = ch
+        // old labels fed the materialization above — free their blocks now
+        // instead of holding rounds × V rows (prims.Release scaladoc)
+        Release.free(labels)
+        labels = joined.select(col(ID), col("component"))
+      }
+      (labels, it, changed)
     }
     if (changed > 0) {
       // still moving after `starSwitch` sweeps — the diameter is large;
       // switch to the star-contraction algorithm (it re-reads g.edges, not
       // this frame, so the propagation state and edge copy are dead)
-      graft.prims.Release.free(labels, und)
+      Release.free(labels, und)
       val (starLabels, starRounds) = wccStar(g, maxIter)
       return (starLabels, it + starRounds)
     }
     // the symmetrized edge copy is dead (the returned labels are
     // materialized); `it` counts rounds incl. the no-change confirmation
-    graft.prims.Release.free(und)
+    Release.free(und)
     (labels, it)
   }
 
@@ -108,9 +108,8 @@ object Components {
     // per-round st() gate below stays satisfiable): every join inside is
     // then explicitly broadcast-hinted and AQE's per-exchange stage jobs
     // are pure scheduler floor — see prims.Aqe.
-    def loops[T](body: => T): T =
-      if (nPairs <= 2500000L) graft.prims.Aqe.off(pairs.sparkSession, nPairs)(body) else body
-    loops {
+    // (gated on the round's adjacency, twice the pair set; width by pairs)
+    Regime.scope(pairs.sparkSession, 2 * nPairs, nPairs) {
     while (!done && it < maxIter) {
       it += 1
       // large-star: per vertex u, m = min(u, N(u)); every neighbor v > u
@@ -450,10 +449,7 @@ object Components {
     var labels = verts.select(col(ID), col(ID).as("ml")).mat
     var changed = 1L
     var sweep = 0
-    def loops[T](body: => T): T =
-      if (stateRows >= 0 && stateRows <= 5000000L)
-        graft.prims.Aqe.off(verts.sparkSession, stateRows)(body) else body
-    loops {
+    Regime.scope(verts.sparkSession, stateRows) {
     while (changed > 0 && sweep < maxSweeps) {
       sweep += 1
       val nbrMin = e.join(graft.prims.Hint.state(

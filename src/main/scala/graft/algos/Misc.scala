@@ -142,7 +142,7 @@ object Misc {
   def fastColoringWithStats(g: PropertyGraph, seed: Long = 42, initColors: Int = 4,
                             maxRounds: Int = 50): (DataFrame, Long, Int) = {
     val und = Structure.removeSelfLoops(Structure.symmetrize(g.edges.select(SRC, DST))).mat
-    val nV = g.vertices.count()
+    val nV = g.numVertices
     def hinted(df: DataFrame) = graft.prims.Hint.state(df, nV)
     var colors = g.vertices.select(col(ID),
       pmod(hash60(concat_ws("|", lit("color"), col(ID), lit(seed))),

@@ -4,7 +4,7 @@ import graft.prims.Mat._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.{PropertyGraph, Gr}
-import graft.prims.{Iterate, Hint}
+import graft.prims.{Iterate, Hint, Regime}
 
 /** PageRank / personalized PageRank — power iteration with dangling-mass
   * redistribution and L1 convergence, matching the reference contract
@@ -42,17 +42,24 @@ object PageRank {
     * on a tolerance miss (`pagerank.py:182-186`). */
   def runWithStatus(g: PropertyGraph, alpha: Double = 0.85, tol: Double = 1e-5,
                     maxIter: Int = 100, personalization: Option[DataFrame] = None,
-                    weighted: Boolean = false, nstart: Option[DataFrame] = None): (DataFrame, Boolean) = {
-    val spark = g.spark
+                    weighted: Boolean = false, nstart: Option[DataFrame] = None): (DataFrame, Boolean) =
+    // AQE off + scoped reduce width under the broadcast gate for the whole
+    // kernel, setup as well as rounds (prims.Regime): the edge attaches are
+    // explicitly Hint.state-broadcast there, the remaining joins are
+    // V-row-sized — AQE's per-exchange query-stage jobs were pure scheduler
+    // floor on this kernel (measured ~9 broadcast/stage jobs per round at
+    // sf0.1).
+    Regime.scope(g.spark, g.numVertices) {
+    val nVL = g.numVertices
+    val nV = nVL.toDouble
     val verts = g.vertices.select(ID).mat
-    val nV = verts.count().toDouble
 
     val e = if (weighted) g.weightedEdges.select(SRC, DST, WEIGHT)
             else g.edges.select(SRC, DST).withColumn(WEIGHT, lit(1.0))
     // out-weight per source (reference precomputed_vertex_out_weight)
     val outW = e.groupBy(col(SRC).as(ID)).agg(sum(WEIGHT).as("out_w"))
       .mat
-    val edges = e.join(outW.withColumnRenamed(ID, SRC), SRC)
+    val edges = e.join(Hint.state(outW.withColumnRenamed(ID, SRC), nVL), SRC)
       .select(col(SRC), col(DST), (col(WEIGHT) / col("out_w")).as("norm_w"))
       .mat
 
@@ -97,7 +104,7 @@ object PageRank {
         else ranks.agg(coalesce(sum(when(col("is_dang"), col("pagerank"))), lit(0.0)))
           .first().getDouble(0)
       val contribs = edges.join(Hint.state(
-          ranks.select(col(ID).as(SRC), col("pagerank")), nV.toLong), SRC)
+          ranks.select(col(ID).as(SRC), col("pagerank")), nVL), SRC)
         .select(col(DST).as(ID), (col("pagerank") * col("norm_w")).as("c"))
         .groupBy(ID).agg(sum("c").as("in_sum"))
       reset.join(contribs, Seq(ID), "left")
@@ -112,21 +119,12 @@ object PageRank {
       cur.join(prev.select(col(ID), col("pagerank").as("prev")), ID)
         .agg(sum(abs(col("pagerank") - col("prev")))).first().getDouble(0) < tol
     }
-    // AQE off + scoped reduce width for the rounds under the broadcast
-    // gate (prims.Aqe scaladoc): the contribution attach is explicitly
-    // Hint.state-broadcast there, the remaining joins are V-row-sized —
-    // AQE's per-exchange query-stage jobs were pure scheduler floor on
-    // this loop (measured ~9 broadcast/stage jobs per round at sf0.1).
-    def loops[T](body: => T): T =
-      if (nV.toLong <= 5000000L)
-        graft.prims.Aqe.off(spark, nV.toLong)(body) else body
-    val (result, converged, _) = loops {
+    val (result, converged, _) =
       Iterate.loopWithStatus(init, maxIter, step, conv, checkEvery = 1,
         checkpointEvery = 1, releasePrev = true)
-    }
 
     (result.select(col(ID), col("pagerank")), converged)
-  }
+    }
 
   /** Fixed-iteration variant (no convergence job per round) — used by the
     * oracle queries so DuckDB-unrolled SQL matches exactly, and the fastest

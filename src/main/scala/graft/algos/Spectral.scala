@@ -4,6 +4,7 @@ import graft.prims.Mat._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.{PropertyGraph, Structure, Gr}
+import graft.prims.Regime
 
 /** Spectral graph clustering (reference: legacy Lanczos+kmeans
   * `algorithms.hpp:878` `spectralBalancedCutClustering`, `:914`
@@ -85,7 +86,7 @@ object Spectral {
     // AQE, unhinted state join) for the plans/r12 before-capture.
     val specBefore = sys.env.contains("GRAFT_SPECTRAL_BEFORE")
     def loops[T](body: => T): T =
-      if (!specBefore && n <= 5000000L) graft.prims.Aqe.off(und.sparkSession, n)(body) else body
+      if (specBefore) body else Regime.scope(und.sparkSession, n)(body)
     loops {
     for (i <- 1 to iters) {
       val vRen = v.withColumnRenamed(ID, DST)
@@ -168,9 +169,7 @@ object Spectral {
     // same scoped-width rule as picCluster (VERDICT r11 item #5); state is
     // snapped to 1e-8 per iteration, so the layout change is absorbed by
     // the existing engine-reproducibility contract
-    def loops[T](body: => T): T =
-      if (nX <= 5000000L) graft.prims.Aqe.off(und.sparkSession, nX)(body) else body
-    loops {
+    Regime.scope(und.sparkSession, nX) {
     for (_ <- 1 to powerIters) {
       // matvec for all p columns in one join + one hash agg
       val y = aNorm.join(graft.prims.Hint.state(x.withColumnRenamed(ID, DST), nX), DST)
@@ -212,7 +211,7 @@ object Spectral {
       }
       least(dists.toIndexedSeq: _*).getField("c")
     }
-    loops {
+    Regime.scope(und.sparkSession, nX) {
     for (_ <- 1 to kmeansIters) {
       val assigned = x.withColumn("cluster", assignExpr(cents))
       // centroid snap, same engine-reproducibility reason as above

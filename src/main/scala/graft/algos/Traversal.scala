@@ -4,7 +4,7 @@ import graft.prims.Mat._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.{PropertyGraph, Gr}
-import graft.prims.Hint
+import graft.prims.{Hint, Regime}
 
 /** BFS / SSSP / k-hop — level-synchronous frontier expansion.
   *
@@ -27,7 +27,10 @@ object Traversal {
   /** BFS distances + predecessors from a single source.
     * @return DataFrame(id, distance, predecessor); unreached vertices absent
     *         (reference marks them with sentinel; callers outer-join). */
-  def bfs(g: PropertyGraph, source: Long, depthLimit: Int = Int.MaxValue): DataFrame = {
+  def bfs(g: PropertyGraph, source: Long, depthLimit: Int = Int.MaxValue): DataFrame =
+    // one regime scope for the whole traversal: the frontier join is
+    // Hint.state-hinted, the settled anti-join is V-row-sized
+    Regime.scope(g.spark, g.numVertices) {
     val e = g.edges.select(SRC, DST).mat
     var settled = g.spark.range(1).select(lit(source).as(ID),
       lit(0).as("distance"), lit(-1L).as("predecessor")).mat
@@ -59,7 +62,7 @@ object Traversal {
       }
     }
     settled
-  }
+    }
 
   /** Union-chain compaction period for accumulator frames in level loops —
     * long enough that the extra checkpoint job is amortized, short enough
@@ -78,7 +81,10 @@ object Traversal {
     * oracle queries can assert convergence within the oracle's unrolled
     * round budget. */
   def ssspWithRounds(g: PropertyGraph, source: Long, cutoff: Double = Double.PositiveInfinity,
-           maxRounds: Int = 200): (DataFrame, Int) = {
+           maxRounds: Int = 200): (DataFrame, Int) =
+    // one regime scope for setup and rounds: the relaxation join is
+    // Hint.state-hinted, the merge and improvement joins are V-row-sized
+    Regime.scope(g.spark, g.numVertices) {
     val e = g.weightedEdges.select(SRC, DST, WEIGHT).mat
     var dist = g.spark.range(1).select(lit(source).as(ID),
       lit(0.0).as("distance"), lit(-1L).as("predecessor")).mat
@@ -110,7 +116,7 @@ object Traversal {
       improved = imp
     }
     (dist, round)
-  }
+    }
 
   /** Keep only reachable rows (`traversal/sssp.py:233 filter_unreachable`). */
   def filterUnreachable(df: DataFrame): DataFrame =

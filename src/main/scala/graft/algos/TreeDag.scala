@@ -4,6 +4,7 @@ import graft.prims.Mat._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.{PropertyGraph, Structure, Gr}
+import graft.prims.Regime
 
 /** Minimum spanning tree (Borůvka) and DAG topological sort.
   *
@@ -81,9 +82,7 @@ object TreeDag {
         // per inner round; a plain join at the scoped width exchanges the
         // same magnitude of rows inside the materialize job itself
         // (2 jobs/inner round instead of 4).
-        def innerLoop[T](body: => T): T =
-          if (nV <= 5000000L) graft.prims.Aqe.off(canon.sparkSession, nV)(body) else body
-        innerLoop {
+        Regime.scope(canon.sparkSession, nV) {
         while (ch > 0) {
           val nbrMin = cgSym.join(lbl.withColumnRenamed(ID, SRC), SRC)
             .groupBy(col(DST).as(ID)).agg(min("ml").as("nm"))

@@ -8,13 +8,20 @@ import org.apache.spark.storage.StorageLevel
   * (cugraph `structure/graph_implementation/simpleGraph.py:79-89`:
   * multi_edge, directed, renumbered, self_loop, store_transposed, weighted).
   * Spark needs no physical transpose: push vs pull is a join-key choice.
+  *
+  * `symmetric`: the edge list is known to hold both directions of every
+  * edge (set by the undirected builders and [[PropertyGraph.symmetrized]]),
+  * so kernels that need an undirected edge set skip the symmetrize shuffle.
+  * `directed = false` alone does not imply it: an undirected graph may be
+  * declared over one-direction pairs (Dedup.resolveClusters does).
   */
 final case class GraphProperties(
     directed: Boolean = true,
     weighted: Boolean = false,
     renumbered: Boolean = false,
     multiEdge: Boolean = false,
-    tree: Boolean = false)
+    tree: Boolean = false,
+    symmetric: Boolean = false)
 
 /** Property-light graph over a columnar edge list — the COO edge list is the
   * source of truth, exactly as in the reference (`simpleGraph.py:42-67`), but
@@ -41,8 +48,11 @@ final case class PropertyGraph(
   def weightedEdges: DataFrame =
     if (hasWeights) edges else edges.withColumn(Gr.WEIGHT, lit(1.0))
 
-  def numVertices: Long = vertices.count()
+  /** Vertex count, counted once per graph: kernels gate their regime on it
+    * (prims.Regime), and a graph's frames never change. */
+  lazy val numVertices: Long = vertices.count()
   def numEdges: Long = edges.count()
+  private lazy val renumberMapRows: Long = renumberMap.fold(0L)(_.count())
 
   /** Predicate surface (reference `simpleGraph.py:1456,1463,1504,1536`):
     * membership checks compile to `filter().limit(1)` — one partial scan,
@@ -98,9 +108,7 @@ final case class PropertyGraph(
     // AQE off under the broadcast gate: both per-round joins are
     // Hint.state-hinted, so AQE only adds per-exchange stage jobs
     // (prims.Aqe scaladoc).
-    def loops[T](body: => T): T =
-      if (nV <= 5000000L) graft.prims.Aqe.off(edges.sparkSession, nV)(body) else body
-    loops {
+    graft.prims.Regime.scope(spark, nV) {
     while (ch > 0) {
       val nbrMin = und.join(
           graft.prims.Hint.state(st.withColumnRenamed(Gr.ID, Gr.SRC), nV), Gr.SRC)
@@ -128,7 +136,8 @@ final case class PropertyGraph(
     * Reference: `structure/symmetrize.py:167`. */
   def symmetrized: PropertyGraph =
     if (!props.directed) this
-    else PropertyGraph(vertices, Structure.symmetrize(edges), props.copy(directed = false), renumberMap)
+    else PropertyGraph(vertices, Structure.symmetrize(edges),
+      props.copy(directed = false, symmetric = true), renumberMap)
 
   def cache(): PropertyGraph = {
     vertices.persist(StorageLevel.MEMORY_AND_DISK)
@@ -153,7 +162,7 @@ final case class PropertyGraph(
       // the map is O(V) with full external-id columns — broadcast only while
       // it is genuinely small (Hint.state gate), else a plain shuffle join;
       // an unconditional broadcast hits the driver/broadcast limit at scale
-      val rm = graft.prims.Hint.state(m.as("_rm"), m.count())
+      val rm = graft.prims.Hint.state(m.as("_rm"), renumberMapRows)
       val joined = df.as("_b").join(rm,
         col(s"_b.$idCol") === col(s"_rm.${Gr.INT_ID}"), "left")
       // replace the internal id column with the external one(s)

@@ -39,7 +39,8 @@ object GraphBuilder {
         .union(Structure.extractVertexList(edges)).distinct()
       case None => Structure.extractVertexList(edges)
     }
-    PropertyGraph(vs, edges, GraphProperties(directed, weightCol.isDefined))
+    PropertyGraph(vs, edges,
+      GraphProperties(directed, weightCol.isDefined, symmetric = !directed))
   }
 
   /** Build with renumbering: external (possibly string / multi-column) ids →
@@ -56,6 +57,7 @@ object GraphBuilder {
     }
     val edges = if (directed) base else Structure.symmetrize(base)
     val vertices = map.select(col(INT_ID).as(ID))
-    PropertyGraph(vertices, edges, GraphProperties(directed, weightCol.isDefined, renumbered = true), Some(map))
+    PropertyGraph(vertices, edges, GraphProperties(directed, weightCol.isDefined,
+      renumbered = true, symmetric = !directed), Some(map))
   }
 }

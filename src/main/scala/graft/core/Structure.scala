@@ -165,9 +165,7 @@ object Structure {
     // for the plans/r12 before-capture.
     val bipBefore = sys.env.contains("GRAFT_BIPARTITE_BEFORE")
     var round = 0
-    def loops[T](body: => T): T =
-      if (nV <= 5000000L) graft.prims.Aqe.off(und.sparkSession, nV)(body) else body
-    loops {
+    graft.prims.Regime.scope(und.sparkSession, nV) {
     while (ch > 0) {
       round += 1
       val nbrMin = und.join(

@@ -227,7 +227,7 @@ object Dedup {
     // full-corpus shuffle. Skip it entirely there (candidates covering most
     // of the corpus also gain little from pruning).
     val shC =
-      if (2 * nPairs <= 5000000L) {
+      if (graft.prims.Regime.fits(2 * nPairs)) {
         val candIds = pM.select(col("id_a").as(idCol))
           .union(pM.select(col("id_b").as(idCol))).distinct()
         sh.join(broadcast(candIds), Seq(idCol), "left_semi")

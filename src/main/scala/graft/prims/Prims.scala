@@ -1,8 +1,10 @@
 package graft.prims
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.{DataFrame, Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.RowShim
+import org.apache.spark.storage.StorageLevel
 import graft.core.Gr._
 
 /** The primitive layer every algorithm is written against — the Spark
@@ -48,43 +50,66 @@ object AggregateMessages {
 
 object Iterate {
 
-  /** Materialize a loop-state DataFrame, truncating BOTH lineage and carried
-    * plan statistics.
+  /** Materialize a loop-state DataFrame: compute it once, store it, and
+    * hand back a frame that reads the stored rows — truncating BOTH its
+    * lineage and its carried plan statistics.
     *
-    * `localCheckpoint` keeps the *estimated* Statistics of the plan it cut
-    * (LogicalRDD originStats). Joins multiply children's sizeInBytes, so in a
-    * loop whose step references the state more than once (Louvain reads
-    * `labels` five times per round) the carried estimate is a product of
-    * copies of the previous estimate — its digit count grows geometrically
-    * and within ~10 rounds every stats visit does minutes of BigInteger
-    * multiplication on the driver. Re-basing the checkpointed RDD through
-    * `createDataFrame` resets leaf statistics to the constant
-    * defaultSizeInBytes, keeping planning O(plan size) per round; AQE still
-    * converts joins to broadcast from true runtime shuffle sizes. */
+    * Storage format: each partition of `df`'s executed plan is packed into
+    * byte chunks of at most [[Packed.ChunkBytes]], each a run of
+    * `[8-byte size][UnsafeRow bytes]` records — the shuffle's own row
+    * encoding, with the size widened to 8 bytes so every row stays 8-byte
+    * aligned. The chunk RDD is persisted at MEMORY_AND_DISK and
+    * `localCheckpoint`ed; reading it points one reused UnsafeRow at each
+    * record in turn, so a read deserializes nothing. Why not
+    * `Dataset.localCheckpoint` at MEMORY_AND_DISK_SER (the r11-r12 store):
+    * under the session's JavaSerializer every stored row went through
+    * `UnsafeRow.writeExternal` and back through `ObjectInputStream` on each
+    * read, and the rebase then converted every row to an external `Row` and
+    * back. Packed chunks keep what SER was chosen for — the serialized
+    * form's heap density, and a partition unrolled as a few large arrays
+    * rather than one object per row (the r11 scale-22 leiden OOM was a
+    * per-row object vector resize) — without either per-row cost.
+    *
+    * The packing job runs as one SQL execution of `df`'s plan (RowShim), so
+    * query listeners, SQL metrics and `observe` see it as a Dataset action.
+    *
+    * Statistics: `localCheckpoint` keeps the *estimated* Statistics of the
+    * plan it cut, and joins multiply children's sizeInBytes, so in a loop
+    * whose step references the state more than once (Louvain reads `labels`
+    * five times per round) the carried estimate's digit count grows
+    * geometrically — within ~10 rounds every stats visit does minutes of
+    * BigInteger multiplication on the driver. The returned frame is a plain
+    * `LogicalRDD` leaf with the constant defaultSizeInBytes, keeping
+    * planning O(plan size) per round; AQE still converts joins to broadcast
+    * from true runtime shuffle sizes. [[Release.free]] drops the chunks. */
   def materialize(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint(eager = true, Release.CkLevel)
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
+    val schema = df.schema
+    val chunks = RowShim.withExecution(df, "materialize") { rows =>
+      val packed = rows.mapPartitions(Packed.pack(schema))
+      packed.persist(StorageLevel.MEMORY_AND_DISK).localCheckpoint()
+      packed.count()
+      packed
+    }
+    val nFields = schema.length
+    RowShim.fromInternalRows(df.sparkSession,
+      chunks.mapPartitions(Packed.unpack(nFields)), schema)
   }
 
   /** Materialize a loop-state frame and read its convergence scalar.
     *
-    * Default path (r12): the metric rides the checkpoint action itself via
-    * `observe` — the CollectMetrics accumulator is read synchronously off
-    * the executed plan, so the per-round count-scan job disappears.
+    * The metric rides the checkpoint job itself via `observe`: the
+    * CollectMetrics accumulator is read synchronously off the executed plan
+    * (no listener bus, no separate count-scan job per round).
     * History: the r7 A/B measured observe SLOWER on the ECG ensemble
     * (46.3s vs 43.0s) and the scan stayed default through r11; VERDICT r11
     * item #4 (community job floor) forced a re-A/B on the r12 round
     * shapes, which flipped the verdict — same host, interleaved runs:
     * q_ecg 43.3/49.9s scan vs 43.3/46.1s observe (parity, 139→118 jobs),
     * q_louvain 41.5s/84 → 40.5s/74, q_wcc_star 20.0s/50 → 18.5s/37,
-    * q_scc 16.4s/60 → 16.3s/52. Fewer jobs at equal-or-better wall is
-    * exactly the scheduler-floor lever the sf0.1 sweep is bound by, and at
-    * data scale the accumulator add rides rows already being serialized
-    * for the checkpoint while the scan it replaces costs a full task wave
-    * over the cached frame. GRAFT_NO_OBSERVE=1 restores the scan path
+    * q_scc 16.4s/60 → 16.3s/52. GRAFT_NO_OBSERVE=1 restores the scan path
     * (the listener-bus `Observation` variant stays rejected — it blocked
     * 100ms+ per round on async event delivery). If the metric does not
-    * surface (defensive — never seen), the scan fallback still runs. */
+    * surface (defensive — PrimsSpec asserts it does), `scan` still runs. */
   private val noObserve = sys.env.contains("GRAFT_NO_OBSERVE")
   def materializeCount(df: DataFrame, metric: Column,
                        scan: DataFrame => Long): (DataFrame, Long) = {
@@ -157,6 +182,83 @@ object Iterate {
   }
 }
 
+/** The packed-chunk row store behind [[Iterate.materialize]]: a partition
+  * of rows becomes a few byte arrays of `[8-byte size][UnsafeRow bytes]`
+  * records, and is read back through one reused UnsafeRow. */
+private[prims] object Packed {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+  import org.apache.spark.sql.types.StructType
+  import org.apache.spark.unsafe.Platform
+
+  /** Bound of one stored chunk; a single row larger than this is stored in
+    * a chunk of its own. */
+  val ChunkBytes: Int = 4 << 20
+  // chunks start small and double up to ChunkBytes, so a partition of a
+  // few rows does not allocate (and hold) a full chunk
+  private val FirstChunkBytes = 64 << 10
+  private val Base = Platform.BYTE_ARRAY_OFFSET
+
+  def pack(schema: StructType): Iterator[InternalRow] => Iterator[Array[Byte]] = { rows =>
+    // SparkPlan.execute does not promise UnsafeRow output: rows of any
+    // other InternalRow class are converted before they are packed
+    lazy val toUnsafe = UnsafeProjection.create(schema)
+    def unsafe(r: InternalRow): UnsafeRow = r match {
+      case u: UnsafeRow => u
+      case other => toUnsafe(other)
+    }
+    new Iterator[Array[Byte]] {
+      // a row already read that did not fit the last chunk; the source does
+      // not reuse its buffer until its next `next()`, so holding it is safe
+      private var held: UnsafeRow = null
+      def hasNext: Boolean = held != null || rows.hasNext
+      def next(): Array[Byte] = {
+        if (!hasNext) throw new NoSuchElementException
+        var buf = new Array[Byte](FirstChunkBytes)
+        var len = 0
+        while (held != null || rows.hasNext) {
+          val r = if (held != null) held else unsafe(rows.next())
+          val need = 8 + r.getSizeInBytes
+          if (len > 0 && len + need > ChunkBytes) {
+            held = r
+            return java.util.Arrays.copyOf(buf, len)
+          }
+          held = null
+          if (len + need > buf.length)
+            buf = java.util.Arrays.copyOf(buf,
+              math.max(len + need, math.min(ChunkBytes, 2 * buf.length)))
+          Platform.putLong(buf, Base + len, r.getSizeInBytes.toLong)
+          r.writeToMemory(buf, Base + len + 8)
+          len += need
+        }
+        if (len == buf.length) buf else java.util.Arrays.copyOf(buf, len)
+      }
+    }
+  }
+
+  def unpack(nFields: Int): Iterator[Array[Byte]] => Iterator[InternalRow] = { chunks =>
+    val row = new UnsafeRow(nFields)
+    new Iterator[InternalRow] {
+      private var chunk: Array[Byte] = null
+      private var off = 0
+      def hasNext: Boolean = {
+        while ((chunk == null || off >= chunk.length) && chunks.hasNext) {
+          chunk = chunks.next()
+          off = 0
+        }
+        chunk != null && off < chunk.length
+      }
+      def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException
+        val size = Platform.getLong(chunk, Base + off).toInt
+        row.pointTo(chunk, Base + off + 8, size)
+        off += 8 + size
+        row
+      }
+    }
+  }
+}
+
 /** Syntax for [[Iterate.materialize]]: `df.mat` — the required checkpoint
   * form inside every iterative loop (plain localCheckpoint carries
   * exploding stat estimates; see Iterate.materialize). */
@@ -168,7 +270,12 @@ object Mat {
 
 /** Eager release of dead [[Iterate.materialize]] blocks.
   *
-  * `localCheckpoint` blocks are freed only when the driver GC collects the
+  * A materialized frame's data is one persisted, `localCheckpoint`ed RDD of
+  * packed row chunks (Iterate.materialize: `[8-byte size][UnsafeRow bytes]`
+  * records in byte arrays of at most 4 MB, stored deserialized at
+  * MEMORY_AND_DISK — the arrays already are the compact form, so there is
+  * no per-row object to serialize). Such blocks are freed only when the
+  * driver GC collects the
   * RDD handle AND the ContextCleaner drains — on a long composed operator
   * that never idles the driver, effectively never. So a composed pipeline
   * (Leiden = Louvain levels + refinement WCC; ECG = ensemble + final pass)
@@ -179,8 +286,8 @@ object Mat {
   * phase's input is materialized.
   *
   * [[free]] walks the frame's RDD lineage and unpersists the FIRST
-  * persisted ancestor on each branch (the localCheckpoint block holder —
-  * lineage below it was already truncated). Call it ONLY on frames whose
+  * persisted ancestor on each branch (the chunk RDD — lineage below it was
+  * already truncated). Call it ONLY on frames whose
   * data can never be read again: a loop state after the next state is
   * materialized, a phase input after the phase output is materialized.
   * Reading a freed frame throws (localCheckpointed RDDs cannot recompute),
@@ -189,25 +296,6 @@ object Mat {
 object Release {
   import org.apache.spark.rdd.RDD
   import org.apache.spark.storage.StorageLevel
-
-  /** Storage level for every [[Iterate.materialize]] checkpoint:
-    * MEMORY_AND_DISK_SER, not the localCheckpoint default MEMORY_AND_DISK.
-    * Deserialized storage holds one on-heap UnsafeRow OBJECT per row
-    * (header + reference + padded byte array) and unrolls each partition
-    * through an Object[] vector whose doubling resize needs contiguous
-    * heap at the worst moment — the r11 scale-22 leiden probe OOM'd in
-    * exactly that resize (MemoryStore.putIteratorAsValues →
-    * SizeTrackingVector) while storing a 134M-row frame with 32g. The
-    * serialized form is ~2-3× denser, unrolls through chunked byte
-    * buffers (no big-array resize), and spills incrementally — what a
-    * data-scale engine stores between pipeline stages anyway. Loop states
-    * are read 1-3× per round, so the per-read deserialization is noise
-    * against the round's shuffle (r11 full bench on this binary confirms
-    * the totals hold). GRAFT_CK_MEMORY=1 restores the deserialized level
-    * for A/B. */
-  val CkLevel: StorageLevel =
-    if (sys.env.contains("GRAFT_CK_MEMORY")) StorageLevel.MEMORY_AND_DISK
-    else StorageLevel.MEMORY_AND_DISK_SER
 
   // Spark WARNs on every unpersist of a localCheckpointed RDD ("lineage has
   // been truncated and cannot be recomputed") — here that is the intended
@@ -242,8 +330,36 @@ object Release {
   * the decision costs no extra job.
   */
 object Hint {
-  def state(df: DataFrame, nRows: Long, maxRows: Long = 5000000L): DataFrame =
+  def state(df: DataFrame, nRows: Long, maxRows: Long = Regime.BroadcastRows): DataFrame =
     if (nRows >= 0 && nRows <= maxRows) broadcast(df) else df
+}
+
+/** The one place that decides a kernel's physical regime from the state
+  * size it tracks: under the broadcast gate, state frames are broadcast
+  * into edge joins ([[Hint.state]]) and the kernel runs with AQE off at a
+  * reduce width sized to its state ([[Aqe.off]]); past the gate (or for an
+  * unknown size, < 0) joins are plain and the session's AQE plans them.
+  *
+  * [[scope]] wraps a kernel body — its setup materializations as well as
+  * its rounds, so the setup pays no AQE query-stage jobs either. Every
+  * join inside a scope must be [[Hint.state]]-hinted or sized by the
+  * scope's rows (the [[Aqe]] contract): with AQE off nothing rescues an
+  * unhinted join of a large materialized frame. */
+object Regime {
+  /** Rows of per-vertex (or per-key) state that are still broadcast. */
+  val BroadcastRows = 5000000L
+
+  def fits(rows: Long): Boolean = rows >= 0 && rows <= BroadcastRows
+
+  /** Run `body` in the regime `rows` selects, sizing the reduce width to
+    * `rows` as well. */
+  def scope[T](spark: SparkSession, rows: Long)(body: => T): T =
+    scope(spark, rows, rows)(body)
+
+  /** [[scope]] gated on `rows` with the reduce width sized to `widthRows`
+    * — for loops whose reduce side outgrows the gated state. */
+  def scope[T](spark: SparkSession, rows: Long, widthRows: Long)(body: => T): T =
+    if (fits(rows)) Aqe.off(spark, widthRows)(body) else body
 }
 
 /** Scoped AQE disable for iterative loops whose joins are ALL explicitly
@@ -256,7 +372,8 @@ object Hint {
   * the decisions such loops already make explicitly from tracked state
   * sizes. Callers must NOT wrap plans that rely on AQE's stats-blind
   * rescue (unhinted joins of materialized frames past the broadcast gate):
-  * gate on the same size bound the hints use. The flag is session-global,
+  * kernels enter it through [[Regime.scope]], which gates on the same size
+  * bound the hints use. The flag is session-global,
   * hence the save/restore; reentrant nesting is safe (restores the outer
   * value). */
 object Aqe {
@@ -266,7 +383,7 @@ object Aqe {
     * change if its host profile rewards runtime re-planning more than it
     * charges per query-stage job. */
   private val keep = sys.env.contains("GRAFT_KEEP_AQE")
-  def off[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T =
+  def off[T](spark: SparkSession)(body: => T): T =
     off(spark, -1L)(body)
 
   /** [[off]] that ALSO right-sizes reduce-side parallelism to the loop's
@@ -283,7 +400,7 @@ object Aqe {
     * is also the rule that holds at 100 TB. Reduce keys in these loops
     * are vertex-/pair-keyed, so `stateRows` bounds reduce-side rows even
     * when the map side scans a much larger edge stream. */
-  def off[T](spark: org.apache.spark.sql.SparkSession, stateRows: Long)(body: => T): T =
+  def off[T](spark: SparkSession, stateRows: Long)(body: => T): T =
     if (keep) body else {
       val before = spark.conf.get("spark.sql.adaptive.enabled", "true")
       val beforeParts = spark.conf.get("spark.sql.shuffle.partitions", "200")

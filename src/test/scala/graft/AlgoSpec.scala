@@ -69,6 +69,31 @@ class AlgoSpec extends SparkSpec {
     assert(comp(1L) == comp(3L) && comp(10L) == comp(11L) && comp(1L) != comp(10L))
   }
 
+  test("WCC on a builder graph: the symmetric flag skips the symmetrize, labels unchanged") {
+    import spark.implicits._
+    // one-direction input pairs, two components plus a self-loop
+    val raw = Seq((1L, 2L), (3L, 2L), (3L, 4L), (10L, 11L), (12L, 11L), (20L, 20L))
+      .toDF("a", "b")
+    val built = GraphBuilder.fromEdges(raw, "a", "b", directed = false)
+    assert(built.props.symmetric)
+    assert(!GraphBuilder.fromEdges(raw, "a", "b").props.symmetric)
+    val ren = GraphBuilder.fromEdgesRenumbered(raw.select($"a".cast("string"), $"b".cast("string")),
+      Seq("a"), Seq("b"), directed = false)
+    assert(ren.props.symmetric)
+    assert(graphOf(Seq((1L, 2L))).symmetrized.props.symmetric)
+    for (g <- Seq(built, ren)) {
+      def run(sym: Boolean) = {
+        val (l, rounds) = Components.wccWithRounds(g.copy(props = g.props.copy(symmetric = sym)))
+        (l.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, rounds)
+      }
+      val (flagged, r1) = run(sym = true)
+      val (plain, r2) = run(sym = false)
+      assert(flagged == plain)
+      assert(r1 == r2)
+      assert(flagged.values.toSet.size == 3)
+    }
+  }
+
   test("triangle count per vertex on the bridged triangles") {
     val g = graphOf(bridged)
     val t = Triangles.countPerVertex(g).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

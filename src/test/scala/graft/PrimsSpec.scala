@@ -1,0 +1,109 @@
+package graft
+
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import graft.prims.{Iterate, Regime}
+
+/** The packed-chunk store behind `Iterate.materialize` and the regime prim. */
+class PrimsSpec extends SparkSpec {
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Row] =
+    df.collect().toSeq
+
+  test("materialize round-trips variable-length rows, nulls, empty partitions and oversized chunks") {
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("s", StringType),
+      StructField("xs", ArrayType(IntegerType)),
+      StructField("st", StructType(Seq(StructField("a", DoubleType), StructField("b", StringType)))),
+      StructField("m", MapType(StringType, LongType))))
+    // a ~6 MB string pushes one partition past a 4 MB chunk on its own, and
+    // ~1 kB rows fill several chunks of that partition
+    val big = "x" * (6 << 20)
+    val rows = (0 until 5000).map { i =>
+      Row(i.toLong,
+        if (i % 7 == 0) null else if (i == 4999) big else ("v" * (i % 1200)) + i,
+        if (i % 5 == 0) null else (0 until i % 9).map(j => if (j == 3) null else j).toSeq,
+        if (i % 11 == 0) null else Row(if (i % 3 == 0) null else i * 0.5, s"b$i"),
+        if (i % 13 == 0) null else Map(s"k$i" -> i.toLong))
+    }
+    // 8 partitions of which the last three are empty
+    val src = spark.createDataFrame(spark.sparkContext.parallelize(rows, 5), schema)
+      .repartition(8, col("id") % 5)
+    val want = rowsOf(src.orderBy("id"))
+    assert(want.exists(r => r.getString(1) == big))
+    val m = Iterate.materialize(src)
+    assert(m.schema == src.schema)
+    assert(m.rdd.getNumPartitions == 8)
+    assert(m.rdd.mapPartitions(it => Iterator(it.size)).collect().count(_ == 0) >= 3)
+    assert(rowsOf(m.orderBy("id")) == want)
+    // a second read of the stored chunks sees the same rows
+    assert(rowsOf(m.orderBy("id")) == want)
+    // a frame derived from the materialized one materializes again
+    val m2 = Iterate.materialize(m.filter(col("id") % 2 === 0))
+    assert(rowsOf(m2.orderBy("id")) == want.filter(_.getLong(0) % 2 == 0))
+    graft.prims.Release.free(m, m2)
+  }
+
+  test("materialize of an empty frame is an empty frame") {
+    val m = Iterate.materialize(spark.range(0).toDF("id"))
+    assert(m.count() == 0)
+    assert(m.columns.toSeq == Seq("id"))
+  }
+
+  test("materializeCount reads the observed metric off the checkpoint job, no scan") {
+    var scans = 0
+    val df = spark.range(1000).toDF("id")
+    val (ck, n) = Iterate.materializeCount(df,
+      sum(when(col("id") % 7 === 0, 1L).otherwise(0L)),
+      d => { scans += 1; d.filter(col("id") % 7 === 0).count() })
+    assert(n == 143)
+    assert(scans == 0, "the observed metric did not surface; the scan fallback ran")
+    assert(ck.count() == 1000)
+    // round after round on the previous checkpoint, as a loop runs it
+    var cur = ck
+    for (i <- 1 to 5) {
+      val (nx, c) = Iterate.materializeCount(cur.withColumn("id", col("id") + 1),
+        sum(when(col("id") % 7 === 0, 1L).otherwise(0L)),
+        d => { scans += 1; d.filter(col("id") % 7 === 0).count() })
+      assert(c == (i until 1000 + i).count(_ % 7 == 0), s"round $i")
+      cur = nx
+    }
+    assert(scans == 0)
+  }
+
+  test("a QueryExecutionListener sees the materialized plan") {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             d: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      Iterate.materialize(spark.range(50).toDF("id")
+        .withColumn("tag_materialize_probe", col("id") * 3))
+      // listener events post asynchronously
+      val deadline = System.nanoTime() + 10e9.toLong
+      while (!plans.toArray.exists(_.toString.contains("tag_materialize_probe")) &&
+             System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(l)
+    assert(plans.toArray.exists(_.toString.contains("tag_materialize_probe")))
+  }
+
+  test("Regime scopes AQE off under the gate and restores it, leaves it alone past the gate") {
+    def aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val before = aqe
+    val keep = sys.env.contains("GRAFT_KEEP_AQE")
+    Regime.scope(spark, 10L) {
+      assert(aqe == (if (keep) before else "false"))
+      assert(keep || spark.conf.get("spark.sql.shuffle.partitions") == "1")
+    }
+    assert(aqe == before)
+    Regime.scope(spark, Regime.BroadcastRows + 1)(assert(aqe == before))
+    Regime.scope(spark, -1L)(assert(aqe == before))
+    assert(Regime.fits(Regime.BroadcastRows) && !Regime.fits(Regime.BroadcastRows + 1))
+  }
+}
