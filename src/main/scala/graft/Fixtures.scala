@@ -3,6 +3,8 @@ package graft
 import graft.prims.Mat._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import java.util.concurrent.TimeUnit
+import scala.concurrent.duration.FiniteDuration
 import graft.core.{PropertyGraph, GraphBuilder, GraphProperties, Structure, Gr}
 
 /** Graph projections over the driver-provided TPC-H-ish parquet tables
@@ -345,30 +347,50 @@ object Fixtures {
     // below owns its cache keys; within a chain order respects dependency
     // (partRepeat after part, the NV counts after their degree tables).
     // Values are untouched: same builds, same keys, deterministic inputs.
-    val chains: Seq[() => Unit] = Seq(
-      () => { supplierGraphUnd(spark, dir); () },
-      () => { custSuppEdges(spark, dir); () },
-      () => { partEdges(spark, dir); partRepeatEdges(spark, dir); () },
-      () => { cyclicSupplierGraph(spark, dir); () },
-      () => { supplierSimInter(spark, dir); supplierSimDeg(spark, dir)
-              supplierSimNV(spark, dir); () },
-      () => { supplierSimInterW(spark, dir); supplierSimDegW(spark, dir)
-              supplierSimNVW(spark, dir); () },
-      () => { supplierEdgeSupport(spark, dir); () },
-      () => { rmatGraph(spark); () })
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val chains: Seq[(String, () => Unit)] = Seq(
+      "supplierGraphUnd" -> (() => { supplierGraphUnd(spark, dir); () }),
+      "custSuppEdges" -> (() => { custSuppEdges(spark, dir); () }),
+      "partEdges+partRepeatEdges" -> (() => { partEdges(spark, dir); partRepeatEdges(spark, dir); () }),
+      "cyclicSupplierGraph" -> (() => { cyclicSupplierGraph(spark, dir); () }),
+      "supplierSim" -> (() => { supplierSimInter(spark, dir); supplierSimDeg(spark, dir)
+                                supplierSimNV(spark, dir); () }),
+      "supplierSimW" -> (() => { supplierSimInterW(spark, dir); supplierSimDegW(spark, dir)
+                                 supplierSimNVW(spark, dir); () }),
+      "supplierEdgeSupport" -> (() => { supplierEdgeSupport(spark, dir); () }),
+      "rmatGraph" -> (() => { rmatGraph(spark); () }))
+    // daemon workers: a wedged build cannot keep the JVM alive past its caller
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4, (r: Runnable) => {
+      val t = new Thread(r, "graft-prewarm")
+      t.setDaemon(true)
+      t
+    })
     try {
       val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val fs = chains.map(c => scala.concurrent.Future(c())(ec))
-      // Drain EVERY future before surfacing a failure: rethrowing on the
-      // first failed Await would leave the other chains' Spark jobs running
-      // concurrently with the caller's error handling / session stop.
-      val errs = fs.flatMap(f =>
-        scala.util.Try(
-          scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-        ).failed.toOption)
-      errs.headOption.foreach(throw _)
+      awaitChains(chains.map { case (name, c) => name -> scala.concurrent.Future(c())(ec) },
+        PrewarmTimeout)
     } finally pool.shutdown()
+  }
+
+  /** Upper bound on the whole prewarm, far above any build it runs (sf0.1:
+    * about 22 s), so only a wedged chain reaches it. */
+  private val PrewarmTimeout: FiniteDuration = FiniteDuration(1, TimeUnit.HOURS)
+
+  /** Waits for every named future against one shared deadline, then
+    * rethrows the first failure. Draining EVERY future first matters:
+    * rethrowing on the first failed await would leave the other chains'
+    * Spark jobs running concurrently with the caller's error handling /
+    * session stop. A chain still running at the deadline fails by name. */
+  private[graft] def awaitChains(fs: Seq[(String, scala.concurrent.Future[Unit])],
+                                 timeout: FiniteDuration): Unit = {
+    val deadline = timeout.fromNow
+    val errs = fs.flatMap { case (name, f) =>
+      scala.util.Try(scala.concurrent.Await.result(f, deadline.timeLeft)).failed.toOption.map {
+        case _: java.util.concurrent.TimeoutException => new IllegalStateException(
+          s"fixture prewarm chain '$name' did not finish within $timeout")
+        case e => e
+      }
+    }
+    errs.headOption.foreach(throw _)
   }
 
   def documents(spark: SparkSession, dir: String): DataFrame = Tables(spark, dir, "documents")

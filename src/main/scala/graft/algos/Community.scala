@@ -324,9 +324,7 @@ object Community {
     // clustering when only one run exists (subset rule) and is fold-proof;
     // the multi-run ensemble keeps (run, key) — its run is a real
     // attribute and propagates fine.
-    // GRAFT_FOLD_BEFORE=1 reproduces the pre-fix shape (plans/r12 before-capture).
-    val singleRun = stats.length == 1 && !sys.env.contains("GRAFT_FOLD_BEFORE")
-    val cacheKeys = if (singleRun) Seq(streamKey) else Seq(col("run"), streamKey)
+    val cacheKeys = if (stats.length == 1) Seq(streamKey) else Seq(col("run"), streamKey)
     val eNoSelfK = {
       val kSrc = ki.select(col("run"), col(ID).as(SRC), col("k").as("k_src"))
       val joined = e.filter(col(SRC) =!= col(DST))

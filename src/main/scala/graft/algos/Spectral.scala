@@ -82,15 +82,10 @@ object Spectral {
     // snapped to 1e-8 every round (and centroids likewise), which is the
     // existing engine-reproducibility contract — the oracle already replays
     // it across partition layouts (the bench runs c32, Verify c8).
-    // GRAFT_SPECTRAL_BEFORE=1 reproduces the pre-r12 loop shape (session-width
-    // AQE, unhinted state join) for the plans/r12 before-capture.
-    val specBefore = sys.env.contains("GRAFT_SPECTRAL_BEFORE")
-    def loops[T](body: => T): T =
-      if (specBefore) body else Regime.scope(und.sparkSession, n)(body)
-    loops {
+    Regime.scope(und.sparkSession, n) {
     for (i <- 1 to iters) {
       val vRen = v.withColumnRenamed(ID, DST)
-      val yPlan = trans.join(if (specBefore) vRen else graft.prims.Hint.state(vRen, n), DST)
+      val yPlan = trans.join(graft.prims.Hint.state(vRen, n), DST)
         .groupBy(col(SRC).as(ID)).agg(sum(col("w") * col("v")).as("v"))
       if (i == 2 && sys.env.contains("GRAFT_SPECTRAL_DEBUG"))
         System.err.println(yPlan.queryExecution.executedPlan.toString)
@@ -120,7 +115,7 @@ object Spectral {
       least(cs.map { case (cid, c) =>
         struct(((col("v") - lit(c)) * (col("v") - lit(c))).as("d"), lit(cid).as("c"))
       }.toIndexedSeq: _*).getField("c")
-    loops {
+    Regime.scope(und.sparkSession, n) {
     for (_ <- 1 to KMeansIters) {
       cents = v.withColumn("cluster", assignExpr(cents))
         .groupBy("cluster").agg(round(avg("v"), 8).as("c"))

@@ -161,9 +161,6 @@ object Structure {
       verts.select(col("gid"), col(ID), col(ID).as("ml"), lit(0).as("par")))
     val nV = st.count()
     var ch = 1L
-    // GRAFT_BIPARTITE_BEFORE=1 reproduces the r11 shape (unhinted agg side)
-    // for the plans/r12 before-capture.
-    val bipBefore = sys.env.contains("GRAFT_BIPARTITE_BEFORE")
     var round = 0
     graft.prims.Regime.scope(und.sparkSession, nV) {
     while (ch > 0) {
@@ -179,8 +176,7 @@ object Structure {
       // 6.6→9.1s in the r11 close; VERDICT r11 item #2 demanded the
       // isolated re-measure that found this).
       val stepFrame =
-        st.join(if (bipBefore) nbrMin else graft.prims.Hint.state(nbrMin, nV),
-            Seq("gid", ID), "left")
+        st.join(graft.prims.Hint.state(nbrMin, nV), Seq("gid", ID), "left")
           .select(col("gid"), col(ID), struct(col("ml"), col("par")).as("old"),
             least(struct(col("ml"), col("par")),
               coalesce(col("nb"), struct(col("ml"), col("par")))).as("nw"))

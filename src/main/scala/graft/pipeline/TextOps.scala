@@ -2,10 +2,14 @@ package graft.pipeline
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnShim.{column, expression}
+import graft.functions.{Hash60, Shingles}
 
 /** Shared text primitives for the training-data pipeline operators
-  * (dedup / similarity / analysis). Everything here is built from
-  * codegen'd `org.apache.spark.sql.functions` — no UDFs — so filters and
+  * (dedup / similarity / analysis). No UDFs: the hot kernels (`hash60`,
+  * `shingles`, `dot`) are native Catalyst expressions in `graft.functions`
+  * with generated code, each bit-exact to the DuckDB formula documented on
+  * it; the rest are built-in `org.apache.spark.sql.functions`. Filters and
   * projections stay inside WholeStageCodegen and push down to the scan.
   *
   * Portability contract: every primitive has an exact DuckDB equivalent
@@ -15,13 +19,14 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  /** Deterministic 60-bit non-negative hash of a string column.
-    * Spark:  conv(substring(md5(s), 1, 15), 16, 10) :: long
+  /** Deterministic 60-bit non-negative hash of a string column: the first
+    * 15 hex digits of md5(s), read as an integer.
+    * Spark:  native graft.functions.Hash60, bit-identical to
+    *         conv(substring(md5(s), 1, 15), 16, 10) :: long
     * DuckDB: CAST('0x' || substr(md5(s), 1, 15) AS BIGINT)
     * 15 hex digits = 60 bits, so the value always fits in a signed 64-bit
     * integer and never goes negative. */
-  def hash60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+  def hash60(c: Column): Column = column(Hash60(expression(c)))
 
   /** Seeded variant: independent hash families for MinHash — the seed is
     * appended before hashing (same trick the reference's MinHash literature
@@ -33,14 +38,10 @@ object TextOps {
   def tokens(text: Column): Column = split(text, " ")
 
   /** Word n-gram shingles as an array of strings (empty when the document
-    * has fewer than n tokens).
+    * has fewer than n tokens). Spark: native graft.functions.Shingles.
     * DuckDB: list_transform(generate_series(1, len(ws)-(n-1)),
     *                        i -> array_to_string(ws[i:i+n-1], ' ')). */
-  def shingles(ws: Column, n: Int): Column =
-    when(size(ws) >= n,
-      transform(sequence(lit(0), size(ws) - n),
-        i => array_join(slice(ws, i + 1, lit(n)), " ")))
-      .otherwise(array())
+  def shingles(ws: Column, n: Int): Column = column(Shingles(expression(ws), n))
 
   /** Cosine similarity between two double-array columns.
     * DuckDB: list_dot_product(a, b) / (sqrt(list_dot_product(a,a)) * ...).

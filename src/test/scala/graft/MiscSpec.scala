@@ -266,4 +266,21 @@ class MiscSpec extends SparkSpec {
     assert(st(0L) == (6L, 4L, 2L, 0.166667))  // machine 1 is flagged: 1/6
     assert(st(2L) == (6L, 3L, 3L, 0.0))
   }
+
+  test("prewarm's await drains every chain, names a hung one, and keeps the first failure") {
+    import scala.concurrent.{Future, Promise}
+    import scala.concurrent.duration._
+    val boom = new RuntimeException("boom")
+    val late = Promise[Unit]()
+    val fs = Seq("failed" -> Future.failed[Unit](boom), "hung" -> Promise[Unit]().future,
+      "late" -> late.future)
+    val t0 = System.nanoTime()
+    val thrown = intercept[RuntimeException](Fixtures.awaitChains(fs, 300.millis))
+    assert(thrown eq boom)
+    assert((System.nanoTime() - t0) >= 300.millis.toNanos, "returned before the deadline")
+    val hung = intercept[IllegalStateException](Fixtures.awaitChains(fs.tail, 50.millis))
+    assert(hung.getMessage.contains("'hung'"), hung.getMessage)
+    late.success(())
+    Fixtures.awaitChains(Seq("late" -> late.future), 50.millis)
+  }
 }

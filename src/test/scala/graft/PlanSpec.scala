@@ -46,6 +46,22 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("n_chars"), "tokenCounts scan reads unused columns")
   }
 
+  test("shingle frame runs the native text kernels — no interpreted lambda, no conv chain") {
+    import spark.implicits._
+    val docs = spark.sparkContext.parallelize(Seq(1L -> "the quick brown fox jumps",
+      2L -> "the quick brown dog", 3L -> "a b")).toDF("doc_id", "text")
+    val sh = graft.pipeline.Dedup.shingleFrame(docs)
+    val mh = graft.pipeline.Dedup.minhash(docs)
+    sh.collect(); mh.collect()
+    Seq(planOf(sh), planOf(mh)).foreach { plan =>
+      assert(plan.contains("shingles("), plan.take(1200))
+      assert(!plan.contains("transform(") && !plan.contains("lambda"),
+        "shingling fell back to an interpreted lambda:\n" + plan.take(1200))
+      assert(!plan.contains("conv("), "hash60 went through the md5→conv chain:\n" + plan.take(1200))
+    }
+    assert(planOf(mh).contains("hash60("), planOf(mh).take(1200))
+  }
+
   test("stratified sampling is a pure map-side filter — no Exchange in the plan") {
     // the corpus-mixing filter must never shuffle: at 100 TB it is a
     // scan+filter whose selectivity Catalyst can fold into the file scan
