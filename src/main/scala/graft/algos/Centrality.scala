@@ -452,12 +452,8 @@ object Centrality {
     // rows and Catalyst's own planning of this three-way join measures 2.7×
     // faster than pinning both state sides to broadcast (the hint forces
     // the full fan-out through the big-side scan before the dv=du+1 DAG
-    // filter can cut it). GRAFT_EB_HINT=1 re-enables the hinted shape so
-    // the A/B stays re-runnable on evolved state shapes (VERDICT r11 #8 —
-    // re-measured this round, see OPTIMIZATION_r12.md: unhinted still wins).
-    val ebSt: DataFrame => DataFrame =
-      if (sys.env.contains("GRAFT_EB_HINT")) st else identity
-    val contribE = e.join(ebSt(stateU), SRC).join(ebSt(stateV), Seq("root", DST))
+    // filter can cut it; re-measured in r12, OPTIMIZATION_r12.md).
+    val contribE = e.join(stateU, SRC).join(stateV, Seq("root", DST))
       .filter(col("dv") === col("du") + 1)
       .select(least(col(SRC), col(DST)).as(SRC), greatest(col(SRC), col(DST)).as(DST),
         (col("su") / col("sv") * (lit(1.0) + col("deltav"))).as("c"))

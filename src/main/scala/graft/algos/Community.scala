@@ -260,27 +260,6 @@ object Community {
     // round gone. Values are identical; all gated fixtures carry
     // integer-valued weights, so every reordered sum stays bit-exact.
     var state = ki.select(col("run"), col(ID), col(ID).as("community"), col("k")).mat
-    // A/B (VERDICT r6 item #6): carry the per-community k-totals across
-    // rounds, updated from the movers' deltas, instead of re-aggregating
-    // nState rows every round. Exact on the gated fixtures (integer-valued
-    // k sums associate freely); kept behind a flag until the scale probe
-    // picks a winner — see BASELINE.md round-7 for the measurement.
-    // RESTRICTION (ADVICE r7): the carried-totals merge is exact only for
-    // integer-valued weights — fractional k sums drift under the mover-delta
-    // merge, and the tot=!=0.0 compaction filter could then retain phantom
-    // or drop legitimately-tiny community rows. The flag is an off-by-
-    // default A/B (measured a wash at scale-20, BASELINE r7); anyone turning
-    // it on for fractional-weight graphs gets the re-aggregation path's
-    // semantics only approximately.
-    // ADVICE r11 #2: under the broadcast regime the flag bought only dead
-    // per-round work — totState was maintained (full join + mat per round)
-    // but never consumed, since stPlus recomputes community totals from
-    // state via a window inside the broadcast build. The A/B flag is now
-    // scoped to the shuffle-hash regime, the only place `tot` is read.
-    val carryTot = sys.env.contains("GRAFT_CARRY_TOT") && !broadcastRound
-    var totState: DataFrame =
-      if (carryTot) state.groupBy("run", "community").agg(sum("k").as("tot")).mat
-      else null
     // Edge stream prepared ONCE per level (r7 verdict item #2 — cut the
     // per-round job count): static per-source k attached (the candidate
     // rows then carry k, so scoring needs no per-vertex state join), and
@@ -319,9 +298,9 @@ object Community {
     // clustering on the `run` ATTRIBUTE, so Catalyst silently re-exchanged
     // (and re-sorted, for the SortAggregate best-move) the full candidate
     // stream every round — the exact exchange the r11 cache shape was
-    // built to remove (caught by this round's GRAFT_LOUVAIN_DEBUG plan
-    // capture). Partitioning by the stream key alone is the same
-    // clustering when only one run exists (subset rule) and is fold-proof;
+    // built to remove (PlanSpec pins the round plan against it).
+    // Partitioning by the stream key alone is the same clustering when
+    // only one run exists (subset rule) and is fold-proof;
     // the multi-run ensemble keeps (run, key) — its run is a real
     // attribute and propagates fine.
     val cacheKeys = if (stats.length == 1) Seq(streamKey) else Seq(col("run"), streamKey)
@@ -354,10 +333,9 @@ object Community {
     // want the other's community swap forever — a constant nonzero moved
     // count burning maxIter rounds). Always-on parity masking fixes that
     // but doubles the round count on well-behaved graphs, so parity is
-    // ESCALATION, not default: full-move rounds run until the moved count
-    // plateaus (non-decreasing while nonzero — the oscillation signature),
-    // then rounds switch to the masked regime where only vertices with
-    // (id+round) parity may move. Converged = one zero-move full round, or
+    // ESCALATION, not default: the opening full-move round either moves
+    // nothing (converged) or switches the loop to the masked regime where
+    // only vertices with (id+round) parity may move. Converged = one zero-move full round, or
     // maskMod consecutive zero-move masked rounds (one per residue class).
     // Parity itself can still churn (same-parity neighbors co-moving in a
     // cycle — observed on small G(n,p) graphs by RandomizedSpec): after
@@ -375,7 +353,6 @@ object Community {
     var maskMod = 2L
     var stall = 0
     var probe = false
-    var prevMoved = Long.MaxValue
     // AQE off for the loop UNDER THE BROADCAST GATE ONLY (prims.Aqe
     // scaladoc): there every join inside is explicitly broadcast-hinted,
     // so AQE's only contribution is one query-stage job per exchange —
@@ -383,9 +360,9 @@ object Community {
     // floor. Off, each round pipelines into 3 jobs (2 broadcast builds +
     // the counted materialize) — the r8 jobs/round audit measured 7 → 3 at
     // identical results. PAST the gate (big ensembles: ECG at scale ≥22
-    // has runs×V > the 5M bound) the dst attach is a salted SMJ over the
-    // power-law edge stream where AQE's runtime skew split and plan sizing
-    // earn their keep — disabling it there OOM'd the 32g scale-22 ecg4
+    // has runs×V > the 5M bound) the dst attach is a shuffle-hash join
+    // over the power-law edge stream, where AQE's runtime skew split and
+    // plan sizing earn their keep — disabling it there OOM'd the 32g scale-22 ecg4
     // probe while the same code completed louvain at 4× the per-run data.
     try {
     Regime.scope(e.sparkSession, nState, math.max(nState, nEdgeStream)) {
@@ -471,18 +448,13 @@ object Community {
                  col("b.gain") > coalesce(col("intra_gain"), col("stay_base")) + lit(1e-12),
               col("b.nc")).otherwise(col("community")).as("community"),
             col("k"))
-        if (it == 2 && sys.env.contains("GRAFT_LOUVAIN_DEBUG"))
-          System.err.println(roundFrame.queryExecution.executedPlan.toString)
         val (nextC, movedNow) = graft.prims.Iterate.materializeCount(roundFrame,
           sum(when(col("community") =!= col("old"), 1L).otherwise(0L)),
           _.filter(col("community") =!= col("old")).count())
         moved = movedNow
-        // (carryTot is never true here — see its definition: stPlus's
-        // window already carries the community totals in this regime)
         if (!parityMode) {
           if (moved == 0) zeroStreak = Int.MaxValue
           else parityMode = true
-          prevMoved = moved
         } else if (probe) {
           probe = false
           if (moved == 0) zeroStreak = Int.MaxValue
@@ -496,11 +468,8 @@ object Community {
         graft.prims.Release.free(state)
         state = nextC.select(col("run"), col(ID), col("community"), col("k"))
       } else {
-      // tot_c = Σ k_i over community members — carried frame (flag) or
-      // derived from the state frame (default)
-      val tot =
-        (if (carryTot) totState else
-          state.groupBy("run", "community").agg(sum("k").as("tot")))
+      // tot_c = Σ k_i over community members, derived from the state frame
+      val tot = state.groupBy("run", "community").agg(sum("k").as("tot"))
         .select(col("run"), col("community").as("nc"), col("tot"))
       val stDst = state.select(col("run"), col(ID).as(DST), col("community").as("nc"))
       val eWithC = eNoSelfK.join(stDst.hint("shuffle_hash"), Seq("run", DST))
@@ -588,26 +557,9 @@ object Community {
       // spark.cleaner.periodicGC.interval (ScaleProbe pins 60s), which
       // bounds scratch continuously regardless of round cadence.
       if (!Regime.fits(nState) && it % 3 == 0) System.gc()
-      if (carryTot && moved > 0) {
-        // movers' k leaves the old community and joins the new one; merge
-        // the deltas into the carried totals (movers shrink per round, so
-        // the exchange is movers+nComm rows instead of nState)
-        val movers = nextC.filter(col("community") =!= col("old"))
-        val delta = movers.select(col("run"), col("old").as("community"), (-col("k")).as("d"))
-          .unionByName(movers.select(col("run"), col("community"), col("k").as("d")))
-          .groupBy("run", "community").agg(sum("d").as("d"))
-        val newTot = totState.join(delta, Seq("run", "community"), "full")
-          .select(col("run"), col("community"),
-            (coalesce(col("tot"), lit(0.0)) + coalesce(col("d"), lit(0.0))).as("tot"))
-          .filter(col("tot") =!= 0.0)
-          .mat
-        graft.prims.Release.free(totState)
-        totState = newTot
-      }
       if (!parityMode) {
         if (moved == 0) zeroStreak = Int.MaxValue // free full round; done
         else parityMode = true // escalate after the opening mass-move round
-        prevMoved = moved
       } else if (probe) {
         probe = false
         if (moved == 0) zeroStreak = Int.MaxValue // certified optimal

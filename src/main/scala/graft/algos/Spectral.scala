@@ -85,11 +85,8 @@ object Spectral {
     Regime.scope(und.sparkSession, n) {
     for (i <- 1 to iters) {
       val vRen = v.withColumnRenamed(ID, DST)
-      val yPlan = trans.join(graft.prims.Hint.state(vRen, n), DST)
-        .groupBy(col(SRC).as(ID)).agg(sum(col("w") * col("v")).as("v"))
-      if (i == 2 && sys.env.contains("GRAFT_SPECTRAL_DEBUG"))
-        System.err.println(yPlan.queryExecution.executedPlan.toString)
-      val y = yPlan.mat
+      val y = trans.join(graft.prims.Hint.state(vRen, n), DST)
+        .groupBy(col(SRC).as(ID)).agg(sum(col("w") * col("v")).as("v")).mat
       // center + L∞ rescale from ONE scalar agg (max|y−c| = max(mx−c, c−mn));
       // the single driver sync per iteration, same budget as the eigen
       // path's Gram collect

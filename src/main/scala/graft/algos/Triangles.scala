@@ -131,56 +131,41 @@ object Triangles {
         // out of the exchange entirely; past the gate the semi-join
         // degrades to a shuffle and the wedge volume is the bill.
         val epB = graft.prims.Hint.state(ep, nE, maxRows = 32000000L)
-        val exploded =
-          if (sys.env.contains("GRAFT_SUPPORT_IDORIENT")) {
-            // pre-r11 A/B shape: wedges through the MIDDLE vertex of the
-            // id orientation (a<b<c), volume Σ indeg·outdeg — on
-            // scrambled ids an effectively random orientation, ~deg²/4
-            // at the hubs
-            val ab = e.select(col(SRC).as("a"), col(DST).as("b"))
-            val bc = e.select(col(SRC).as("b"), col(DST).as("c"))
-            ab.join(bc, "b")
-              .join(epB, pk(col("a"), col("c")) === col("pe"), "left_semi")
-              .select(explode(array(pk(col("a"), col("b")), pk(col("b"), col("c")),
-                pk(col("a"), col("c")))).as("pe"))
-          } else {
-            // Degree-ordered wedge enumeration (r11 — the ledger's named
-            // lever). Support is orientation-INVARIANT, so the oracle
-            // constraint that pins `oriented()` to id order (its (a,b,c)
-            // OUTPUT must be SQL-reproducible) does not bind here: re-orient
-            // each edge low-degree → high-degree (tie: lower id) privately,
-            // and canonicalize every emitted key back to id order. Each
-            // triangle is then found exactly once at its min-(deg,id)
-            // corner — the only corner with out-edges to both others — and
-            // the wedge volume drops from Σ indeg·outdeg to Σ C(outdeg,2)
-            // with outdeg bounded by O(√E) under this orientation
-            // (arboricity bound; Chiba–Nishizeki / compact-forward).
-            val deg = e.select(col(SRC).as(ID)).union(e.select(col(DST).as(ID)))
-              .groupBy(ID).agg(count(lit(1)).as("d"))
-            val degB = graft.prims.Hint.state(deg, nV)
-            val low = col("ds") < col("dd") ||
-              (col("ds") === col("dd") && col(SRC) < col(DST))
-            val ow = e
-              .join(degB.select(col(ID).as(SRC), col("d").as("ds")), SRC)
-              .join(degB.select(col(ID).as(DST), col("d").as("dd")), DST)
-              .select(when(low, col(SRC)).otherwise(col(DST)).as("a"),
-                      when(low, col(DST)).otherwise(col(SRC)).as("b"))
-            // out-neighbor lists of the min corner: ONE |E|-row exchange
-            // into a |V|-key agg; a list row stays KB-sized even at the
-            // hubs because outdeg ≤ O(√E) here. Wedges (unordered out-pairs,
-            // deduped by id order b<c) are then generated map-side by a
-            // nested explode — the Σ C(outdeg,2) stream never shuffles.
-            val adjl = ow.groupBy("a").agg(collect_list(col("b")).as("ns"))
-            adjl.select(col("a"), explode(col("ns")).as("b"), col("ns"))
-              .select(col("a"), col("b"), explode(col("ns")).as("c"))
-              .filter(col("b") < col("c"))
-              .join(epB, pk(col("b"), col("c")) === col("pe"), "left_semi")
-              .select(explode(array(
-                pk(least(col("a"), col("b")), greatest(col("a"), col("b"))),
-                pk(least(col("a"), col("c")), greatest(col("a"), col("c"))),
-                pk(col("b"), col("c")))).as("pe"))
-          }
-        exploded
+        // Degree-ordered wedge enumeration (r11 — the ledger's named
+        // lever). Support is orientation-INVARIANT, so the oracle
+        // constraint that pins `oriented()` to id order (its (a,b,c)
+        // OUTPUT must be SQL-reproducible) does not bind here: re-orient
+        // each edge low-degree → high-degree (tie: lower id) privately,
+        // and canonicalize every emitted key back to id order. Each
+        // triangle is then found exactly once at its min-(deg,id)
+        // corner — the only corner with out-edges to both others — and
+        // the wedge volume drops from Σ indeg·outdeg to Σ C(outdeg,2)
+        // with outdeg bounded by O(√E) under this orientation
+        // (arboricity bound; Chiba–Nishizeki / compact-forward).
+        val deg = e.select(col(SRC).as(ID)).union(e.select(col(DST).as(ID)))
+          .groupBy(ID).agg(count(lit(1)).as("d"))
+        val degB = graft.prims.Hint.state(deg, nV)
+        val low = col("ds") < col("dd") ||
+          (col("ds") === col("dd") && col(SRC) < col(DST))
+        val ow = e
+          .join(degB.select(col(ID).as(SRC), col("d").as("ds")), SRC)
+          .join(degB.select(col(ID).as(DST), col("d").as("dd")), DST)
+          .select(when(low, col(SRC)).otherwise(col(DST)).as("a"),
+                  when(low, col(DST)).otherwise(col(SRC)).as("b"))
+        // out-neighbor lists of the min corner: ONE |E|-row exchange
+        // into a |V|-key agg; a list row stays KB-sized even at the
+        // hubs because outdeg ≤ O(√E) here. Wedges (unordered out-pairs,
+        // deduped by id order b<c) are then generated map-side by a
+        // nested explode — the Σ C(outdeg,2) stream never shuffles.
+        val adjl = ow.groupBy("a").agg(collect_list(col("b")).as("ns"))
+        adjl.select(col("a"), explode(col("ns")).as("b"), col("ns"))
+          .select(col("a"), col("b"), explode(col("ns")).as("c"))
+          .filter(col("b") < col("c"))
+          .join(epB, pk(col("b"), col("c")) === col("pe"), "left_semi")
+          .select(explode(array(
+            pk(least(col("a"), col("b")), greatest(col("a"), col("b"))),
+            pk(least(col("a"), col("c")), greatest(col("a"), col("c"))),
+            pk(col("b"), col("c")))).as("pe"))
           .groupBy("pe").agg(count(lit(1)).as("support"))
           .select(shiftright(col("pe"), 32).as(SRC),
             col("pe").bitwiseAND(lit((1L << 32) - 1)).as(DST), col("support"))
@@ -248,25 +233,12 @@ object Triangles {
     * take the broadcast-seeded incremental path. */
   def kTrussWithRounds(g: PropertyGraph, k: Int, maxIter: Int = 100,
                        bulkRecomputeFrac: Double = 0.02): (DataFrame, Int) = {
-    // GRAFT_TRUSS_DEBUG prints per-PHASE walls (pre-restrict / initial
-    // support / each round), so a scale probe attributes its total to the
-    // regime decisions instead of guessing; GRAFT_TRUSS_NOCORE skips the
-    // (k−1)-core pre-restriction — the at-scale A/B knob for regime 1.
-    val dbg = sys.env.contains("GRAFT_TRUSS_DEBUG")
-    var tPhase = System.nanoTime()
-    def lap(tag: => String): Unit = if (dbg) {
-      val t1 = System.nanoTime()
-      System.err.println(f"[ktruss] $tag t=${(t1 - tPhase) / 1e9}%.1fs")
-      tPhase = t1
-    }
     // truss ⊆ (k−1)-core (see above); kCore peels at the level directly.
     // k ≤ 3 gives a ≤2-core whose peel mostly spins (or is the identity),
     // while the support filter at k−2 ≤ 1 does the same work — skip it.
     val e0 =
-      if (k >= 4 && !sys.env.contains("GRAFT_TRUSS_NOCORE"))
-        Components.kCore(g, k - 1).mat
+      if (k >= 4) Components.kCore(g, k - 1).mat
       else oriented(g).mat
-    lap("pre_restrict")
     // Dense-graph fast path: support(u,v) = |N(u)∩N(v)| ≥ d(u)+d(v)−|V|
     // (inclusion–exclusion). If EVERY edge clears the truss threshold by
     // that bound, round 1 deletes nothing, so the peel is already at
@@ -282,12 +254,10 @@ object Triangles {
     val minDegSum = if (minRow.isNullAt(0)) Long.MaxValue else minRow.getLong(0)
     if (minDegSum == Long.MaxValue || minDegSum - nV >= k - 2)
       return (e0.select(SRC, DST), 1)
-    lap("dense_bound_check")
     var alive = edgeSupportOf(e0).mat // (src, dst, support)
     // live-edge count maintained arithmetically (del rows are distinct live
     // edges), so the bulk-regime gate costs zero extra jobs per round
     var nAlive = alive.count()
-    lap(s"initial_support alive=$nAlive")
     def tri(d: DataFrame, p1: String, p2: String): DataFrame =
       d.select(col(SRC).as(p1), col(DST).as(p2))
     var it = 0
@@ -308,7 +278,6 @@ object Triangles {
         alive = edgeSupportOf(survivors).mat
         graft.prims.Release.free(prev, survivors)
         nAlive -= nDel
-        lap(s"round $it del=$nDel (bulk recompute, alive=$nAlive)")
       } else {
         val e = alive.select(SRC, DST) // edge set at the start of the round
         // each pattern SEEDS from del — |del| ⋈ E on one vertex key, then a
@@ -367,7 +336,6 @@ object Triangles {
             (col("support") - coalesce(col("dec"), lit(0L))).as("support"))
           .mat
         nAlive -= nDel
-        lap(s"round $it del=$nDel decEdges=$nDec")
       }
     }
     (alive.select(SRC, DST), it)

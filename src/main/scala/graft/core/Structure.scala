@@ -180,8 +180,6 @@ object Structure {
           .select(col("gid"), col(ID), struct(col("ml"), col("par")).as("old"),
             least(struct(col("ml"), col("par")),
               coalesce(col("nb"), struct(col("ml"), col("par")))).as("nw"))
-      if (round == 2 && sys.env.contains("GRAFT_BIPARTITE_DEBUG"))
-        System.err.println(stepFrame.queryExecution.executedPlan.toString)
       val (nxt, c) = graft.prims.Iterate.materializeCount(stepFrame,
         sum(when(col("nw") < col("old"), 1L).otherwise(0L)),
         _.filter(col("nw") < col("old")).count())

@@ -106,24 +106,19 @@ object Iterate {
     * shapes, which flipped the verdict — same host, interleaved runs:
     * q_ecg 43.3/49.9s scan vs 43.3/46.1s observe (parity, 139→118 jobs),
     * q_louvain 41.5s/84 → 40.5s/74, q_wcc_star 20.0s/50 → 18.5s/37,
-    * q_scc 16.4s/60 → 16.3s/52. GRAFT_NO_OBSERVE=1 restores the scan path
-    * (the listener-bus `Observation` variant stays rejected — it blocked
-    * 100ms+ per round on async event delivery). If the metric does not
-    * surface (defensive — PrimsSpec asserts it does), `scan` still runs. */
-  private val noObserve = sys.env.contains("GRAFT_NO_OBSERVE")
+    * q_scc 16.4s/60 → 16.3s/52 (the listener-bus `Observation` variant
+    * stays rejected — it blocked 100ms+ per round on async event
+    * delivery). If the metric does not surface (defensive — PrimsSpec
+    * asserts it does), `scan` still runs. */
   def materializeCount(df: DataFrame, metric: Column,
                        scan: DataFrame => Long): (DataFrame, Long) = {
-    if (!noObserve) {
-      val named = df.observe("_graft_mc", metric.as("_m"))
-      val ck = materialize(named)
-      named.queryExecution.observedMetrics.get("_graft_mc") match {
-        case Some(row) =>
-          return (ck, Option(row.getAs[Any]("_m")).map(_.asInstanceOf[Number].longValue).getOrElse(0L))
-        case None => return (ck, scan(ck))
-      }
+    val named = df.observe("_graft_mc", metric.as("_m"))
+    val ck = materialize(named)
+    named.queryExecution.observedMetrics.get("_graft_mc") match {
+      case Some(row) =>
+        (ck, Option(row.getAs[Any]("_m")).map(_.asInstanceOf[Number].longValue).getOrElse(0L))
+      case None => (ck, scan(ck))
     }
-    val ck = materialize(df)
-    (ck, scan(ck))
   }
 
   /** Iteration driver for fixed-point DataFrame loops.
@@ -363,7 +358,7 @@ object Regime {
 }
 
 /** Scoped AQE disable for iterative loops whose joins are ALL explicitly
-  * planned (broadcast via [[Hint.state]] or salted via [[Skew]]).
+  * planned (broadcast via [[Hint.state]] or shuffle-hash-hinted).
   *
   * AQE materializes every exchange as its own query-stage job; on an
   * iterative loop that is pure scheduler floor per round — the r8 Louvain
@@ -414,22 +409,6 @@ object Aqe {
         spark.conf.set("spark.sql.shuffle.partitions", beforeParts)
       }
     }
-}
-
-/** Skew-join salting for power-law graphs (SURVEY §7.4-5) — the explicit
-  * fallback when AQE's runtime skew split doesn't apply (e.g. the skewed
-  * side is a materialized loop state, or the join is inside a stage AQE
-  * cannot re-plan). The big side gets a deterministic per-row salt, the
-  * small side is replicated across all salt values, and the join key grows
-  * by the salt column — a hub key's rows now spread over `salt` tasks. */
-object Skew {
-  def saltedJoin(big: DataFrame, small: DataFrame, keys: Seq[String],
-                 salt: Int = 16, joinType: String = "inner"): DataFrame = {
-    val bigS = big.withColumn("_salt",
-      pmod(xxhash64(big.columns.map(col).toIndexedSeq: _*), lit(salt)).cast("int"))
-    val smallS = small.withColumn("_salt", explode(sequence(lit(0), lit(salt - 1))))
-    bigS.join(smallS, (keys :+ "_salt").toIndexedSeq, joinType).drop("_salt")
-  }
 }
 
 object TopK {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.core.Gr._
@@ -112,15 +112,26 @@ object GraphStream {
     * online near-dup lookup. The streaming twin of
     * `pipeline.Dedup.minhash`. */
   def streamingMinhash(docs: DataFrame, n: Int = 3, k: Int = 8,
-                       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+                       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    docs.select(col(idCol) +: signatureCols(textCol, n, k): _*)
+
+  /** The k signature columns `mh0 … mh{k-1}`: identical hash family to the
+    * batch `Dedup.minhash`, so a streaming signature matches the batch
+    * signature bit-for-bit. */
+  private def signatureCols(textCol: String, n: Int, k: Int): Seq[Column] = {
     import graft.pipeline.TextOps._
     val sh = shingles(tokens(col(textCol)), n)
-    // identical hash family to the batch Dedup.minhash — the streaming
-    // signature matches the batch signature bit-for-bit
-    docs.select(col(idCol) +: (0 until k).map { i =>
-      array_min(transform(sh, s => hash60(s, i))).as(s"mh$i")
-    }: _*)
+    (0 until k).map(i => array_min(transform(sh, s => hash60(s, i))).as(s"mh$i"))
   }
+
+  /** One `(band, bk)` struct per band — identical band keys to the batch
+    * path: md5 over the band's signature slice. */
+  private def bandStructs(bands: Int, rowsPerBand: Int): Column =
+    array((0 until bands).map { b =>
+      val cols = (b * rowsPerBand until (b + 1) * rowsPerBand)
+        .map(j => col(s"mh$j").cast("string"))
+      struct(lit(b).as("band"), md5(concat_ws("_", cols: _*)).as("bk"))
+    }: _*)
 
   /** STREAMING LSH candidate mining — the third leg of the streaming
     * near-dup pipeline (exact dedup → minhash signatures → candidate
@@ -158,14 +169,7 @@ object GraphStream {
     import spark.implicits._
     val sig = streamingMinhash(docs, n, bands * rowsPerBand, idCol, textCol)
       .filter(col("mh0").isNotNull) // short docs: no shingles -> no bands (batch parity)
-    // identical band keys to the batch path: md5 over the band's
-    // signature slice
-    val bandStructs = array((0 until bands).map { b =>
-      val cols = (b * rowsPerBand until (b + 1) * rowsPerBand)
-        .map(j => col(s"mh$j").cast("string"))
-      struct(lit(b).as("band"), md5(concat_ws("_", cols: _*)).as("bk"))
-    }: _*)
-    val hits = sig.select(col(idCol).as("docId"), explode(bandStructs).as("bs"))
+    val hits = sig.select(col(idCol).as("docId"), explode(bandStructs(bands, rowsPerBand)).as("bs"))
       .select(col("bs.band").as("band"), col("bs.bk").as("bk"), col("docId"))
       .as[BandHit]
     hits.groupByKey(h => (h.band, h.bk))
@@ -285,26 +289,17 @@ object GraphStream {
                                         delay: String = "10 minutes"): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    import graft.pipeline.TextOps._
     // NOTE: starting this query requires two session confs (safety-check
     // escape hatch + `max` watermark policy) — callers must wrap the
     // `.start()`/drain in `withLshStreamingConfs`, which documents the
     // safety argument and save/restores the caller's values.
-    // same hash family / band keys as streamingMinhash + the batch path,
-    // built inline so the event-time column rides along with the signature
-    val sh = shingles(tokens(col(textCol)), n)
+    // the event-time column rides along with the signature
     val withSig = docs.withWatermark(tsCol, delay)
-      .select(col(idCol) +: col(tsCol) +: (0 until bands * rowsPerBand).map { i =>
-        array_min(transform(sh, s => hash60(s, i))).as(s"mh$i")
-      }: _*)
+      .select(col(idCol) +: col(tsCol) +: signatureCols(textCol, n, bands * rowsPerBand): _*)
       .filter(col("mh0").isNotNull)
-    val bandStructs = array((0 until bands).map { b =>
-      val cols = (b * rowsPerBand until (b + 1) * rowsPerBand)
-        .map(j => col(s"mh$j").cast("string"))
-      struct(lit(b).as("band"), md5(concat_ws("_", cols: _*)).as("bk"))
-    }: _*)
     val hits = withSig
-      .select(col(idCol).as("docId"), col(tsCol).as("ts"), explode(bandStructs).as("bs"))
+      .select(col(idCol).as("docId"), col(tsCol).as("ts"),
+        explode(bandStructs(bands, rowsPerBand)).as("bs"))
       .select(col("bs.band").as("band"), col("bs.bk").as("bk"), col("docId"), col("ts"))
       .as[BandHitT]
     val delayMs = durationMs(delay)

@@ -132,8 +132,8 @@ object ScaleProbe {
       // pre-shuffle per-doc compute (shingles × minhash kernels) would run
       // on ONE core no matter how large reps is (measured: lsh_pairs at
       // reps=512 pinned 1.4 cores for 9+ minutes before this repartition;
-      // the r8 StreamProbe found the identical defect in the streaming
-      // drain). Same rule as everywhere else this round: partition by
+      // the r8 streaming drain autopsy in BASELINE.md found the identical
+      // defect). Same rule as everywhere else this round: partition by
       // POST-operation volume, ~20k docs per task here since per-doc text
       // work is orders heavier than the integral graph kernels' per-row
       // cost.
@@ -264,19 +264,17 @@ object ScaleProbe {
       results += item("ktruss7")(Triangles.kTruss(g, k = 7).count())
     }
     if (want("edgesupport")) {
-      // the truss wall in isolation: per-edge support is the Σ-wedge pass
-      // that dominates every truss regime (54%+ of the r11 A/B walls).
-      // Run once with the r11 degree-ordered kernel (default) and once
-      // with GRAFT_SUPPORT_IDORIENT=1 for the same-session orientation A/B
-      // without paying two full 30-min truss runs.
+      // the truss wall in isolation: per-edge support (the degree-ordered
+      // wedge kernel) is the Σ-wedge pass that dominates every truss
+      // regime (54%+ of the r11 walls), so its row sizes that share
+      // without paying a full 30-min truss run.
       results += item("edge_support")(Triangles.edgeSupport(g).count())
     }
     if (want("trussinc")) {
-      // regime A/B: incremental-only maintenance (bulkRecomputeFrac past 1
-      // can never trigger, so every deleting round takes the seeded-wedge
-      // path) — with GRAFT_TRUSS_NOCORE=1 this is the r10 binary's shape
-      // on the current code, the honest same-session baseline for the r11
-      // regime changes
+      // incremental-only maintenance (bulkRecomputeFrac past 1 can never
+      // trigger, so every deleting round takes the seeded-wedge path): set
+      // beside `truss`, it prices the bulk-recompute regime against the
+      // incremental one on the same graph in the same session
       results += item("ktruss7_inc")(
         Triangles.kTrussWithRounds(g, k = 7, bulkRecomputeFrac = 2.0)._1.count())
     }

@@ -14,6 +14,14 @@ class PlanSpec extends SparkSpec {
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Plans of the `materialize` executions `body` runs whose plan contains
+    * `marker` — one per loop round. */
+  private def roundPlans(marker: String)(body: => Unit): Seq[String] = {
+    val plans = capturePlans(body).collect { case ("materialize", p) if p.contains(marker) => p }
+    assert(plans.nonEmpty, s"no materialize execution ran a plan with $marker")
+    plans
+  }
+
   test("parquet scan prunes to the selected columns and pushes filters") {
     val li = Tables(spark, "/root/testdata/sf0.001", "lineitem")
       .filter(col("l_suppkey") < 10)
@@ -167,26 +175,11 @@ class PlanSpec extends SparkSpec {
   test("PMI pair generation is an equi-join on doc+position — no square enumeration") {
     // the pair frame materializes mid-operator, so its join shape is not in
     // the FINAL executed plan — capture every plan the operator runs
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             d: Long): Unit = plans.add(qe.executedPlan.toString)
-      override def onFailure(f: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(l)
-    try {
+    val all = capturePlans {
       val docs = Fixtures.documents(spark, "/root/testdata/sf0.001")
       graft.pipeline.TextAnalysis.pmiPairs(docs, window = 2, minCount = 2, topK = 10)
         .collect()
-      // listener events post asynchronously
-      val deadline = System.nanoTime() + 10e9.toLong
-      while (!plans.toArray.exists(_.toString.contains("Join [doc_id")) &&
-             System.nanoTime() < deadline) Thread.sleep(100)
-    } finally spark.listenerManager.unregister(l)
-    val all = plans.toArray.map(_.toString)
+    }.map(_._2)
     assert(all.exists(_.contains("Join [doc_id")),
       "PMI pair join lost its (doc, position) equi-key")
     // the single-row totals frame rides a broadcast cross join by design;
@@ -244,5 +237,62 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("HashAggregate"), plan.take(1200))
     assert(!plan.contains("CartesianProduct"))
     assert(!plan.contains("collect_list"), "manifest materializes doc lists")
+  }
+
+  // The three round-plan guards below pin the physical shape of a loop
+  // superstep (Pregelix's join-plus-group-by plan) as each loop's round
+  // `materialize` execution runs it. The r12 captures they replace are
+  // under plans/r12/*_after.txt.
+
+  test("Louvain round plan: no literal-keyed exchange, at most 3 state exchanges (single run, under the gate)") {
+    // two 4-cliques joined by one edge: one run, nState far under the gate
+    val k4a = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
+    val k4b = k4a.map { case (a, b) => (a + 10L, b + 10L) }
+    val g = wGraphOf((k4a ++ k4b :+ ((4L, 11L))).map { case (a, b) => (a, b, 1.0) },
+      directed = false)
+    val rounds = roundPlans("max_by(") {
+      graft.algos.Community.louvain(g, maxLevel = 1)._1.collect()
+    }
+    val literalKey = """hashpartitioning\(\d""".r
+    rounds.foreach { plan =>
+      // a single-run level's `run` is lit(0); a cache keyed on it folds to
+      // hashpartitioning(0, src, N), which no (run, …) clustering accepts,
+      // so every round would re-exchange the whole candidate stream
+      assert(literalKey.findFirstIn(plan).isEmpty,
+        "a literal-keyed exchange is back in the Louvain round:\n" + plan)
+      // the two nState-row sides of the state ⋈ best-move join and the
+      // community-total window inside the broadcast build — nothing over
+      // the cached stream
+      val exchanges = "ENSURE_REQUIREMENTS".r.findAllIn(plan).size
+      assert(exchanges <= 3, s"$exchanges ENSURE_REQUIREMENTS exchanges in the Louvain round:\n$plan")
+    }
+  }
+
+  test("spectral balancedCut matvec broadcasts the v state — no sort-merge join") {
+    val k5a = for (i <- 0L until 5L; j <- i + 1 until 5L) yield (i, j)
+    val k5b = for (i <- 10L until 15L; j <- i + 1 until 15L) yield (i, j)
+    val g = wGraphOf((k5a ++ k5b :+ ((4L, 10L))).map { case (a, b) => (a, b, 1.0) },
+      directed = false)
+    val rounds = roundPlans("sum((w#") {
+      graft.algos.Spectral.balancedCut(g, k = 2, maxIter = 3).collect()
+    }
+    rounds.foreach { plan =>
+      assert(plan.contains("BroadcastHashJoin") && !plan.contains("SortMergeJoin"),
+        "the matvec's v attach left the broadcast:\n" + plan)
+    }
+  }
+
+  test("bipartiteBatch step broadcasts the nbrMin attach — no sort-merge join") {
+    val even = graphOf(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)), directed = false)
+    val odd = graphOf(Seq((1L, 2L), (2L, 3L), (3L, 1L)), directed = false)
+    val rounds = roundPlans("min(struct(ml") {
+      Structure.bipartiteBatch(Seq("even" -> even, "odd" -> odd))
+    }
+    rounds.foreach { plan =>
+      val attach = plan.linesIterator.filter(_.contains("LeftOuter")).toSeq
+      assert(attach.nonEmpty && attach.forall(_.contains("BroadcastHashJoin")) &&
+        !plan.contains("SortMergeJoin"),
+        "the bipartite step's nbrMin attach left the broadcast:\n" + plan)
+    }
   }
 }

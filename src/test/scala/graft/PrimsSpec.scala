@@ -74,23 +74,12 @@ class PrimsSpec extends SparkSpec {
   }
 
   test("a QueryExecutionListener sees the materialized plan") {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             d: Long): Unit = plans.add(qe.executedPlan.toString)
-      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(l)
-    try {
+    val plans = capturePlans {
       Iterate.materialize(spark.range(50).toDF("id")
         .withColumn("tag_materialize_probe", col("id") * 3))
-      // listener events post asynchronously
-      val deadline = System.nanoTime() + 10e9.toLong
-      while (!plans.toArray.exists(_.toString.contains("tag_materialize_probe")) &&
-             System.nanoTime() < deadline) Thread.sleep(50)
-    } finally spark.listenerManager.unregister(l)
-    assert(plans.toArray.exists(_.toString.contains("tag_materialize_probe")))
+    }
+    assert(plans.exists { case (name, plan) =>
+      name == "materialize" && plan.contains("tag_materialize_probe") })
   }
 
   test("Regime scopes AQE off under the gate and restores it, leaves it alone past the gate") {

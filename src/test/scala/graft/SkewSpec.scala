@@ -1,32 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import graft.prims.Skew
-
-/** Salted skew join: result-equivalence with a plain join, hub key spread. */
+/** `prims.Aqe.off`, the scoped AQE disable the skew-sensitive loops run
+  * under: conf scoping, width clamping and reentrant restore. */
 class SkewSpec extends SparkSpec {
-
-  test("salted join equals the plain join on a skewed key distribution") {
-    import spark.implicits._
-    // hub key 0 carries 5000 rows; the rest 1 each
-    val big = ((0L until 5000L).map(i => (0L, i)) ++ (1L until 50L).map(k => (k, k * 100)))
-      .toDF("k", "payload")
-    val small = (0L until 50L).map(k => (k, s"dim$k")).toDF("k", "name")
-    val plain = big.join(small, "k").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-    val salted = Skew.saltedJoin(big, small, Seq("k"), salt = 8).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
-    assert(salted == plain)
-  }
-
-  test("hub rows spread across salts") {
-    import spark.implicits._
-    val big = (0L until 1000L).map(i => (0L, i)).toDF("k", "payload")
-    val salts = big.withColumn("_salt",
-        pmod(xxhash64(big.columns.map(col).toIndexedSeq: _*), lit(8)))
-      .select("_salt").distinct().count()
-    assert(salts >= 6) // 1000 distinct rows hash into (nearly) all 8 salts
-  }
 
   test("Aqe.off scopes AQE and sized shuffle partitions, restoring both") {
     val beforeAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")

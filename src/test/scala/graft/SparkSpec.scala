@@ -32,6 +32,34 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     edges.toDF(core.Gr.SRC, core.Gr.DST, core.Gr.WEIGHT)
   }
 
+  /** (execution name, executed plan) of every SQL execution `body` runs —
+    * for shapes that live in a mid-operator execution (a loop round's
+    * `materialize`, an intermediate frame) rather than in the final plan.
+    * Listener events post asynchronously but in order, so a tagged
+    * sentinel query run after `body` marks the point by which every
+    * earlier execution has been seen. */
+  def capturePlans(body: => Unit): Seq[(String, String)] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        seen.add(f -> qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sentinel = s"capture_sentinel_${System.nanoTime()}"
+    def all = seen.toArray(Array.empty[(String, String)]).toSeq
+    spark.listenerManager.register(l)
+    try {
+      body
+      spark.range(1).toDF(sentinel).collect()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!all.exists(_._2.contains(sentinel)) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+    } finally spark.listenerManager.unregister(l)
+    assert(all.exists(_._2.contains(sentinel)), "listener events never arrived")
+    all.filterNot(_._2.contains(sentinel))
+  }
+
   def graphOf(edges: Seq[(Long, Long)], directed: Boolean = true): core.PropertyGraph =
     core.PropertyGraph(core.Structure.extractVertexList(edgeDF(edges)), edgeDF(edges),
       core.GraphProperties(directed = directed))
