@@ -48,9 +48,17 @@ object Bench {
     * r7-pinned plan: per-round dangling semi-join scalar + Hint.state
     * broadcast attach + left join onto the reset frame, AQE on.
     *
+    * The round loop is its own: materialize each round, then free the
+    * previous state — not the kernels' Iterate.fixpoint driver, so a change
+    * to that driver cannot shift the probe. Replacing the retired
+    * Iterate.loopWithStatus call with it (same materialize/free sequence)
+    * left the probe in its band: CalibProbe 3 reps at local[4] on a 4-core
+    * / 16 GB host, two interleaved runs per side, medians 5.15s / 4.51s
+    * before and 4.67s / 4.23s after.
+    *
     * ADVICE r11: the copy still executes through LIVE shared prims —
-    * Iterate.loopWithStatus / Iterate.materialize (the packed-chunk
-    * checkpoint), Hint.state, Mat.mat, and the session's AQE defaults.
+    * Iterate.materialize (the packed-chunk checkpoint), Release.free,
+    * Hint.state, Mat.mat, and the session's AQE defaults.
     * Changing any of those changes the probe's executed plan and silently
     * shifts CalibNominalSec. Round-close discipline: any round that
     * touches those prims must re-check the probe against its nominal band
@@ -64,7 +72,7 @@ object Bench {
   private def pinnedProbePr(g: graft.core.PropertyGraph, iters: Int)
       : org.apache.spark.sql.DataFrame = {
     import graft.core.Gr._
-    import graft.prims.{Iterate, Hint}
+    import graft.prims.{Hint, Release}
     import graft.prims.Mat._
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.DataFrame
@@ -91,8 +99,13 @@ object Bench {
           (lit(alpha) * (coalesce(col("in_sum"), lit(0.0)) + lit(dangling) * col("reset"))
             + lit(1.0 - alpha) * col("reset")).as("pagerank"))
     }
-    Iterate.loopWithStatus(init, iters, step, null, 1, 1, releasePrev = true)
-      ._1.select(col(ID), col("pagerank"))
+    var ranks = init.mat
+    for (round <- 0 until iters) {
+      val next = step(ranks, round).mat
+      Release.free(ranks)
+      ranks = next
+    }
+    ranks.select(col(ID), col("pagerank"))
   }
 
   /** Nominal seconds for [[jobFloorProbe]] on this host — pinned round-7

@@ -233,17 +233,24 @@ object Fixtures {
 
   private val countCache = scala.collection.concurrent.TrieMap[(String, String), Long]()
 
-  /** Drop every cache entry belonging to `spark`'s session. The session
-    * TrieMaps are never evicted otherwise, so a process that stops one
-    * session and sweeps again in a fresh one (Bench's degraded-rule rerun)
-    * would pin the dead session's ~15 materialized fixture frames, the
-    * Brandes states and the shared kernel frames for the rest of the JVM —
-    * exactly when the rerun needs the heap headroom to re-pay the builds. */
+  /** Drop every cache entry belonging to `spark`'s session and free the
+    * stored blocks of the frames it drops ([[graft.prims.Release.free]]).
+    * The session TrieMaps are never evicted otherwise, so a process that
+    * stops one session and sweeps again in a fresh one (Bench's
+    * degraded-rule rerun) would pin the dead session's ~15 materialized
+    * fixture frames, the Brandes states and the shared kernel frames for
+    * the rest of the JVM — exactly when the rerun needs the heap headroom
+    * to re-pay the builds. A later fetch rebuilds the fixture. */
   def evictSession(spark: SparkSession): Unit = {
     val k = sessionKey(spark)
-    Seq(cache, l1Cache, brandesCache, countCache).foreach { m =>
-      m.keys.filter(_._1 == k).foreach(m.remove)
-    }
+    def evict[V](m: scala.collection.concurrent.TrieMap[(String, String), V])(
+        frames: V => Seq[DataFrame]): Unit =
+      m.keys.filter(_._1 == k).foreach(key =>
+        m.remove(key).foreach(v => graft.prims.Release.free(frames(v): _*)))
+    evict(cache)(Seq(_))
+    evict(l1Cache)(v => Seq(v._1))
+    evict(brandesCache)(b => Seq(b.delta, b.settled, b.verts))
+    evict(countCache)(_ => Nil)
   }
   def supplierSimNV(spark: SparkSession, dir: String): Long =
     countCache.getOrElseUpdate((sessionKey(spark), s"sim_nv:$dir"),

@@ -4,7 +4,7 @@ import graft.prims.Mat._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.{PropertyGraph, Structure, Gr}
-import graft.prims.{Iterate, Hint, Regime}
+import graft.prims.{Hint, Regime}
 
 /** Katz / eigenvector / HITS / degree centrality — the PageRank-shaped
   * dense-iteration family, plus Brandes betweenness.
@@ -76,19 +76,11 @@ object Centrality {
       verts.join(in, Seq(ID), "left")
         .select(col(ID), (lit(alpha) * coalesce(col("in_sum"), lit(0.0)) + lit(beta)).as("katz"))
     }
-    val conv = if (tol <= 0) null else { (prev: DataFrame, cur: DataFrame) =>
-      cur.join(prev.withColumnRenamed("katz", "prev"), ID)
-        .agg(sum(abs(col("katz") - col("prev")))).first().getDouble(0) < tol
-    }
-    // AQE off + scoped width under the broadcast gate (prims.Aqe): the
+    // AQE off + scoped width under the broadcast gate (prims.Regime): the
     // edge attach is Hint.state-broadcast, the remaining per-round joins
     // are V-row-sized — AQE's per-exchange stage jobs were pure scheduler
     // floor on this loop (same audit as the r11-opt PageRank change).
-    val (res, converged, _) = Regime.scope(verts.sparkSession, nV) {
-      Iterate.loopWithStatus(init, maxIter, step, conv,
-        checkpointEvery = 1, releasePrev = true)
-    }
-    (res, converged)
+    PageRank.powerIterate(init, maxIter, nV, "katz", tol)(step)
   }
 
   /** Eigenvector centrality — power iteration with L2 normalization per
@@ -113,15 +105,8 @@ object Centrality {
       val norm = raw.agg(sqrt(sum(col("ec") * col("ec")))).first().getDouble(0)
       raw.select(col(ID), (col("ec") / lit(if (norm == 0) 1.0 else norm)).as("ec"))
     }
-    val conv = if (tol <= 0) null else { (prev: DataFrame, cur: DataFrame) =>
-      cur.join(prev.withColumnRenamed("ec", "prev"), ID)
-        .agg(sum(abs(col("ec") - col("prev")))).first().getDouble(0) < tol
-    }
     // scoped AQE-off under the gate — same rationale as katzRaw (r11-opt)
-    Regime.scope(verts.sparkSession, nV.toLong) {
-      Iterate.loop(init, maxIter, step, conv, checkpointEvery = 1,
-        releasePrev = true)
-    }
+    PageRank.powerIterate(init, maxIter, nV.toLong, "ec", tol)(step)._1
   }
 
   /** HITS hubs & authorities, sum-normalized each half-round
@@ -180,15 +165,8 @@ object Centrality {
         .join(auth, ID)
         .select(col(ID), col("hubs"), col("authorities"))
     }
-    val conv = if (tol <= 0) null else { (prev: DataFrame, cur: DataFrame) =>
-      cur.join(prev.select(col(ID), col("hubs").as("ph")), ID)
-        .agg(sum(abs(col("hubs") - col("ph")))).first().getDouble(0) < tol
-    }
     // scoped AQE-off under the gate — same rationale as katzRaw (r11-opt)
-    val res = Regime.scope(verts.sparkSession, nV) {
-      Iterate.loop(init, maxIter, step, conv, checkpointEvery = 1,
-        releasePrev = true)
-    }
+    val res = PageRank.powerIterate(init, maxIter, nV, "hubs", tol)(step)._1
     if (normalized) res // per-round sum-normalization already left sum = 1
     else {
       // reference normalize=false scale: last in-loop step is max-divide

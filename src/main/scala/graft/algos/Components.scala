@@ -47,35 +47,25 @@ object Components {
                else Structure.symmetrize(g.edges.select(SRC, DST))).mat
     // the whole propagation (label setup and rounds) in one regime scope:
     // both per-round joins are Hint.state-hinted or V-row-sized
-    val (labels, it, changed) = Regime.scope(g.spark, nV) {
-      var changed = 1L
-      var labels = g.vertices.select(col(ID), col(ID).as("component")).mat
-      var it = 0
-      while (changed > 0 && it < math.min(maxIter, starSwitch)) {
-        it += 1
+    val (labels, it, converged) = Regime.scope(g.spark, nV) {
+      Iterate.fixpoint(g.vertices.select(col(ID), col(ID).as("component")).mat,
+          math.min(maxIter, starSwitch), nV)({ (st, _) =>
+        val labels = st.select(col(ID), col("component"))
         val nbrMin = und.join(Hint.state(labels.withColumnRenamed(ID, SRC), nV), SRC)
           .groupBy(col(DST).as(ID)).agg(min("component").as("nbr_min"))
-        // the convergence count rides the materialization job (observe
-        // metric) — one job per round, no separate count scan.
         // labels ⋈ nbrMin is V-row × V-row (r11-opt): un-hinted — a
         // broadcast of nbrMin bought no scan-in-place of a bigger side and
         // cost one build job per round; the plain join rides the
         // materialize job at the scoped width.
-        val (joined, ch) = Iterate.materializeCount(
-          labels.join(nbrMin, Seq(ID), "left")
-            .select(col(ID), col("component").as("old"),
-              least(col("component"), coalesce(col("nbr_min"), col("component"))).as("component")),
-          sum(when(col("component") < col("old"), 1L).otherwise(0L)),
-          _.filter(col("component") < col("old")).count())
-        changed = ch
-        // old labels fed the materialization above — free their blocks now
-        // instead of holding rounds × V rows (prims.Release scaladoc)
-        Release.free(labels)
-        labels = joined.select(col(ID), col("component"))
-      }
-      (labels, it, changed)
+        labels.join(nbrMin, Seq(ID), "left")
+          .select(col(ID), col("component").as("old"),
+            least(col("component"), coalesce(col("nbr_min"), col("component"))).as("component"))
+      },
+        // the changed-label count rides the materialization job
+        Some(sum(when(col("component") < col("old"), 1L).otherwise(0L))),
+        (_, _, changed) => changed == 0)
     }
-    if (changed > 0) {
+    if (!converged) {
       // still moving after `starSwitch` sweeps — the diameter is large;
       // switch to the star-contraction algorithm (it re-reads g.edges, not
       // this frame, so the propagation state and edge copy are dead)
@@ -86,7 +76,7 @@ object Components {
     // the symmetrized edge copy is dead (the returned labels are
     // materialized); `it` counts rounds incl. the no-change confirmation
     Release.free(und)
-    (labels, it)
+    (labels.select(col(ID), col("component")), it)
   }
 
   /** Large-star/small-star WCC (Kiveris, Lattanzi, Mirrokni, Rastogi,
@@ -98,20 +88,17 @@ object Components {
     * set, which shrinks monotonically toward one edge per non-root vertex.
     * @return (DataFrame(id, component), rounds). */
   def wccStar(g: PropertyGraph, maxIter: Int = 50): (DataFrame, Int) = {
-    var pairs = Structure.canonicalize(
+    val pairs0 = Structure.canonicalize(
       Structure.symmetrize(g.edges.select(SRC, DST))).select(SRC, DST).mat
-    var nPairs = pairs.count()
-    var it = 0
-    var done = nPairs == 0
+    var nPairs = pairs0.count()
     // AQE off for the star rounds when the initial pair set clears the
     // broadcast gate (pairs never grow under star contraction, so the
     // per-round st() gate below stays satisfiable): every join inside is
     // then explicitly broadcast-hinted and AQE's per-exchange stage jobs
     // are pure scheduler floor — see prims.Aqe.
     // (gated on the round's adjacency, twice the pair set; width by pairs)
-    Regime.scope(pairs.sparkSession, 2 * nPairs, nPairs) {
-    while (!done && it < maxIter) {
-      it += 1
+    val (pairs, it, _) = Iterate.fixpoint(pairs0, if (nPairs == 0) 0 else maxIter,
+        2 * nPairs, nPairs)({ (pairs, _) =>
       // large-star: per vertex u, m = min(u, N(u)); every neighbor v > u
       // re-hangs onto m. No dedup here — the min-aggregations downstream
       // are duplicate-insensitive and the round's final distinct restores
@@ -133,23 +120,19 @@ object Components {
       // (including hi) folds onto the minimum
       val hiAdj = ls.select(col(DST).as("hi"), col(SRC).as("lo"))
       val sMin = hiAdj.groupBy("hi").agg(min("lo").as("m"))
-      val (ss, nNew) = graft.prims.Iterate.materializeCount(
-        hiAdj.join(sMin, "hi")
-          .select(col("lo").as(SRC), col("m").as(DST))
-          .filter(col(SRC) =!= col(DST))
-          .select(least(col(SRC), col(DST)).as(SRC), greatest(col(SRC), col(DST)).as(DST))
-          .union(sMin.select(col("m").as(SRC), col("hi").as(DST)))
-          .distinct(),
-        count(lit(1)), _.count())
+      hiAdj.join(sMin, "hi")
+        .select(col("lo").as(SRC), col("m").as(DST))
+        .filter(col(SRC) =!= col(DST))
+        .select(least(col(SRC), col(DST)).as(SRC), greatest(col(SRC), col(DST)).as(DST))
+        .union(sMin.select(col("m").as(SRC), col("hi").as(DST)))
+        .distinct()
+    }, Some(count(lit(1))), { (prev, next, nNew) =>
       // fixpoint: the pair set reproduces itself (star forest); the
       // exceptAll job only runs once counts stop changing
-      done = nNew == nPairs && ss.exceptAll(pairs).isEmpty
-      // the fixpoint check above was the old pair set's last read
-      graft.prims.Release.free(pairs)
-      pairs = ss
+      val same = nNew == nPairs && next.exceptAll(prev).isEmpty
       nPairs = nNew
-    }
-    }
+      same
+    })
     // star forest: each edge is (root, v) with root = component minimum
     val comp = pairs.select(col(DST).as(ID), col(SRC).as("component"))
       .union(pairs.select(col(SRC).as(ID), col(SRC).as("component")))
@@ -446,26 +429,16 @@ object Components {
   private def minLabelProp(verts: DataFrame, edges: DataFrame, forward: Boolean,
                            maxSweeps: Int, stateRows: Long = -1L): (DataFrame, Boolean) = {
     val e = if (forward) edges else edges.select(col(DST).as(SRC), col(SRC).as(DST))
-    var labels = verts.select(col(ID), col(ID).as("ml")).mat
-    var changed = 1L
-    var sweep = 0
-    Regime.scope(verts.sparkSession, stateRows) {
-    while (changed > 0 && sweep < maxSweeps) {
-      sweep += 1
-      val nbrMin = e.join(graft.prims.Hint.state(
-          labels.withColumnRenamed(ID, SRC), stateRows), SRC)
+    val (labels, _, converged) = Iterate.fixpoint(
+        verts.select(col(ID), col(ID).as("ml")).mat, maxSweeps, stateRows)({ (st, _) =>
+      val labels = st.select(col(ID), col("ml"))
+      val nbrMin = e.join(Hint.state(labels.withColumnRenamed(ID, SRC), stateRows), SRC)
         .groupBy(col(DST).as(ID)).agg(min("ml").as("nm"))
-      val (joined, ch) = graft.prims.Iterate.materializeCount(
-        labels.join(nbrMin, Seq(ID), "left")
-          .select(col(ID), col("ml").as("old"),
-            least(col("ml"), coalesce(col("nm"), col("ml"))).as("ml")),
-        sum(when(col("ml") < col("old"), 1L).otherwise(0L)),
-        _.filter(col("ml") < col("old")).count())
-      changed = ch
-      labels = joined.select(col(ID), col("ml"))
-    }
-    }
-    (labels, changed == 0)
+      labels.join(nbrMin, Seq(ID), "left")
+        .select(col(ID), col("ml").as("old"),
+          least(col("ml"), coalesce(col("nm"), col("ml"))).as("ml"))
+    }, Some(sum(when(col("ml") < col("old"), 1L).otherwise(0L))), (_, _, changed) => changed == 0)
+    (labels.select(col(ID), col("ml")), converged)
   }
 
   /** Degrees over a canonical (src<dst, deduped) undirected edge list. */

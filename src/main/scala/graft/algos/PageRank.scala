@@ -15,7 +15,7 @@ import graft.prims.{Iterate, Hint, Regime}
   *
   * Spark realization: ranks ⋈ out-degree → contribution per edge →
   * groupBy(dst).sum — one shuffle per iteration; dangling mass and the
-  * convergence delta are scalar aggs batched every `checkEvery` rounds.
+  * convergence delta are one scalar job each per round.
   * The out-degree table is computed once and reused (the reference's
   * `precomputed_vertex_out_weight`).
   */
@@ -113,18 +113,29 @@ object PageRank {
             + lit(1.0 - alpha) * col("reset")).as("pagerank"),
           col("is_dang"))
     }
-    // reference converges on L1 norm < tol (`pagerank_impl.cuh:311`);
-    // tol<=0 → fixed-iteration mode, no per-round convergence job.
-    val conv = if (tol <= 0) null else { (prev: DataFrame, cur: DataFrame) =>
-      cur.join(prev.select(col(ID), col("pagerank").as("prev")), ID)
-        .agg(sum(abs(col("pagerank") - col("prev")))).first().getDouble(0) < tol
-    }
-    val (result, converged, _) =
-      Iterate.loopWithStatus(init, maxIter, step, conv, checkEvery = 1,
-        checkpointEvery = 1, releasePrev = true)
-
+    val (result, converged) = powerIterate(init, maxIter, nVL, "pagerank", tol)(step)
     (result.select(col(ID), col("pagerank")), converged)
     }
+
+  /** Power iteration on the fixpoint driver: the loop stops once the L1
+    * change of `value` between two rounds is below `tol`, the reference's
+    * convergence rule (`pagerank_impl.cuh:311`) — one join and scalar job
+    * per round. `tol <= 0` runs `maxIter` rounds with no convergence job,
+    * and the flag is then vacuously true. `init` is materialized here, in
+    * the regime of the `rows`-row state, and handed to the driver.
+    * @return (final state, converged) */
+  private[algos] def powerIterate(init: DataFrame, maxIter: Int, rows: Long,
+                                  value: String, tol: Double)(
+      step: (DataFrame, Int) => DataFrame): (DataFrame, Boolean) = {
+    val l1Below = { (prev: DataFrame, next: DataFrame, _: Long) =>
+      tol > 0 && next.join(prev.select(col(ID), col(value).as("_prev")), ID)
+        .agg(sum(abs(col(value) - col("_prev")))).first().getDouble(0) < tol
+    }
+    val (res, _, converged) = Regime.scope(init.sparkSession, rows) {
+      Iterate.fixpoint(init.mat, maxIter, rows)(step, None, l1Below)
+    }
+    (res, converged || tol <= 0)
+  }
 
   /** Fixed-iteration variant (no convergence job per round) — used by the
     * oracle queries so DuckDB-unrolled SQL matches exactly, and the fastest

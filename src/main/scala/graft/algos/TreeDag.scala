@@ -4,7 +4,7 @@ import graft.prims.Mat._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.{PropertyGraph, Structure, Gr}
-import graft.prims.Regime
+import graft.prims.Iterate
 
 /** Minimum spanning tree (Borůvka) and DAG topological sort.
   *
@@ -71,9 +71,6 @@ object TreeDag {
           .join(comp.select(col(ID).as(DST), col("comp").as("cb")), DST)
           .select(col("ca").as(SRC), col("cb").as(DST))
         val cgSym = cg.union(cg.select(col(DST).as(SRC), col(SRC).as(DST))).mat
-        var lbl = cgSym.select(col(SRC).as(ID)).distinct()
-          .select(col(ID), col(ID).as("ml")).mat
-        var ch = 1L
         // AQE off + scoped width for the inner min-label rounds (see
         // prims.Aqe). UNLIKE the level loops, these joins are NOT
         // broadcast-hinted (r11-opt): both sides are the SAME shrinking
@@ -82,20 +79,16 @@ object TreeDag {
         // per inner round; a plain join at the scoped width exchanges the
         // same magnitude of rows inside the materialize job itself
         // (2 jobs/inner round instead of 4).
-        Regime.scope(canon.sparkSession, nV) {
-        while (ch > 0) {
+        val (merged, _, _) = Iterate.fixpoint(cgSym.select(col(SRC).as(ID)).distinct()
+            .select(col(ID), col(ID).as("ml")).mat, Int.MaxValue, nV)({ (st, _) =>
+          val lbl = st.select(col(ID), col("ml"))
           val nbrMin = cgSym.join(lbl.withColumnRenamed(ID, SRC), SRC)
             .groupBy(col(DST).as(ID)).agg(min("ml").as("nm"))
-          val (nxt, c) = graft.prims.Iterate.materializeCount(
-            lbl.join(nbrMin, Seq(ID), "left")
-              .select(col(ID), col("ml").as("old"),
-                least(col("ml"), coalesce(col("nm"), col("ml"))).as("ml")),
-            sum(when(col("ml") < col("old"), 1L).otherwise(0L)),
-            _.filter(col("ml") < col("old")).count())
-          ch = c
-          lbl = nxt.select(col(ID), col("ml"))
-        }
-        }
+          lbl.join(nbrMin, Seq(ID), "left")
+            .select(col(ID), col("ml").as("old"),
+              least(col("ml"), coalesce(col("nm"), col("ml"))).as("ml"))
+        }, Some(sum(when(col("ml") < col("old"), 1L).otherwise(0L))), (_, _, ch) => ch == 0)
+        val lbl = merged.select(col(ID), col("ml"))
         comp = comp.join(st(lbl.withColumnRenamed(ID, "comp")), Seq("comp"), "left")
           .select(col(ID), coalesce(col("ml"), col("comp")).as("comp"))
           .mat

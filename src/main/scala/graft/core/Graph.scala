@@ -89,48 +89,9 @@ final case class PropertyGraph(
     numEdges.toDouble / (v * (v - 1.0))
   }
 
-  /** Bipartiteness via a SINGLE min-(label, parity) fixpoint: every vertex
-    * propagates the smallest (component-min id, walk parity) pair it has
-    * seen, parity flipping per hop. At fixpoint a bipartite component's
-    * parities are exactly the 2-coloring relative to its min vertex (all
-    * walks from a fixed root to v share one parity), while an odd cycle
-    * makes even-parity walks reachable everywhere in its component — so
-    * some edge ends up with equal endpoint parities either way iff the
-    * graph is non-bipartite. One loop replaces the old WCC + batched-BFS
-    * pair; the final check is one edge scan. */
-  def isBipartite: Boolean = {
-    import org.apache.spark.sql.functions.{least, coalesce, struct, lit, min, sum, when}
-    val und = graft.prims.Iterate.materialize(Structure.symmetrize(edges.select(Gr.SRC, Gr.DST)))
-    val nV = vertices.count()
-    var st = graft.prims.Iterate.materialize(
-      vertices.select(col(Gr.ID), col(Gr.ID).as("ml"), lit(0).as("par")))
-    var ch = 1L
-    // AQE off under the broadcast gate: both per-round joins are
-    // Hint.state-hinted, so AQE only adds per-exchange stage jobs
-    // (prims.Aqe scaladoc).
-    graft.prims.Regime.scope(spark, nV) {
-    while (ch > 0) {
-      val nbrMin = und.join(
-          graft.prims.Hint.state(st.withColumnRenamed(Gr.ID, Gr.SRC), nV), Gr.SRC)
-        .select(col(Gr.DST).as(Gr.ID), col("ml"), (lit(1) - col("par")).as("par"))
-        .groupBy(Gr.ID).agg(min(struct(col("ml"), col("par"))).as("nb"))
-      val (nxt, c) = graft.prims.Iterate.materializeCount(
-        st.join(graft.prims.Hint.state(nbrMin, nV), Seq(Gr.ID), "left")
-          .select(col(Gr.ID), struct(col("ml"), col("par")).as("old"),
-            least(struct(col("ml"), col("par")),
-              coalesce(col("nb"), struct(col("ml"), col("par")))).as("nw")),
-        sum(when(col("nw") < col("old"), 1L).otherwise(0L)),
-        _.filter(col("nw") < col("old")).count())
-      ch = c
-      st = nxt.select(col(Gr.ID), col("nw.ml").as("ml"), col("nw.par").as("par"))
-    }
-    }
-    val bad = und
-      .join(st.select(col(Gr.ID).as(Gr.SRC), col("par").as("pa")), Gr.SRC)
-      .join(st.select(col(Gr.ID).as(Gr.DST), col("par").as("pb")), Gr.DST)
-      .filter(col("pa") === col("pb")).limit(1)
-    bad.isEmpty
-  }
+  /** Bipartiteness via the min-(label, parity) fixpoint of
+    * [[Structure.bipartiteBatch]], run on this graph alone. */
+  def isBipartite: Boolean = Structure.bipartiteBatch(Seq("g" -> this))("g")
 
   /** Undirected view: union of edges with their reversals, deduplicated.
     * Reference: `structure/symmetrize.py:167`. */

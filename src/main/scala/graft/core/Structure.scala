@@ -140,15 +140,23 @@ object Structure {
      .agg(sum(WEIGHT).as(WEIGHT))
   }
 
-  /** Batched structural bipartiteness over SEVERAL graphs at once — the
-    * min-(label, parity) fixpoint of PropertyGraph.isBipartite with a
-    * graph-id key on every state row, so N graphs cost ONE set of
+  /** Structural bipartiteness of SEVERAL graphs at once, by a single
+    * min-(label, parity) fixpoint: every vertex propagates the smallest
+    * (component-min id, walk parity) pair it has seen, parity flipping per
+    * hop. At fixpoint a bipartite component's parities are exactly the
+    * 2-coloring relative to its min vertex (all walks from a fixed root to
+    * v share one parity), while an odd cycle makes even-parity walks
+    * reachable everywhere in its component — so some edge ends up with
+    * equal endpoint parities iff the graph is non-bipartite; the final
+    * check is one edge scan.
+    *
+    * A graph-id key on every state row makes N graphs cost ONE set of
     * per-round jobs instead of N (the multi-source-BFS batching rule,
-    * SURVEY §7.4-2; r11-opt — q_is_bipartite checks two graphs and was
-    * paying two full fixpoint loops). Per-graph fixpoints are independent
-    * under the gid key (monotone min — a converged graph's rows simply
-    * stop changing while stragglers finish), so the booleans are exactly
-    * the per-graph results. */
+    * SURVEY §7.4-2; r11-opt — q_is_bipartite checks two graphs).
+    * Per-graph fixpoints are independent under the gid key (monotone min —
+    * a converged graph's rows simply stop changing while stragglers
+    * finish), so each boolean is exactly that graph's result;
+    * PropertyGraph.isBipartite is the one-graph batch. */
   def bipartiteBatch(gs: Seq[(String, PropertyGraph)]): Map[String, Boolean] = {
     val und = graft.prims.Iterate.materialize(
       gs.zipWithIndex.map { case ((_, g), i) =>
@@ -157,40 +165,31 @@ object Structure {
     val verts = gs.zipWithIndex.map { case ((_, g), i) =>
       g.vertices.select(lit(i).as("gid"), col(ID))
     }.reduce(_ unionByName _)
-    var st = graft.prims.Iterate.materialize(
-      verts.select(col("gid"), col(ID), col(ID).as("ml"), lit(0).as("par")))
-    val nV = st.count()
-    var ch = 1L
-    var round = 0
-    graft.prims.Regime.scope(und.sparkSession, nV) {
-    while (ch > 0) {
-      round += 1
+    // state rows (gid, id, nw = (ml, par)): the round output's `nw` is the
+    // next round's state, the init is shaped like it
+    val st0 = graft.prims.Iterate.materialize(verts.select(col("gid"), col(ID),
+      struct(col(ID).as("ml"), lit(0).as("par")).as("nw")))
+    val nV = st0.count()
+    val (st, _, _) = graft.prims.Iterate.fixpoint(st0, Int.MaxValue, nV)({ (s, _) =>
+      val cur = s.select(col("gid"), col(ID), col("nw.ml").as("ml"), col("nw.par").as("par"))
       val nbrMin = und.join(
-          graft.prims.Hint.state(st.withColumnRenamed(ID, SRC), nV), Seq("gid", SRC))
+          graft.prims.Hint.state(cur.withColumnRenamed(ID, SRC), nV), Seq("gid", SRC))
         .select(col("gid"), col(DST).as(ID), col("ml"), (lit(1) - col("par")).as("par"))
         .groupBy("gid", ID).agg(min(struct(col("ml"), col("par"))).as("nb"))
       // Hint.state on the agg side (r12): the r11 batching dropped the hint
-      // PropertyGraph.isBipartite's per-graph loop carries — unhinted under
-      // scoped AQE-off this planned as a stats-blind SMJ exchanging and
-      // sorting BOTH state-sized sides every round (q_is_bipartite regressed
-      // 6.6→9.1s in the r11 close; VERDICT r11 item #2 demanded the
-      // isolated re-measure that found this).
-      val stepFrame =
-        st.join(graft.prims.Hint.state(nbrMin, nV), Seq("gid", ID), "left")
-          .select(col("gid"), col(ID), struct(col("ml"), col("par")).as("old"),
-            least(struct(col("ml"), col("par")),
-              coalesce(col("nb"), struct(col("ml"), col("par")))).as("nw"))
-      val (nxt, c) = graft.prims.Iterate.materializeCount(stepFrame,
-        sum(when(col("nw") < col("old"), 1L).otherwise(0L)),
-        _.filter(col("nw") < col("old")).count())
-      ch = c
-      graft.prims.Release.free(st)
-      st = nxt.select(col("gid"), col(ID), col("nw.ml").as("ml"), col("nw.par").as("par"))
-    }
-    }
+      // the old per-graph loop carried — unhinted under scoped AQE-off this
+      // planned as a stats-blind SMJ exchanging and sorting BOTH
+      // state-sized sides every round (q_is_bipartite regressed 6.6→9.1s in
+      // the r11 close; VERDICT r11 item #2 demanded the isolated re-measure
+      // that found this).
+      cur.join(graft.prims.Hint.state(nbrMin, nV), Seq("gid", ID), "left")
+        .select(col("gid"), col(ID), struct(col("ml"), col("par")).as("old"),
+          least(struct(col("ml"), col("par")),
+            coalesce(col("nb"), struct(col("ml"), col("par")))).as("nw"))
+    }, Some(sum(when(col("nw") < col("old"), 1L).otherwise(0L))), (_, _, ch) => ch == 0)
     val badPerGid = und
-      .join(st.select(col("gid"), col(ID).as(SRC), col("par").as("pa")), Seq("gid", SRC))
-      .join(st.select(col("gid"), col(ID).as(DST), col("par").as("pb")), Seq("gid", DST))
+      .join(st.select(col("gid"), col(ID).as(SRC), col("nw.par").as("pa")), Seq("gid", SRC))
+      .join(st.select(col("gid"), col(ID).as(DST), col("nw.par").as("pb")), Seq("gid", DST))
       .filter(col("pa") === col("pb"))
       .groupBy("gid").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap

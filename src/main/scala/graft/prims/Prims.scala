@@ -15,9 +15,11 @@ import graft.core.Gr._
   *     the other endpoint. Catalyst turns it into partial (map-side) + final
   *     aggregation, which is exactly the reference's edge-partition-local
   *     reduce + cross-GPU allreduce.
-  *   - `Iterate.loop` ≙ the host-side iteration driver with convergence
-  *     checks (`pagerank_impl.cuh:311`), plus lineage control: each round is
-  *     `localCheckpoint`ed so 100-round loops don't build 100-deep plans.
+  *   - `Iterate.fixpoint` ≙ the host-side iteration driver with its
+  *     per-round convergence check (`pagerank_impl.cuh:311`), plus lineage
+  *     control: each round is materialized (`Iterate.materialize`) so
+  *     100-round loops don't build 100-deep plans, and the previous round's
+  *     blocks are freed.
   *   - `topKPerKey` ≙ the per-source top-k / fanout-sampling pattern
   *     (`transform_reduce_v_frontier_outgoing_e_by_dst.cuh` + sampling).
   *   - a broadcast-join lookup ≙ `kv_store.cuh`.
@@ -121,60 +123,50 @@ object Iterate {
     }
   }
 
-  /** Iteration driver for fixed-point DataFrame loops.
+  /** The fixpoint driver for iterative kernels — the host-side loop of the
+    * reference (`pagerank_impl.cuh:311`); like Pregelix's and RaSQL's, one
+    * loop serves every recursive program written on it.
     *
-    * Each step maps the current state DataFrame to the next; every
-    * `checkpointEvery` rounds the state is materialized to truncate lineage — the Spark analogue of the reference keeping device
-    * buffers across iterations instead of replaying the whole history.
-    * `converged` (optional) is evaluated every `checkEvery` rounds; it costs
-    * a job, so convergence checks are batched exactly as SURVEY §7.4-1
-    * prescribes.
-    */
-  def loop(init: DataFrame, maxIter: Int,
-           step: (DataFrame, Int) => DataFrame,
-           converged: (DataFrame, DataFrame) => Boolean = null,
-           checkEvery: Int = 1,
-           checkpointEvery: Int = 3,
-           releasePrev: Boolean = false): DataFrame =
-    loopWithStatus(init, maxIter, step, converged, checkEvery, checkpointEvery,
-      releasePrev)._1
+    * `init` is a materialized frame the driver owns from the call on. Each
+    * round maps the state to `step(state, round)` (rounds count from 0) and
+    * materializes it, reading `metric` (an aggregate over the round's rows)
+    * off the same job through [[materializeCount]]; without a metric the
+    * stop rule sees -1. `stop(prev, next, metric)` then decides whether
+    * `next` is the fixpoint, and `prev` is freed ([[Release.free]]): the
+    * step and the stop rule must not keep a state frame past its round.
+    * The loop ends when the stop rule fires or after `maxIter` rounds, and
+    * runs in the regime `rows` selects ([[Regime.scope]]).
+    *
+    * @return (final state, rounds run, converged); converged is false only
+    *         when `maxIter` ended a loop whose stop rule never fired. */
+  def fixpoint(init: DataFrame, maxIter: Int, rows: Long)(
+      step: (DataFrame, Int) => DataFrame, metric: Option[Column],
+      stop: (DataFrame, DataFrame, Long) => Boolean): (DataFrame, Int, Boolean) =
+    fixpoint(init, maxIter, rows, rows)(step, metric, stop)
 
-  /** [[loop]] plus the convergence outcome: (final state, converged,
-    * iterations run). With no `converged` predicate (fixed-iteration mode)
-    * the flag is vacuously true — there is no tolerance contract to miss.
-    * Feeds the reference's `fail_on_nonconvergence` surface
-    * (`link_analysis/pagerank.py:78`). */
-  /** `releasePrev`: eagerly [[Release.free]] the PREVIOUS materialized
-    * state once the next one is materialized (and any convergence check on
-    * the pair has run). Safe iff `step`/`converged` never retain an old
-    * state frame outside the loop — with it a 100-round loop holds ONE
-    * state's checkpoint blocks instead of 100 (the composed-operator heap
-    * finding, BASELINE.md round-10). */
-  def loopWithStatus(init: DataFrame, maxIter: Int,
-                     step: (DataFrame, Int) => DataFrame,
-                     converged: (DataFrame, DataFrame) => Boolean = null,
-                     checkEvery: Int = 1,
-                     checkpointEvery: Int = 3,
-                     releasePrev: Boolean = false): (DataFrame, Boolean, Int) = {
-    var cur = materialize(init)
-    var lastMat = cur
-    var it = 0
-    var done = false
-    while (it < maxIter && !done) {
-      val nxt0 = step(cur, it)
-      val wasMat = (it + 1) % checkpointEvery == 0 || converged != null
-      val nxt = if (wasMat) materialize(nxt0) else nxt0
-      if (converged != null && (it + 1) % checkEvery == 0)
-        done = converged(cur, nxt)
-      if (releasePrev && wasMat && (lastMat ne nxt)) {
-        Release.free(lastMat)
-        lastMat = nxt
+  /** [[fixpoint]] gated on `rows` with the reduce width sized to
+    * `widthRows` (see [[Regime.scope]]). */
+  def fixpoint(init: DataFrame, maxIter: Int, rows: Long, widthRows: Long)(
+      step: (DataFrame, Int) => DataFrame, metric: Option[Column],
+      stop: (DataFrame, DataFrame, Long) => Boolean): (DataFrame, Int, Boolean) =
+    Regime.scope(init.sparkSession, rows, widthRows) {
+      var state = init
+      var round = 0
+      var done = false
+      while (!done && round < maxIter) {
+        val raw = step(state, round)
+        val (next, m) = metric match {
+          case Some(mc) => materializeCount(raw, mc,
+            d => Option(d.agg(mc).first().get(0)).fold(0L)(_.asInstanceOf[Number].longValue))
+          case None => (materialize(raw), -1L)
+        }
+        done = stop(state, next, m)
+        Release.free(state)
+        state = next
+        round += 1
       }
-      cur = nxt
-      it += 1
+      (state, round, done)
     }
-    (cur, converged == null || done, it)
-  }
 }
 
 /** The packed-chunk row store behind [[Iterate.materialize]]: a partition
@@ -280,9 +272,13 @@ object Mat {
   * between pipeline stages: free a phase's buffers the moment the next
   * phase's input is materialized.
   *
-  * [[free]] walks the frame's RDD lineage and unpersists the FIRST
-  * persisted ancestor on each branch (the chunk RDD — lineage below it was
-  * already truncated). Call it ONLY on frames whose
+  * [[free]] finds the `LogicalRDD` leaves of the frame's analyzed plan —
+  * the read side of every materialized frame it derives from, through any
+  * projection, union or broadcast hint — and unpersists the FIRST
+  * persisted RDD on each branch below them (the chunk RDD — lineage below
+  * it was already truncated). It neither plans nor executes the frame
+  * (`df.rdd` did both, and ran the build job of any broadcast join in it).
+  * Call it ONLY on frames whose
   * data can never be read again: a loop state after the next state is
   * materialized, a phase input after the phase output is materialized.
   * Reading a freed frame throws (localCheckpointed RDDs cannot recompute),
@@ -305,7 +301,7 @@ object Release {
     * loop code can free an optional carried frame unconditionally. */
   def free(dfs: DataFrame*): Unit = {
     quietUnpersistWarn
-    dfs.foreach(df => if (df != null) freeRdd(df.rdd))
+    dfs.foreach(df => if (df != null) RowShim.leafRdds(df).foreach(freeRdd))
   }
 
   private def freeRdd(rdd: RDD[_]): Unit =

@@ -228,19 +228,36 @@ object GraphStream {
     *   emitted pairs can never be late against it.
     *
     * Both confs are read when the query STARTS, so wrap the `.start()` (or
-    * the whole drain); restoring afterwards does not affect a running query. */
+    * the whole drain); restoring afterwards does not affect a running query.
+    *
+    * With the check disabled, Spark's `UnsupportedOperationChecker` still
+    * logs the pattern it would have rejected, as a WARN with a full
+    * AnalysisException stack — for a query that is safe by the argument
+    * above. That logger is raised to ERROR for the body and restored
+    * after, so a correctness log shows an exception only for a failure. */
   def withLshStreamingConfs[T](spark: SparkSession)(body: => T): T = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.config.Configurator
     val wanted = Seq(
       "spark.sql.streaming.statefulOperator.checkCorrectness.enabled" -> "false",
       "spark.sql.streaming.multipleWatermarkPolicy" -> "max")
     val prior = wanted.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val priorLevel = LogManager.getLogger(CheckerLogger).getLevel
     wanted.foreach { case (k, v) => spark.conf.set(k, v) }
+    Configurator.setLevel(CheckerLogger, Level.ERROR)
     try body
-    finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
+    finally {
+      Configurator.setLevel(CheckerLogger, priorLevel)
+      prior.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
+      }
     }
   }
+
+  /** The logger [[withLshStreamingConfs]] quiets for its body. */
+  private val CheckerLogger =
+    "org.apache.spark.sql.catalyst.analysis.UnsupportedOperationChecker"
 
   /** Parse the watermark-delay grammar's common units to milliseconds
     * (the same strings `withWatermark` accepts: "10 minutes", "4 hours").

@@ -4,7 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.types.StructType
 
 /** InternalRow ⇄ DataFrame bridge for the packed checkpoint
@@ -30,4 +30,10 @@ object RowShim {
   def fromInternalRows(spark: SparkSession, rows: RDD[InternalRow],
                        schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
+  /** The RDDs under the `LogicalRDD` leaves of `df`'s analyzed plan — for a
+    * frame read from materialized frames, their stored rows — found without
+    * planning or executing `df`. */
+  def leafRdds(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
 }

@@ -47,22 +47,6 @@ class ApiSpec extends SparkSpec {
     assert(mixed.isBipartite)
   }
 
-  test("bipartiteBatch agrees with per-graph isBipartite (r11-opt batched loop)") {
-    val even = graphOf(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)), directed = false)
-    val odd = graphOf(Seq((1L, 2L), (2L, 3L), (3L, 1L)), directed = false)
-    val mixed = graphOf(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (10L, 11L)),
-      directed = false)
-    // one batched fixpoint over all three; booleans must match the
-    // single-graph method exactly (including the straggler case: odd
-    // converges later than even — the converged graphs' rows must not move)
-    val r = graft.core.Structure.bipartiteBatch(
-      Seq("even" -> even, "odd" -> odd, "mixed" -> mixed))
-    assert(r("even") === even.isBipartite)
-    assert(r("odd") === odd.isBipartite)
-    assert(r("mixed") === mixed.isBipartite)
-    assert(r("even") && !r("odd") && r("mixed"))
-  }
-
   test("is_multigraph and is_weighted predicates") {
     val multi = graphOf(Seq((1L, 2L), (1L, 2L), (2L, 3L)))
     assert(multi.isMultigraph)

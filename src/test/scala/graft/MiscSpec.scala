@@ -63,6 +63,35 @@ class MiscSpec extends SparkSpec {
     assert(b.count() == 100) // b's blocks are its own — unaffected
     // the freed frame can no longer be computed (localCheckpoint truncation)
     intercept[Exception] { a.count() }
+    // frames derived from materialized ones, as WCC and Louvain free them:
+    // a projection, a union and a Hint.state broadcast each drop the chunks
+    // of every materialized frame they read
+    def ids(n: Int) = spark.range(n).toDF("id").mat
+    val live = ids(50)
+    val (p, u1, u2, h) = (ids(10), ids(20), ids(30), ids(40))
+    val derived = Seq(p.select((col("id") + 1).as("x")), u1.union(u2),
+      graft.prims.Hint.state(h, 40L))
+    Release.free(derived: _*)
+    Seq(p, u1, u2, h).foreach(f => intercept[Exception] { f.count() })
+    assert(live.count() == 50)
+    // freeing neither plans nor runs the frame: a broadcast join's build
+    // side is not executed
+    val (k, j) = (ids(30), ids(60))
+    val joined = k.join(graft.prims.Hint.state(j, 60L), "id")
+    assert(jobsIn(Release.free(joined)) == 0)
+    Seq(k, j).foreach(f => intercept[Exception] { f.count() })
+  }
+
+  test("Fixtures.evictSession frees an evicted fixture's blocks; a re-fetch rebuilds it") {
+    // a session of its own, so the shared test session's fixtures stay cached
+    val s2 = spark.newSession()
+    val e1 = Fixtures.rmatGraph(s2).edges
+    val n = e1.count()
+    Fixtures.evictSession(s2)
+    intercept[Exception] { e1.count() }
+    val e2 = Fixtures.rmatGraph(s2).edges
+    assert(!(e2 eq e1) && e2.count() == n)
+    Fixtures.evictSession(s2)
   }
 
   test("weighted matching is a valid matching over existing edges") {

@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.prims.{Iterate, Regime}
 
-/** The packed-chunk store behind `Iterate.materialize` and the regime prim. */
+/** The packed-chunk store behind `Iterate.materialize`, the fixpoint
+  * driver and the regime prim. */
 class PrimsSpec extends SparkSpec {
 
   private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Row] =
@@ -71,6 +72,53 @@ class PrimsSpec extends SparkSpec {
       cur = nx
     }
     assert(scans == 0)
+  }
+
+  private def ids(n: Int): DataFrame = Iterate.materialize(spark.range(n).toDF("id"))
+  private val bump = (s: DataFrame, _: Int) => s.select((col("id") + 1).as("id"))
+  private def maxId(df: DataFrame): Long = df.agg(max("id")).first().getLong(0)
+
+  test("fixpoint: the cap ends an unconverged loop; a stop rule firing on the cap round converges") {
+    val (st, rounds, converged) = Iterate.fixpoint(ids(10), 3, 10L)(bump, None, (_, _, _) => false)
+    assert(rounds == 3 && !converged)
+    assert(maxId(st) == 12)
+    var calls = 0
+    val (_, r2, c2) = Iterate.fixpoint(ids(10), 3, 10L)(bump, None,
+      { (_, _, _) => calls += 1; calls == 3 })
+    assert(r2 == 3 && c2)
+    // no round at all: the init comes back as it went in
+    val init = ids(4)
+    val (st0, r0, c0) = Iterate.fixpoint(init, 0, 4L)(bump, None, (_, _, _) => true)
+    assert((st0 eq init) && r0 == 0 && !c0 && st0.count() == 4)
+  }
+
+  test("fixpoint: the stop rule sees prev and next; every state but the last is freed") {
+    val seen = scala.collection.mutable.ArrayBuffer[(DataFrame, DataFrame, Long)]()
+    val (st, rounds, converged) = Iterate.fixpoint(ids(5), 10, 5L)(bump, Some(max("id")),
+      { (prev, next, m) =>
+        // both states are still readable inside the stop rule
+        assert(maxId(next) == maxId(prev) + 1)
+        seen += ((prev, next, m))
+        m >= 7
+      })
+    assert(converged && rounds == 3)
+    assert(seen.map(_._3) == Seq(5L, 6L, 7L))
+    assert(seen.last._2 eq st)
+    assert(st.count() == 5 && maxId(st) == 7)
+    // the init and rounds 1–2 were freed: reading them throws
+    seen.map(_._1).foreach(prev => intercept[Exception](prev.count()))
+  }
+
+  test("fixpoint: the observed metric adds no job") {
+    val never = (_: DataFrame, _: DataFrame, _: Long) => false
+    var metrics = Seq.empty[Long]
+    val withMetric = jobsIn {
+      Iterate.fixpoint(ids(100), 4, 100L)(bump, Some(sum(when(col("id") % 2 === 0, 1L))),
+        { (_, _, m) => metrics :+= m; false })
+    }
+    val without = jobsIn(Iterate.fixpoint(ids(100), 4, 100L)(bump, None, never))
+    assert(metrics == Seq(50L, 50L, 50L, 50L))
+    assert(withMetric == without, s"$withMetric jobs with the metric, $without without")
   }
 
   test("a QueryExecutionListener sees the materialized plan") {

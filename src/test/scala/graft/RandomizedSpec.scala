@@ -77,21 +77,24 @@ class RandomizedSpec extends SparkSpec {
       }
       ok
     }
-    def check(es: Seq[(Long, Long)], tag: String): Unit = if (es.nonEmpty) {
-      val und = Structure.symmetrize(edgeDF(es))
-      val g = PropertyGraph(Structure.extractVertexList(und), und,
-        GraphProperties(directed = false))
-      assert(g.isBipartite == brute(es), tag)
-    }
-    for (seed <- 1L to 3L) {
-      check(randomEdges(24, 0.09, seed), s"gnp seed $seed")
+    val cases = (1L to 3L).flatMap { seed =>
       // random bipartite: left ids 0..11, right 12..23
       val rng = new scala.util.Random(seed * 7 + 1)
       val bip = for { i <- 0L until 12L; j <- 12L until 24L
                       if rng.nextDouble() < 0.15 } yield (i, j)
-      check(bip, s"bipartite seed $seed")
-      if (bip.nonEmpty) check(bip :+ ((2L, 5L)), s"odd-cycled seed $seed")
-    }
+      Seq(s"gnp seed $seed" -> randomEdges(24, 0.09, seed),
+        s"bipartite seed $seed" -> bip) ++
+        (if (bip.nonEmpty) Seq(s"odd-cycled seed $seed" -> (bip :+ ((2L, 5L)))) else Nil)
+    }.filter(_._2.nonEmpty)
+    // every graph in ONE batched fixpoint: the graphs converge in different
+    // rounds, and a converged graph's rows must not move while the rest run
+    val got = Structure.bipartiteBatch(cases.map { case (tag, es) =>
+      val und = Structure.symmetrize(edgeDF(es))
+      tag -> PropertyGraph(Structure.extractVertexList(und), und,
+        GraphProperties(directed = false))
+    })
+    assert(cases.exists(c => brute(c._2)) && cases.exists(c => !brute(c._2)))
+    cases.foreach { case (tag, es) => assert(got(tag) == brute(es), tag) }
   }
 
   test("BFS distances equal brute-force levels on random graphs") {

@@ -60,6 +60,16 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     all.filterNot(_._2.contains(sentinel))
   }
 
+  /** Spark jobs `body` submits from this thread, counted through a job
+    * group the status tracker reports synchronously. */
+  def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobs_in_${System.nanoTime()}"
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
   def graphOf(edges: Seq[(Long, Long)], directed: Boolean = true): core.PropertyGraph =
     core.PropertyGraph(core.Structure.extractVertexList(edgeDF(edges)), edgeDF(edges),
       core.GraphProperties(directed = directed))

@@ -136,7 +136,12 @@ class StreamingSpec extends SparkSpec {
     val polKey = "spark.sql.streaming.multipleWatermarkPolicy"
     val priorCheck = sp.conf.getOption(checkKey)
     val priorPol = sp.conf.getOption(polKey)
+    // the checker's WARN for the disabled check is quieted for the body only
+    val checker = org.apache.logging.log4j.LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.analysis.UnsupportedOperationChecker")
+    val priorLevel = checker.getLevel
     val q = GraphStream.withLshStreamingConfs(sp) {
+      assert(checker.getLevel == org.apache.logging.log4j.Level.ERROR)
       result.writeStream.format("memory").queryName("slsh_wm")
         .outputMode("append").start()
     }
@@ -144,6 +149,7 @@ class StreamingSpec extends SparkSpec {
     // the same session ran with the safety check silenced)
     assert(sp.conf.getOption(checkKey) == priorCheck)
     assert(sp.conf.getOption(polKey) == priorPol)
+    assert(checker.getLevel == priorLevel)
     try {
       val near = "the quick brown fox jumps over the lazy dog again and again"
       val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
