@@ -249,7 +249,7 @@ object Fixtures {
         m.remove(key).foreach(v => graft.prims.Release.free(frames(v): _*)))
     evict(cache)(Seq(_))
     evict(l1Cache)(v => Seq(v._1))
-    evict(brandesCache)(b => Seq(b.delta, b.settled, b.verts))
+    evict(brandesCache)(b => Seq(b.delta, b.settled, b.verts, b.edges))
     evict(countCache)(_ => Nil)
   }
   def supplierSimNV(spark: SparkSession, dir: String): Long =

@@ -4,7 +4,8 @@ import graft.prims.Mat._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.{PropertyGraph, Structure, Gr}
-import graft.prims.{Hint, Regime}
+import graft.prims.{Hint, Iterate, Regime, Release}
+import Traversal.Fresh
 
 /** Katz / eigenvector / HITS / degree centrality — the PageRank-shaped
   * dense-iteration family, plus Brandes betweenness.
@@ -80,7 +81,9 @@ object Centrality {
     // edge attach is Hint.state-broadcast, the remaining per-round joins
     // are V-row-sized — AQE's per-exchange stage jobs were pure scheduler
     // floor on this loop (same audit as the r11-opt PageRank change).
-    PageRank.powerIterate(init, maxIter, nV, "katz", tol)(step)
+    val res = PageRank.powerIterate(init, maxIter, nV, "katz", tol)(step)
+    Release.free(verts, e)
+    res
   }
 
   /** Eigenvector centrality — power iteration with L2 normalization per
@@ -95,7 +98,7 @@ object Centrality {
     // entry so a long power iteration holds one round's blocks, not all
     var prevRaw: DataFrame = null
     val step = { (c: DataFrame, _: Int) =>
-      graft.prims.Release.free(prevRaw)
+      Release.free(prevRaw)
       val in = e.join(Hint.state(c.withColumnRenamed(ID, SRC), nV.toLong), SRC)
         .groupBy(col(DST).as(ID)).agg(sum(col("ec") * col(WEIGHT)).as("in_sum"))
       val raw = verts.join(in, Seq(ID), "left")
@@ -106,7 +109,9 @@ object Centrality {
       raw.select(col(ID), (col("ec") / lit(if (norm == 0) 1.0 else norm)).as("ec"))
     }
     // scoped AQE-off under the gate — same rationale as katzRaw (r11-opt)
-    PageRank.powerIterate(init, maxIter, nV.toLong, "ec", tol)(step)._1
+    val res = PageRank.powerIterate(init, maxIter, nV.toLong, "ec", tol)(step)._1
+    Release.free(prevRaw, verts, e)
+    res
   }
 
   /** HITS hubs & authorities, sum-normalized each half-round
@@ -146,7 +151,7 @@ object Centrality {
     // once the loop materializes the round's output — free at next entry
     var prevIntra: Seq[DataFrame] = Nil
     val step = { (hs: DataFrame, _: Int) =>
-      graft.prims.Release.free(prevIntra: _*)
+      Release.free(prevIntra: _*)
       // authorities(v) = Σ hubs(u) over u→v, then sum-normalize
       val auth0 = e.join(Hint.state(hs.select(col(ID).as(SRC), col("hubs")), nV), SRC)
         .groupBy(col(DST).as(ID)).agg(sum("hubs").as("a"))
@@ -167,6 +172,7 @@ object Centrality {
     }
     // scoped AQE-off under the gate — same rationale as katzRaw (r11-opt)
     val res = PageRank.powerIterate(init, maxIter, nV, "hubs", tol)(step)._1
+    Release.free(prevIntra :+ verts :+ e: _*)
     if (normalized) res // per-round sum-normalization already left sum = 1
     else {
       // reference normalize=false scale: last in-loop step is max-divide
@@ -201,7 +207,8 @@ object Centrality {
     betweennessWithLevels(g, k, seed, normalized, directed, endpoints)._1
 
   /** The Brandes forward/backward state pair: final dependency table,
-    * settled reach set, vertex list, |V|, BFS level count. The expensive
+    * settled reach set, vertex list, |V|, BFS level count, and the edge
+    * table the levels walked (symmetrized unless directed). The expensive
     * part of every betweenness variant — the plain and endpoints=True
     * scorings are each ONE cheap aggregation pass over these states
     * (reference betweenness_centrality.py computes both from the same
@@ -210,7 +217,8 @@ object Centrality {
     * Fixtures, the same kernel-sharing rule as the similarity and
     * triangle-support tables (r11-opt). */
   final case class BrandesStates(delta: DataFrame, settled: DataFrame,
-                                 verts: DataFrame, nV: Double, levels: Int)
+                                 verts: DataFrame, nV: Double, levels: Int,
+                                 edges: DataFrame)
 
   /** Betweenness also returning the BFS level count (longest shortest path
     * from any root) so oracle queries can assert the unrolled SQL's level
@@ -219,6 +227,9 @@ object Centrality {
                   normalized: Boolean = true, directed: Boolean = false,
                   endpoints: Boolean = false): (DataFrame, Int) = {
     val s = brandesStates(g, k, seed, directed)
+    // the scoring reads delta and verts, and settled only for endpoints
+    Release.free(s.edges)
+    if (!endpoints) Release.free(s.settled)
     (betweennessFromStates(s, k, normalized, directed, endpoints), s.levels)
   }
 
@@ -237,79 +248,60 @@ object Centrality {
       case Some(kk) => verts.orderBy(
         graft.pipeline.TextOps.hash60(concat_ws("|", lit("bc"), col(ID), lit(seed))), col(ID)).limit(kk)
       case None => verts
-    }).select(col(ID).as("root")).mat
+    }).select(col(ID).as("root"))
     // every Brandes state table is ≤ roots × |V| rows; when that bound
     // clears the broadcast gate the per-level joins against the edge table
     // go map-side (one shuffle per level — the aggregation — instead of
-    // three). σ sums are integral-valued doubles, so partial-agg regrouping
-    // under the changed join shape cannot perturb them.
-    val nVL = nV.toLong
-    val nRoots = k.map(_.toLong).getOrElse(nVL)
-    val stateBound =
-      if (nVL > 0 && nRoots > 0 && nRoots <= Regime.BroadcastRows / nVL) nRoots * nVL else -1L
-    def st(df: DataFrame): DataFrame = graft.prims.Hint.state(df, stateBound)
-    // AQE off for the level loops when the state bound clears the broadcast
-    // gate — every join inside is then explicitly broadcast-hinted, and
-    // AQE's per-exchange query-stage jobs are pure scheduler floor (~2
-    // extra jobs per BFS level; see prims.Aqe). Past the gate the joins are
-    // stats-blind SMJs where AQE's runtime broadcast/skew rescue earns its
-    // keep, so it stays on.
-
-    // forward multi-source BFS: settled(root, id, dist, sigma)
-    var settled = roots.select(col("root"), col("root").as(ID),
-      lit(0).as("dist"), lit(1.0).as("sigma")).mat
-    var frontier = settled
-    var level = 0
-    var more = true
-    var delta: DataFrame = null
+    // three), and the levels run with AQE off (prims.Regime): every join
+    // inside is then explicitly broadcast-hinted, and AQE's per-exchange
+    // query-stage jobs are pure scheduler floor (~2 extra jobs per BFS
+    // level). Past the gate the joins are stats-blind SMJs where AQE's
+    // runtime broadcast/skew rescue earns its keep, so it stays on. σ sums
+    // are integral-valued doubles, so partial-agg regrouping under the
+    // changed join shape cannot perturb them.
+    val stateBound = Traversal.stateRows(k.map(_.toLong).getOrElse(nV.toLong), nV.toLong)
+    def st(df: DataFrame): DataFrame = Hint.state(df, stateBound)
     Regime.scope(verts.sparkSession, stateBound) {
-    while (more) {
-      level += 1
-      // frontier-size check rides the materialization job; `settled` stays
-      // a lazy union of the per-level checkpointed frames (re-copying the
-      // whole reach set every level was O(levels × |settled|) for nothing
-      // — each member is already partition-local)
-      val (next, nNext) = graft.prims.Iterate.materializeCount(
-        st(frontier.withColumnRenamed(ID, SRC)).join(e, SRC)
+      // forward multi-source BFS: settled(root, id, dist, sigma), the level
+      // reached last marked — the frontier loop's state shape
+      val forward = { (state: DataFrame, r: Int) =>
+        val reached = st(state.filter(col(Fresh)).drop(Fresh).withColumnRenamed(ID, SRC))
+          .join(e, SRC)
           .select(col("root"), col(DST).as(ID), col("sigma"))
-          .join(st(settled.select(col("root"), col(ID)).withColumn("_seen", lit(1))),
-            Seq("root", ID), "left_anti")
+          .join(st(state.select(col("root"), col(ID))), Seq("root", ID), "left_anti")
           .groupBy("root", ID).agg(sum("sigma").as("sigma"))
-          .withColumn("dist", lit(level))
-          .select("root", ID, "dist", "sigma"),
-        count(lit(1)), _.count())
-      if (nNext == 0) more = false
-      else {
-        // settled IS re-materialized: the backward sweep filters it once
-        // per level and the anti-join broadcasts it every forward level —
-        // a single compact RDD beats a growing union chain for both
-        settled = settled.union(next).mat
-        frontier = next
+          .select(col("root"), col(ID), lit(r + 1).as("dist"), col("sigma"), lit(true).as(Fresh))
+        state.withColumn(Fresh, lit(false)).union(reached)
       }
+      val init = roots.select(col("root"), col("root").as(ID),
+        lit(0).as("dist"), lit(1.0).as("sigma"), lit(true).as(Fresh)).mat
+      val (fwd, levels, _) = Iterate.fixpoint(init, Int.MaxValue, stateBound)(
+        forward, Some(Traversal.freshRows), (_, _, n) => n == 0)
+      val settled = fwd.drop(Fresh)
+      // backward sweep by descending level l = levels-1 … 0, one per round
+      val backward = { (delta: DataFrame, r: Int) =>
+        val l = levels - 1 - r
+        // the level frame rides the same size-gated broadcast as every other
+        // state join (delta streams exchange-free; unhinted this was a
+        // stats-blind SMJ sorting both sides each level)
+        val wState = delta
+          .join(st(settled.filter(col("dist") === l + 1)), Seq("root", ID))
+          .select(col("root"), col(ID).as(DST), col("sigma").as("sigma_w"), col("delta").as("delta_w"))
+        val contrib = e.join(st(wState), DST)
+          .select(col("root"), col(SRC).as(ID), col("sigma_w"), col("delta_w"))
+          .join(st(settled.filter(col("dist") === l).select(col("root"), col(ID), col("sigma"))),
+            Seq("root", ID))
+          .select(col("root"), col(ID),
+            (col("sigma") / col("sigma_w") * (lit(1.0) + col("delta_w"))).as("c"))
+          .groupBy("root", ID).agg(sum("c").as("inc"))
+        delta.join(st(contrib), Seq("root", ID), "left")
+          .select(col("root"), col(ID), (col("delta") + coalesce(col("inc"), lit(0.0))).as("delta"))
+      }
+      val (delta, _, _) = Iterate.fixpoint(
+        settled.select(col("root"), col(ID), lit(0.0).as("delta")).mat, levels, stateBound)(
+        backward, None, (_, _, _) => false)
+      BrandesStates(delta, settled, verts, nV, levels, e)
     }
-    // backward sweep by descending level
-    delta = settled.select(col("root"), col(ID), lit(0.0).as("delta"))
-      .mat
-    for (l <- level - 1 to 0 by -1) {
-      // the level frame rides the same size-gated broadcast as every other
-      // state join (delta streams exchange-free; unhinted this was a
-      // stats-blind SMJ sorting both sides each level)
-      val wState = delta
-        .join(st(settled.filter(col("dist") === l + 1)), Seq("root", ID))
-        .select(col("root"), col(ID).as(DST), col("sigma").as("sigma_w"), col("delta").as("delta_w"))
-      val contrib = e.join(st(wState), DST)
-        .select(col("root"), col(SRC).as(ID), col("sigma_w"), col("delta_w"))
-        .join(st(settled.filter(col("dist") === l).select(col("root"), col(ID), col("sigma"))),
-          Seq("root", ID))
-        .select(col("root"), col(ID),
-          (col("sigma") / col("sigma_w") * (lit(1.0) + col("delta_w"))).as("c"))
-        .groupBy("root", ID).agg(sum("c").as("inc"))
-      delta = delta.join(st(contrib), Seq("root", ID), "left")
-        .select(col("root"), col(ID), (col("delta") + coalesce(col("inc"), lit(0.0))).as("delta"))
-        .mat
-    }
-    }
-    BrandesStates(delta, settled, verts, nV, level)
   }
 
   /** The scoring tail of [[betweennessWithLevels]] over precomputed states:
@@ -363,63 +355,9 @@ object Centrality {
     * @return (DataFrame(src, dst, betweenness_centrality), levels). */
   def edgeBetweennessWithLevels(g: PropertyGraph, k: Option[Int] = None, seed: Long = 42,
                                 normalized: Boolean = true): (DataFrame, Int) = {
-    val e = Structure.symmetrize(g.edges.select(SRC, DST)).mat
-    val verts = g.vertices.select(ID).mat
-    val nV = verts.count().toDouble
-    val roots = (k match {
-      case Some(kk) => verts.orderBy(
-        graft.pipeline.TextOps.hash60(concat_ws("|", lit("bc"), col(ID), lit(seed))), col(ID)).limit(kk)
-      case None => verts
-    }).select(col(ID).as("root")).mat
-    // same roots × |V| broadcast bound as the vertex variant
-    val nVL = nV.toLong
-    val nRoots = k.map(_.toLong).getOrElse(nVL)
-    val stateBound =
-      if (nVL > 0 && nRoots > 0 && nRoots <= Regime.BroadcastRows / nVL) nRoots * nVL else -1L
-    def st(df: DataFrame): DataFrame = graft.prims.Hint.state(df, stateBound)
-    // same AQE gating as the vertex variant (prims.Aqe) — loops only; the
-    // final contribE three-way join deliberately stays under Catalyst+AQE
-    // planning (the measured-2.7×-faster unhinted route below)
-
-    var settled = roots.select(col("root"), col("root").as(ID),
-      lit(0).as("dist"), lit(1.0).as("sigma")).mat
-    var frontier = settled
-    var level = 0
-    var more = true
-    var delta: DataFrame = null
-    Regime.scope(verts.sparkSession, stateBound) {
-    while (more) {
-      level += 1
-      // same shape as the vertex variant: count rides the materialization,
-      // settled stays a lazy union of checkpointed level frames
-      val (next, nNext) = graft.prims.Iterate.materializeCount(
-        st(frontier.withColumnRenamed(ID, SRC)).join(e, SRC)
-          .select(col("root"), col(DST).as(ID), col("sigma"))
-          .join(st(settled.select(col("root"), col(ID))), Seq("root", ID), "left_anti")
-          .groupBy("root", ID).agg(sum("sigma").as("sigma"))
-          .withColumn("dist", lit(level))
-          .select("root", ID, "dist", "sigma"),
-        count(lit(1)), _.count())
-      if (nNext == 0) more = false
-      else { settled = settled.union(next).mat; frontier = next }
-    }
-    delta = settled.select(col("root"), col(ID), lit(0.0).as("delta")).mat
-    for (l <- level - 1 to 0 by -1) {
-      val wState = delta
-        .join(st(settled.filter(col("dist") === l + 1)), Seq("root", ID))
-        .select(col("root"), col(ID).as(DST), col("sigma").as("sigma_w"), col("delta").as("delta_w"))
-      val contrib = e.join(st(wState), DST)
-        .select(col("root"), col(SRC).as(ID), col("sigma_w"), col("delta_w"))
-        .join(st(settled.filter(col("dist") === l).select(col("root"), col(ID), col("sigma"))),
-          Seq("root", ID))
-        .select(col("root"), col(ID),
-          (col("sigma") / col("sigma_w") * (lit(1.0) + col("delta_w"))).as("c"))
-        .groupBy("root", ID).agg(sum("c").as("inc"))
-      delta = delta.join(st(contrib), Seq("root", ID), "left")
-        .select(col("root"), col(ID), (col("delta") + coalesce(col("inc"), lit(0.0))).as("delta"))
-        .mat
-    }
-    }
+    val s = brandesStates(g, k, seed, directed = false)
+    Release.free(s.verts) // the per-edge scoring reads the states and edges only
+    val (e, settled, delta, nV) = (s.edges, s.settled, s.delta, s.nV)
     // per-edge contributions over the shortest-path DAG edges
     val stateU = settled.select(col("root"), col(ID).as(SRC),
       col("dist").as("du"), col("sigma").as("su"))
@@ -449,6 +387,6 @@ object Centrality {
       full.select(col(SRC), col(DST),
         (col("raw") / lit(if (denom == 0) 1.0 else denom)).as("betweenness_centrality"))
     }
-    (res, level)
+    (res, s.levels)
   }
 }

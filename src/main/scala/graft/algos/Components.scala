@@ -356,15 +356,24 @@ object Components {
     var verts = g.vertices.select(ID).mat
     var result = spark.emptyDataset[(Long, Long)].toDF(ID, "component")
     // extracted SCCs accumulate as a LAZY union chain, compacted every 8
-    // appends (r11-opt, the Traversal.CompactEvery pattern): re-
-    // checkpointing the whole growing result on every trim iteration was
-    // one full result-sized write per peel for frames that are only read
-    // at the end.
+    // appends (r11-opt): re-checkpointing the whole growing result on every
+    // trim iteration was one full result-sized write per peel for frames
+    // that are only read at the end. A compaction frees the chain it copied.
     var resultChain = 0
     def appendResult(df: DataFrame): Unit = {
       result = result.union(df)
       resultChain += 1
-      if (resultChain >= 8) { result = result.mat; resultChain = 0 }
+      if (resultChain >= 8) {
+        val chain = result
+        result = result.mat; resultChain = 0
+        Release.free(chain)
+      }
+    }
+    // replace a remainder frame by its materialized successor, freeing it
+    def shrink(prev: DataFrame, next: DataFrame): DataFrame = {
+      val m = next.mat
+      Release.free(prev)
+      m
     }
     var round = 0
     var cap = propCap
@@ -384,13 +393,12 @@ object Components {
           count(lit(1)), _.count())
         trimmed = nDead
         if (trimmed > 0) {
-          appendResult(dead.select(col(ID), col(ID).as("component")))
-          verts = verts.join(dead, Seq(ID), "left_anti").mat
-          edges = edges
+          verts = shrink(verts, verts.join(dead, Seq(ID), "left_anti"))
+          edges = shrink(edges, edges
             .join(dead.withColumnRenamed(ID, SRC), Seq(SRC), "left_anti")
-            .join(dead.withColumnRenamed(ID, DST), Seq(DST), "left_anti")
-            .mat
-        }
+            .join(dead.withColumnRenamed(ID, DST), Seq(DST), "left_anti"))
+          appendResult(dead.select(col(ID), col(ID).as("component")))
+        } else Release.free(dead)
       }
       n = verts.count()
       if (n > 0) {
@@ -402,19 +410,21 @@ object Components {
             .filter(col("ml") === col("ml_b"))
             .select(col(ID), col("ml").as("component"))
             .mat
-          appendResult(done)
+          Release.free(fwd, bwd)
           val doneIds = done.select(ID)
-          verts = verts.join(doneIds, Seq(ID), "left_anti").mat
-          edges = edges
+          verts = shrink(verts, verts.join(doneIds, Seq(ID), "left_anti"))
+          edges = shrink(edges, edges
             .join(doneIds.withColumnRenamed(ID, SRC), Seq(SRC), "left_anti")
-            .join(doneIds.withColumnRenamed(ID, DST), Seq(DST), "left_anti")
-            .mat
+            .join(doneIds.withColumnRenamed(ID, DST), Seq(DST), "left_anti"))
+          appendResult(done)
           n = verts.count()
         } else {
+          Release.free(fwd, bwd)
           cap *= 2 // unconverged labels are unsafe to extract from; retry bigger
         }
       }
     }
+    Release.free(verts, edges)
     result
   }
 

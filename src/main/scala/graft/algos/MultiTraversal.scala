@@ -3,6 +3,7 @@ package graft.algos
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.{PropertyGraph, Gr}
+import graft.prims.{Iterate, Release}
 import graft.prims.Mat._
 
 /** Batched traversal surfaces: multi-source BFS, origin-destination
@@ -15,7 +16,9 @@ import graft.prims.Mat._
   * The batching trick is one extra key column: frontier state is keyed by
   * (source, vertex) instead of vertex, so B concurrent traversals cost the
   * same number of shuffles as one (each round's join moves B× rows, which
-  * is exactly the reference's batched-frontier layout — SURVEY §2.3).
+  * is exactly the reference's batched-frontier layout — SURVEY §2.3). The
+  * rounds are the loops under BFS and SSSP ([[Traversal.bfsLoop]],
+  * [[Traversal.bellmanFord]]), keyed by `source`.
   */
 object MultiTraversal {
   import Gr._
@@ -27,37 +30,9 @@ object MultiTraversal {
     msBfsWithRounds(g, sources, depthLimit)._1
 
   def msBfsWithRounds(g: PropertyGraph, sources: DataFrame,
-                      depthLimit: Int = Int.MaxValue): (DataFrame, Int) = {
-    val e = g.edges.select(SRC, DST).mat
-    var settled = sources.select(col("source"), col("source").as(ID),
-      lit(0).as("distance"), lit(-1L).as("predecessor")).mat
-    var frontier = settled.select("source", ID)
-    var depth = 0
-    var n = 1L
-    var chainLen = 0
-    while (n > 0 && depth < depthLimit) {
-      depth += 1
-      // frontier size rides the materialization job; settled stays a lazy
-      // union of the per-depth checkpointed frames
-      val (next, nNext) = graft.prims.Iterate.materializeCount(
-        e.join(graft.prims.Hint.state(frontier.withColumnRenamed(ID, SRC), n), SRC)
-          .groupBy(col("source"), col(DST).as(ID)).agg(min(SRC).as("predecessor"))
-          .join(settled.select("source", ID), Seq("source", ID), "left_anti")
-          .withColumn("distance", lit(depth))
-          .select("source", ID, "distance", "predecessor"),
-        count(lit(1)), _.count())
-      n = nNext
-      if (n > 0) {
-        settled = settled.union(next)
-        chainLen += 1
-        // periodic compaction: the per-depth anti-join replans the whole
-        // settled chain — O(depth²) planning on high-diameter graphs
-        if (chainLen >= 8) { settled = settled.mat; chainLen = 0 }
-        frontier = next.select("source", ID)
-      }
-    }
-    (settled, depth)
-  }
+                      depthLimit: Int = Int.MaxValue): (DataFrame, Int) =
+    Traversal.bfsLoop(g, sources.select(col("source"), col("source").as(ID)), Seq("source"),
+      depthLimit)
 
   /** Batched multi-seed ego graphs (reference `community/egonet.py:30`
     * batched_ego_graphs): ONE radius-bounded multi-source BFS settles every
@@ -92,40 +67,17 @@ object MultiTraversal {
 
   /** WEIGHTED origin-destination shortest distances — the reference's
     * `od_shortest_distances` semantics (`algorithms.hpp:1244`): a batched
-    * Bellman-Ford keyed by origin (state (source, id, distance)), then a
-    * semi-join onto the destination list. Returns also the round count for
-    * oracle budget asserts. */
+    * Bellman-Ford keyed by origin, then a semi-join onto the destination
+    * list. Returns also the round count for oracle budget asserts. */
   def odShortestDistancesWeighted(g: PropertyGraph, origins: DataFrame, dests: DataFrame,
                                   maxRounds: Int = 200): (DataFrame, Int) = {
-    val e = g.weightedEdges.select(SRC, DST, WEIGHT).mat
-    var dist = origins.select(col(origins.columns.head).as("source"))
-      .select(col("source"), col("source").as(ID), lit(0.0).as("distance")).mat
-    var improved = dist
-    var nImp = 1L
-    var round = 0
-    while (nImp > 0 && round < maxRounds) {
-      round += 1
-      val cand = e.join(graft.prims.Hint.state(
-          improved.select(col("source"), col(ID).as(SRC), col("distance").as("d_src")), nImp), SRC)
-        .select(col("source"), col(DST).as(ID), (col("d_src") + col(WEIGHT)).as("distance"))
-      val best = cand.groupBy("source", ID).agg(min("distance").as("distance"))
-      val next = dist.union(best)
-        .groupBy("source", ID).agg(min("distance").as("distance")).mat
-      val (imp, nI) = graft.prims.Iterate.materializeCount(
-        next.join(
-            dist.select(col("source"), col(ID), col("distance").as("d_old")),
-            Seq("source", ID), "left")
-          .filter(col("d_old").isNull || col("distance") < col("d_old"))
-          .select("source", ID, "distance"),
-        count(lit(1)), _.count())
-      nImp = nI
-      dist = next
-      improved = imp
-    }
+    val o = col(origins.columns.head)
+    val (dist, rounds) = Traversal.bellmanFord(g, origins.select(o.as("source"), o.as(ID)),
+      Seq("source"), maxRounds)
     val res = dist.join(dests.select(col(dests.columns.head).as(ID)), ID)
       .select(col("source").as("origin"), col(ID).as("destination"),
         col("distance"))
-    (res, round)
+    (res, rounds)
   }
 
   /** Reconstruct root-to-destination paths from a BFS predecessor table
@@ -133,25 +85,23 @@ object MultiTraversal {
     * (destination, pos, vertex) with pos 0 at the destination walking back
     * to the source — k rounds of self-join on the predecessor column. */
   def extractBfsPaths(bfs: DataFrame, dests: DataFrame, maxDepth: Int): DataFrame = {
+    import Traversal.Fresh
     val pred = bfs.select(col(ID), col("predecessor")).mat
-    var cur = dests.select(col(dests.columns.head).as("destination"))
+    // state: every path row so far, the last walked position marked
+    val init = dests.select(col(dests.columns.head).as("destination"))
       .join(pred, col("destination") === col(ID))
       .select(col("destination"), lit(0).as("pos"), col(ID).as("vertex"),
-        col("predecessor"))
+        col("predecessor"), lit(true).as(Fresh))
       .mat
-    var out = cur.select("destination", "pos", "vertex")
-    var p = 0
-    var n = cur.count()
-    while (p < maxDepth && n > 0) {
-      p += 1
-      cur = cur.filter(col("predecessor") =!= -1L)
-        .select(col("destination"), col("predecessor").as("vertex_next"), lit(p).as("pos"))
+    val (paths, _, _) = Iterate.fixpoint(init, maxDepth, -1L)({ (cur, p) =>
+      val hop = cur.filter(col(Fresh) && col("predecessor") =!= -1L)
+        .select(col("destination"), col("predecessor").as("vertex_next"))
         .join(pred, col("vertex_next") === col(ID))
-        .select(col("destination"), col("pos"), col(ID).as("vertex"), col("predecessor"))
-        .mat
-      n = cur.count()
-      if (n > 0) out = out.union(cur.select("destination", "pos", "vertex"))
-    }
-    out.select(col("destination"), col("pos").cast("long").as("pos"), col("vertex"))
+        .select(col("destination"), lit(p + 1).as("pos"), col(ID).as("vertex"),
+          col("predecessor"), lit(true).as(Fresh))
+      cur.withColumn(Fresh, lit(false)).union(hop)
+    }, Some(Traversal.freshRows), (_, _, n) => n == 0)
+    Release.free(pred)
+    paths.select(col("destination"), col("pos").cast("long").as("pos"), col("vertex"))
   }
 }

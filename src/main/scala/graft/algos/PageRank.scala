@@ -4,7 +4,7 @@ import graft.prims.Mat._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.{PropertyGraph, Gr}
-import graft.prims.{Iterate, Hint, Regime}
+import graft.prims.{Iterate, Hint, Regime, Release}
 
 /** PageRank / personalized PageRank — power iteration with dangling-mass
   * redistribution and L1 convergence, matching the reference contract
@@ -114,6 +114,7 @@ object PageRank {
           col("is_dang"))
     }
     val (result, converged) = powerIterate(init, maxIter, nVL, "pagerank", tol)(step)
+    Release.free(verts, outW, edges, reset)
     (result.select(col(ID), col("pagerank")), converged)
     }
 

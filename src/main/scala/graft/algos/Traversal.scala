@@ -1,10 +1,10 @@
 package graft.algos
 
-import graft.prims.Mat._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.{PropertyGraph, Gr}
-import graft.prims.{Hint, Regime}
+import graft.prims.{Hint, Iterate, Regime, Release}
+import graft.prims.Mat._
 
 /** BFS / SSSP / k-hop — level-synchronous frontier expansion.
   *
@@ -12,10 +12,13 @@ import graft.prims.{Hint, Regime}
   * optimization), `traversal/sssp_impl.cuh` (near-far relaxation),
   * python surface `traversal/bfs.py:69`, `traversal/sssp.py:108`.
   *
-  * Spark realization: the frontier is a DataFrame; one round = frontier ⋈
-  * edges → min-reduce by dst → anti-join/merge with settled state. Each
-  * round is a bounded shuffle on vertex id; `localCheckpoint` truncates
-  * lineage so depth-D traversals stay O(D) jobs, not O(D²) plan replay.
+  * Spark realization: one frontier loop on the fixpoint driver serves
+  * BFS, SSSP and their batched twins in [[MultiTraversal]] ([[bfsLoop]],
+  * [[bellmanFord]]). The loop state is the whole distance table with the
+  * rows reached or improved in the last round marked; one round = marked
+  * frontier ⋈ edges, reduced by vertex id and merged into the table. Each
+  * round is materialized (packed row chunks) and the previous one freed,
+  * so depth-D traversals stay O(D) jobs, not O(D²) plan replay.
   * Direction-optimizing BFS (top-down/bottom-up) is unnecessary here: the
   * bottom-up trick saves random memory probes on CPUs/GPUs, while in Spark
   * the cost model is shuffle volume — frontier⋈edges already only moves
@@ -28,46 +31,7 @@ object Traversal {
     * @return DataFrame(id, distance, predecessor); unreached vertices absent
     *         (reference marks them with sentinel; callers outer-join). */
   def bfs(g: PropertyGraph, source: Long, depthLimit: Int = Int.MaxValue): DataFrame =
-    // one regime scope for the whole traversal: the frontier join is
-    // Hint.state-hinted, the settled anti-join is V-row-sized
-    Regime.scope(g.spark, g.numVertices) {
-    val e = g.edges.select(SRC, DST).mat
-    var settled = g.spark.range(1).select(lit(source).as(ID),
-      lit(0).as("distance"), lit(-1L).as("predecessor")).mat
-    var frontier = settled.select(ID)
-    var depth = 0
-    var frontierCount = 1L
-    var chainLen = 0
-    while (frontierCount > 0 && depth < depthLimit) {
-      depth += 1
-      // frontier size rides the materialization job; settled stays a lazy
-      // union of the per-depth checkpointed frames
-      val (next, nNext) = graft.prims.Iterate.materializeCount(
-        e.join(Hint.state(frontier.withColumnRenamed(ID, SRC), frontierCount), SRC)
-          .groupBy(col(DST).as(ID)).agg(min(SRC).as("predecessor"))
-          .join(settled.select(ID), Seq(ID), "left_anti")
-          .withColumn("distance", lit(depth))
-          .select(ID, "distance", "predecessor"),
-        count(lit(1)), _.count())
-      frontierCount = nNext
-      if (frontierCount > 0) {
-        settled = settled.union(next)
-        chainLen += 1
-        // compact the lazy union chain periodically: each member is
-        // checkpointed, but the per-level anti-join replans the whole
-        // chain — O(depth²) cumulative planning on high-diameter graphs
-        // (line graphs) without this re-materialization
-        if (chainLen >= CompactEvery) { settled = settled.mat; chainLen = 0 }
-        frontier = next.select(ID)
-      }
-    }
-    settled
-    }
-
-  /** Union-chain compaction period for accumulator frames in level loops —
-    * long enough that the extra checkpoint job is amortized, short enough
-    * that plan size stays O(CompactEvery) per round. */
-  private val CompactEvery = 8
+    bfsLoop(g, g.spark.range(1).select(lit(source).as(ID)), Nil, depthLimit)._1
 
   /** Single-source shortest paths over non-negative weights — Bellman-Ford
     * style rounds (every round relaxes all edges out of improved vertices),
@@ -82,41 +46,102 @@ object Traversal {
     * round budget. */
   def ssspWithRounds(g: PropertyGraph, source: Long, cutoff: Double = Double.PositiveInfinity,
            maxRounds: Int = 200): (DataFrame, Int) =
-    // one regime scope for setup and rounds: the relaxation join is
-    // Hint.state-hinted, the merge and improvement joins are V-row-sized
-    Regime.scope(g.spark, g.numVertices) {
-    val e = g.weightedEdges.select(SRC, DST, WEIGHT).mat
-    var dist = g.spark.range(1).select(lit(source).as(ID),
-      lit(0.0).as("distance"), lit(-1L).as("predecessor")).mat
-    // improved = vertices whose distance changed last round (the frontier)
-    var improved = dist
-    var round = 0
-    var nImproved = 1L
-    while (nImproved > 0 && round < maxRounds) {
-      round += 1
-      val cand = e.join(Hint.state(improved.select(col(ID).as(SRC), col("distance").as("d_src")), nImproved), SRC)
-        .select(col(DST).as(ID), (col("d_src") + col(WEIGHT)).as("distance"), col(SRC).as("predecessor"))
+    bellmanFord(g, g.spark.range(1).select(lit(source).as(ID)), Nil, maxRounds, cutoff)
+
+  /** Marks the rows a round added or improved in a frontier loop's state. */
+  private[algos] val Fresh = "_fresh"
+
+  /** The frontier loop's metric and stop count: rows marked [[Fresh]]. */
+  private[algos] def freshRows: Column = sum(when(col(Fresh), 1L).otherwise(0L))
+
+  /** Rows of a state keyed by `nKeys` traversals over `nV` vertices, or -1
+    * when that bound does not clear the broadcast gate ([[Regime]]). */
+  private[algos] def stateRows(nKeys: Long, nV: Long): Long =
+    if (nV > 0 && nKeys > 0 && nKeys <= Regime.BroadcastRows / nV) nKeys * nV else -1L
+
+  /** Level-synchronous BFS, one traversal per row of `origins` (`keys` +
+    * `id`; `keys` is Nil for a single source). A round joins the frontier
+    * to the edges, keeps the minimum source per reached vertex (the
+    * deterministic min-predecessor tie-break) and drops the vertices the
+    * state already holds; the rest enter at distance round + 1.
+    * @return (keys…, id, distance: Int, predecessor), rounds run. */
+  private[algos] def bfsLoop(g: PropertyGraph, origins: DataFrame, keys: Seq[String],
+                             maxRounds: Int): (DataFrame, Int) = {
+    val k = keys.map(col)
+    frontierLoop(g, g.edges.select(SRC, DST), origins, keys, lit(0), maxRounds) {
+      (e, state, frontier, r) =>
+        val reached = e.join(frontier, SRC)
+          .groupBy(k :+ col(DST).as(ID): _*).agg(min(SRC).as("predecessor"))
+          .join(state.select(k :+ col(ID): _*), keys :+ ID, "left_anti")
+          .select(k :+ col(ID) :+ lit(r + 1).as("distance") :+ col("predecessor") :+
+            lit(true).as(Fresh): _*)
+        state.withColumn(Fresh, lit(false)).union(reached)
+    }
+  }
+
+  /** Batched Bellman-Ford over non-negative weights, keyed like [[bfsLoop]].
+    * A round relaxes the edges out of the rows improved last round and
+    * merges the candidates into the table with ONE groupBy on (keys…, id):
+    * `min(struct(distance, predecessor))` (min-predecessor tie-break) and
+    * the old distance, so a row is marked when it is new or strictly
+    * shorter. Candidates beyond `cutoff` are dropped.
+    * @return (keys…, id, distance: Double, predecessor), rounds run. */
+  private[algos] def bellmanFord(g: PropertyGraph, origins: DataFrame, keys: Seq[String],
+                                 maxRounds: Int,
+                                 cutoff: Double = Double.PositiveInfinity): (DataFrame, Int) = {
+    val k = keys.map(col)
+    frontierLoop(g, g.weightedEdges.select(SRC, DST, WEIGHT), origins, keys, lit(0.0),
+        maxRounds) { (e, state, frontier, _) =>
+      val cand = e.join(frontier, SRC)
+        .select(k :+ col(DST).as(ID) :+ (col("d_src") + col(WEIGHT)).as("distance") :+
+          col(SRC).as("predecessor") :+ lit(null).cast("double").as("d_old"): _*)
         .filter(col("distance") <= cutoff)
-      // min per dst, deterministic predecessor tie-break via struct ordering
-      val best = cand.groupBy(ID)
-        .agg(min(struct(col("distance"), col("predecessor"))).as("s"))
-        .select(col(ID), col("s.distance").as("distance"), col("s.predecessor").as("predecessor"))
-      val next = dist.select(ID, "distance", "predecessor").union(best)
-        .groupBy(ID).agg(min(struct(col("distance"), col("predecessor"))).as("s"))
-        .select(col(ID), col("s.distance").as("distance"), col("s.predecessor").as("predecessor"))
-        .mat
-      val (imp, nI) = graft.prims.Iterate.materializeCount(
-        next.join(dist.withColumnRenamed("distance", "d_old")
-            .select(ID, "d_old"), Seq(ID), "left")
-          .filter(col("d_old").isNull || col("distance") < col("d_old"))
-          .select(ID, "distance", "predecessor"),
-        count(lit(1)), _.count())
-      nImproved = nI
-      dist = next
-      improved = imp
+      state.select(k :+ col(ID) :+ col("distance") :+ col("predecessor") :+
+          col("distance").as("d_old"): _*)
+        .union(cand)
+        .groupBy(k :+ col(ID): _*)
+        .agg(min(struct(col("distance"), col("predecessor"))).as("s"), min("d_old").as("d_old"))
+        .select(k :+ col(ID) :+ col("s.distance").as("distance") :+
+          col("s.predecessor").as("predecessor") :+
+          (col("d_old").isNull || col("s.distance") < col("d_old")).as(Fresh): _*)
     }
-    (dist, round)
+  }
+
+  /** The frontier loop under [[bfsLoop]] and [[bellmanFord]], on
+    * [[Iterate.fixpoint]]. The state is the whole distance table
+    * (keys…, id, distance, predecessor, [[Fresh]]) with the rows the last
+    * round added or improved marked; it starts as `origins` at distance
+    * `zero`. Each round is `round(edges, state, frontier, round)`, where
+    * the frontier (keys…, src, d_src) is the marked rows, hinted by the
+    * previous round's marked count. The loop stops on a round that marks
+    * nothing, or after `maxRounds`.
+    * @return the state without the mark, rounds run (the last, empty
+    *         round included). */
+  private def frontierLoop(g: PropertyGraph, edges: DataFrame, origins: DataFrame,
+                           keys: Seq[String], zero: Column, maxRounds: Int)(
+      round: (DataFrame, DataFrame, DataFrame, Int) => DataFrame): (DataFrame, Int) = {
+    val k = keys.map(col)
+    val init = Iterate.materialize(origins.select(k :+ col(ID) :+ zero.as("distance") :+
+      lit(-1L).as("predecessor") :+ lit(true).as(Fresh): _*))
+    // a keyless loop is one traversal from its one origin
+    val nOrigins = if (keys.isEmpty) 1L else init.count()
+    val rows = stateRows(nOrigins, g.numVertices)
+    // one regime scope for setup and rounds: the frontier join is
+    // Hint.state-hinted, every other join and aggregate is state-sized
+    Regime.scope(g.spark, rows) {
+      val e = Iterate.materialize(edges)
+      var nFrontier = nOrigins
+      val step = { (state: DataFrame, r: Int) =>
+        val frontier = state.filter(col(Fresh))
+          .select(k :+ col(ID).as(SRC) :+ col("distance").as("d_src"): _*)
+        round(e, state, Hint.state(frontier, nFrontier), r)
+      }
+      val (state, rounds, _) = Iterate.fixpoint(init, maxRounds, rows)(step, Some(freshRows),
+        { (_, _, n) => nFrontier = n; n == 0 })
+      Release.free(e)
+      (state.drop(Fresh), rounds)
     }
+  }
 
   /** Keep only reachable rows (`traversal/sssp.py:233 filter_unreachable`). */
   def filterUnreachable(df: DataFrame): DataFrame =
@@ -139,10 +164,11 @@ object Traversal {
   /** `shortest_path` (reference `sssp.py:263`): the vertex sequence from
     * source to target, one row per hop position, by predecessor walk-back. */
   def shortestPath(g: PropertyGraph, source: Long, target: Long): DataFrame = {
-    val res = sssp(g, source).mat
-    graft.algos.MultiTraversal.extractBfsPaths(
-      res, res.filter(col(ID) === target).select(ID),
+    val res = sssp(g, source)
+    val path = MultiTraversal.extractBfsPaths(res, res.filter(col(ID) === target).select(ID),
       maxDepth = res.count().toInt.max(1))
+    Release.free(res)
+    path
   }
 
   /** Path-cost retrieval (reference `utilities/path_retrieval.py:12`

@@ -4,7 +4,7 @@ import graft.prims.Mat._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.{PropertyGraph, Structure, Gr}
-import graft.prims.Iterate
+import graft.prims.{Iterate, Release}
 
 /** Minimum spanning tree (Borůvka) and DAG topological sort.
   *
@@ -47,7 +47,7 @@ object TreeDag {
           .join(st(comp.select(col(ID).as(DST), col("comp").as("c_dst"))), DST)
           .filter(col("c_src") =!= col("c_dst")),
         count(lit(1)), _.count())
-      if (nCross == 0) more = false
+      if (nCross == 0) { more = false; Release.free(e) }
       else {
         // per-component min edge, deterministic tie-break
         val key = struct(col(WEIGHT), col(SRC), col(DST))
@@ -57,6 +57,7 @@ object TreeDag {
           .select(col("k.src").as(SRC), col("k.dst").as(DST), col("k.weight").as(WEIGHT))
           .distinct()
           .mat
+        Release.free(e)
         mst = mst.union(chosen) // lazy: only read after the loop
         // merge components along the chosen star forest — a lean min-label
         // propagation over ONLY the touched components (≤ 2·|chosen| ids;
@@ -89,12 +90,15 @@ object TreeDag {
               least(col("ml"), coalesce(col("nm"), col("ml"))).as("ml"))
         }, Some(sum(when(col("ml") < col("old"), 1L).otherwise(0L))), (_, _, ch) => ch == 0)
         val lbl = merged.select(col(ID), col("ml"))
+        val prevComp = comp
         comp = comp.join(st(lbl.withColumnRenamed(ID, "comp")), Seq("comp"), "left")
           .select(col(ID), coalesce(col("ml"), col("comp")).as("comp"))
           .mat
+        Release.free(cgSym, merged, prevComp)
       }
     }
     val mstOut = mst.mat
+    Release.free(mst, comp, canon) // the chosen edges' chain ends in mstOut
     (if (maximum) mstOut.withColumn(WEIGHT, -col(WEIGHT)) else mstOut, round)
   }
 

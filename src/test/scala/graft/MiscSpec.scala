@@ -87,11 +87,66 @@ class MiscSpec extends SparkSpec {
     val s2 = spark.newSession()
     val e1 = Fixtures.rmatGraph(s2).edges
     val n = e1.count()
+    // the shared Brandes states, edge table included
+    val b = Fixtures.supplierBrandes(s2, "/root/testdata/sf0.001")
+    val bFrames = Seq(b.delta, b.settled, b.verts, b.edges)
+    bFrames.foreach(_.count())
     Fixtures.evictSession(s2)
     intercept[Exception] { e1.count() }
+    bFrames.foreach(f => intercept[Exception] { f.count() })
     val e2 = Fixtures.rmatGraph(s2).edges
     assert(!(e2 eq e1) && e2.count() == n)
     Fixtures.evictSession(s2)
+  }
+
+  test("iterative kernels free every frame they materialize beyond their result") {
+    import graft.algos._
+    import graft.prims.Release
+    // two triangles joined by a path, plus a directed 3-cycle for SCC
+    val es = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L),
+      (7L, 5L))
+    val g = graphOf(es).symmetrized
+    val wg = wGraphOf(es.map { case (a, b) => (a, b, 1.0 + (a * b) % 5) }).symmetrized
+    val dg = graphOf(es)
+    Seq(g, wg, dg).foreach(_.numVertices)
+    val ids = (vs: Seq[Long]) => edgeDF(vs.map(v => (v, v))).select(col(SRC).as(ID))
+    val kernels = Seq[(String, () => Seq[org.apache.spark.sql.DataFrame])](
+      "bfs" -> (() => Seq(Traversal.bfs(g, 1L))),
+      "sssp" -> (() => Seq(Traversal.sssp(wg, 1L))),
+      "shortestPath" -> (() => Seq(Traversal.shortestPath(wg, 1L, 7L))),
+      "msBfs" -> (() => Seq(MultiTraversal.msBfs(g, ids(Seq(1L, 6L)).select(col(ID).as("source"))))),
+      "odShortestDistances" -> (() => Seq(MultiTraversal.odShortestDistances(g,
+        ids(Seq(1L, 6L)), ids(Seq(4L, 7L))))),
+      "odShortestDistancesWeighted" -> (() => Seq(MultiTraversal.odShortestDistancesWeighted(wg,
+        ids(Seq(1L, 6L)), ids(Seq(4L, 7L)))._1)),
+      "batchedEgo" -> (() => Seq(MultiTraversal.batchedEgo(g, ids(Seq(1L, 6L)), radius = 2))),
+      "extractBfsPaths" -> { () =>
+        val b = Traversal.bfs(g, 1L)
+        Seq(b, MultiTraversal.extractBfsPaths(b, ids(Seq(7L, 2L)), maxDepth = 12))
+      },
+      "brandesStates" -> { () =>
+        val s = Centrality.brandesStates(g)
+        Seq(s.delta, s.settled, s.verts, s.edges)
+      },
+      "betweenness" -> (() => Seq(Centrality.betweenness(g))),
+      "edgeBetweenness" -> (() => Seq(Centrality.edgeBetweennessWithLevels(g)._1)),
+      "pagerank" -> (() => Seq(PageRank.run(g))),
+      "katz" -> (() => Seq(Centrality.katz(g, alpha = 0.1))),
+      "eigenvector" -> (() => Seq(Centrality.eigenvector(wg))),
+      "hits" -> (() => Seq(Centrality.hits(dg, normalized = false))),
+      "boruvka" -> (() => Seq(TreeDag.boruvkaMst(wg))),
+      "scc" -> (() => Seq(Components.scc(dg))))
+    // compared by id: the ContextCleaner may drop an earlier test's
+    // unreachable RDDs while a kernel runs
+    def held = spark.sparkContext.getPersistentRDDs.keySet
+    kernels.foreach { case (name, run) =>
+      val before = held
+      val out = run()
+      out.foreach(df => assert(df.collect().nonEmpty, name))
+      Release.free(out: _*)
+      val left = held -- before
+      assert(left.isEmpty, s"$name left ${left.size} persisted RDDs behind")
+    }
   }
 
   test("weighted matching is a valid matching over existing edges") {

@@ -282,6 +282,28 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("BFS and SSSP rounds attach the frontier to the edge scan with a broadcast join") {
+    // a path with a chord: several frontier rounds, state far under the gate
+    val es = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (2L, 5L))
+    val g = graphOf(es).symmetrized
+    val wg = wGraphOf(es.map { case (a, b) => (a, b, 1.0 + a) }).symmetrized
+    // the frontier attach is the round's only inner join, keyed on src
+    val attach = """Join \[src#\d+L?\], \[src#\d+L?\], Inner""".r
+    Seq[(String, () => Unit)](
+      "bfs" -> (() => graft.algos.Traversal.bfs(g, 1L).collect()),
+      "sssp" -> (() => graft.algos.Traversal.sssp(wg, 1L).collect())
+    ).foreach { case (name, run) =>
+      val rounds = roundPlans(", Inner")(run())
+      assert(rounds.size >= 3, s"$name ran ${rounds.size} frontier rounds")
+      rounds.foreach { plan =>
+        val joins = plan.linesIterator.filter(l => attach.findFirstIn(l).nonEmpty).toSeq
+        assert(joins.nonEmpty && joins.forall(_.contains("BroadcastHashJoin")) &&
+          !joins.exists(_.contains("SortMergeJoin")),
+          s"the $name frontier attach left the broadcast:\n" + plan)
+      }
+    }
+  }
+
   test("bipartiteBatch step broadcasts the nbrMin attach — no sort-merge join") {
     val even = graphOf(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)), directed = false)
     val odd = graphOf(Seq((1L, 2L), (2L, 3L), (3L, 1L)), directed = false)

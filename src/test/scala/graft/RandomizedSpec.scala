@@ -113,9 +113,23 @@ class RandomizedSpec extends SparkSpec {
         val g = PropertyGraph(
           Structure.extractVertexList(edgeDF(es)),
           Structure.symmetrize(edgeDF(es)), GraphProperties(directed = false))
-        val got = Traversal.bfs(g, src).collect()
-          .map(r => r.getLong(0) -> r.getInt(1)).toMap
+        val rows = Traversal.bfs(g, src).collect()
+        val got = rows.map(r => r.getLong(0) -> r.getInt(1)).toMap
         assert(got == dist, s"seed $seed")
+        // predecessor: the minimum neighbour one level up (-1 at the source)
+        rows.foreach { r =>
+          val v = r.getLong(0)
+          val want = if (v == src) -1L else a(v).filter(dist.get(_).contains(dist(v) - 1)).min
+          assert(r.getLong(2) == want, s"seed $seed predecessor of $v")
+        }
+        // the batched loop over 3 sources equals 3 single-source runs
+        val srcs = a.keys.toSeq.sorted.take(3)
+        val batched = MultiTraversal.msBfs(g, edgeDF(srcs.map(v => (v, v)))
+            .select(col(SRC).as("source")))
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSet
+        val single = srcs.flatMap(s0 => Traversal.bfs(g, s0).collect()
+          .map(r => (s0, r.getLong(0), r.getInt(1), r.getLong(2)))).toSet
+        assert(batched == single, s"seed $seed msBfs")
       }
     }
   }
@@ -210,11 +224,22 @@ class RandomizedSpec extends SparkSpec {
           }
         }
         // sssp follows edges as given — pass the undirected (symmetrized) view
-        val got = Traversal.sssp(wGraphOf(es).symmetrized, src).collect()
+        val g = wGraphOf(es).symmetrized
+        val got = Traversal.sssp(g, src).collect()
           .map(r => r.getLong(0) -> r.getDouble(1)).toMap
         assert(got.keySet == dist.keySet, s"seed $seed reach")
         dist.foreach { case (v, d) =>
           assert(math.abs(got(v) - d) < 1e-9, s"seed $seed v=$v") }
+        // the origin-keyed loop equals one sssp per origin
+        val origins = a.keys.toSeq.sorted.take(3)
+        val od = MultiTraversal.odShortestDistancesWeighted(g,
+            edgeDF(origins.map(v => (v, v))).select(col(SRC).as(ID)), g.vertices)._1
+          .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+        val perOrigin = origins.flatMap(o => Traversal.sssp(g, o).collect()
+          .map(r => (o, r.getLong(0)) -> r.getDouble(1))).toMap
+        assert(od.keySet == perOrigin.keySet, s"seed $seed OD reach")
+        perOrigin.foreach { case (k, d) =>
+          assert(math.abs(od(k) - d) < 1e-9, s"seed $seed OD $k") }
       }
     }
   }
@@ -225,6 +250,7 @@ class RandomizedSpec extends SparkSpec {
       if (es.nonEmpty) {
         val a = adj(es)
         val bc = scala.collection.mutable.Map.empty[Long, Double].withDefaultValue(0.0)
+        val ebc = scala.collection.mutable.Map.empty[(Long, Long), Double].withDefaultValue(0.0)
         for (s <- a.keys) {
           // Brandes: BFS, sigma counts, dependency accumulation
           val sigma = scala.collection.mutable.Map(s -> 1.0).withDefaultValue(0.0)
@@ -242,7 +268,9 @@ class RandomizedSpec extends SparkSpec {
           }
           val delta = scala.collection.mutable.Map.empty[Long, Double].withDefaultValue(0.0)
           for (v <- order.reverse; u <- a(v) if dist.get(u).contains(dist(v) - 1)) {
-            delta(u) += sigma(u) / sigma(v) * (1.0 + delta(v))
+            val c = sigma(u) / sigma(v) * (1.0 + delta(v))
+            delta(u) += c
+            ebc((u min v, u max v)) += c
           }
           order.drop(1).foreach(v => bc(v) += delta(v))
         }
@@ -253,6 +281,13 @@ class RandomizedSpec extends SparkSpec {
           .map(r => r.getLong(0) -> r.getDouble(1)).toMap
         expect.foreach { case (v, x) =>
           assert(math.abs(got(v) - x) < 1e-9, s"seed $seed v=$v: ${got(v)} vs $x") }
+        // edge variant: one row per canonical edge, the same halving
+        val (edgeBc, _) = Centrality.edgeBetweennessWithLevels(graphOf(es, directed = false),
+          k = None, normalized = false)
+        val gotE = edgeBc.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+        assert(gotE.keySet == es.toSet, s"seed $seed edge rows")
+        es.foreach { e =>
+          assert(math.abs(gotE(e) - ebc(e) / 2.0) < 1e-9, s"seed $seed edge $e: ${gotE(e)} vs ${ebc(e) / 2.0}") }
       }
     }
   }
