@@ -142,106 +142,18 @@ object Components {
     (labels, it)
   }
 
-  /** Core number per vertex — iterative peeling (reference
-    * `cores/core_number.py:10`, impl `core_number_impl.cuh`). Works on the
-    * symmetrized graph (degree_type=BIDIRECTIONAL default). k-bucketed
-    * peeling: repeatedly remove all vertices with degree < k, incrementing k
-    * when the graph is k-stable. Each round is a degree agg + semi-join.
-    * @return DataFrame(id, core_number). */
-  def coreNumber(g: PropertyGraph, maxK: Int = Int.MaxValue,
-                 degreeType: String = "bidirectional"): DataFrame =
-    coreNumberWithStats(g, maxK, degreeType)._1
-
-  /** Core numbers plus peel statistics: (labels, max core value assigned,
-    * max cascade delete-rounds within any stage). The stats let oracle
-    * queries ASSERT the DuckDB unroll (per-k cascade) covered the real
-    * peel instead of silently relying on fixture shape.
+  /** Core number per vertex (reference `cores/core_number.py:10`, impl
+    * `core_number_impl.cuh`): the h-index fixpoint [[coreNumberHIndex]]
+    * with `core_number` as `int`.
     *
-    * `degreeType` follows the reference (`core_number.py:10`):
-    * "bidirectional" peels the symmetrized simple graph by undirected
-    * degree; "incoming"/"outgoing" peel the DIRECTED simple graph by
-    * in-/out-degree (a deleted vertex still takes all its incident edges
-    * with it, both directions). */
-  def coreNumberWithStats(g: PropertyGraph, maxK: Int = Int.MaxValue,
-                          degreeType: String = "bidirectional"): (DataFrame, Int, Int) = {
-    val spark = g.spark
-    import spark.implicits._
-    def degOf(e: DataFrame): DataFrame = degreeType match {
-      case "bidirectional" => undirDegrees(e)
-      case "incoming" => e.groupBy(col(DST).as(ID)).agg(count(lit(1)).as("degree"))
-      case "outgoing" => e.groupBy(col(SRC).as(ID)).agg(count(lit(1)).as("degree"))
-      case other => throw new IllegalArgumentException(s"unknown degree_type $other")
-    }
-    var remaining = (degreeType match {
-      case "bidirectional" => Structure.canonicalize(
-        Structure.symmetrize(g.edges.select(SRC, DST)))
-      case _ => g.edges.select(SRC, DST).filter(col(SRC) =!= col(DST)).distinct()
-    }).select(SRC, DST).mat
-    // track remaining vertices explicitly: a vertex that loses its last edge
-    // mid-peel must still receive a core number at the CURRENT stage.
-    var verts = g.vertices.select(ID).mat
-    // peeled vertices accumulate LAZILY (each part is built from a cached
-    // degree frame): unioned once at the end instead of one checkpoint per
-    // cascade round — the peel's job count is stages + deletion rounds,
-    // and every extra materialization of tiny state was pure scheduler
-    // overhead on the round count
-    val resultParts = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var k = 1
-    var maxCore = 0
-    var maxCascade = 0
-    var nVerts = verts.count()
-    while (nVerts > 0 && k <= maxK) {
-      // Bucket-jump peeling: if every remaining vertex has degree ≥ k,
-      // no stage between k and the current minimum degree deletes anything —
-      // jump straight to minDeg+1 (one job instead of minDeg−k empty
-      // rounds; on dense graphs this is the difference between O(#distinct
-      // core values) and O(max degree) Spark jobs). Values are unchanged:
-      // a vertex of minimum degree d peels at stage d with core number d.
-      val deg0 = verts.join(degOf(remaining), Seq(ID), "left")
-        .select(col(ID), coalesce(col("degree"), lit(0L)).as("degree")).mat
-      val minDeg = deg0.agg(min("degree")).first().getLong(0).toInt
-      k = math.max(k, minDeg + 1)
-      if (k <= maxK) {
-        // cascade at stage k: repeatedly delete vertices with degree < k;
-        // vertices deleted at stage k have core number k-1. One cached
-        // degree frame per round; `weak` derives from it three times
-        // without its own checkpoint.
-        var stable = false
-        var first = true
-        var cascade = 0
-        while (!stable) {
-          // round 1 is always productive (k = minDeg+1, so the min-degree
-          // vertices peel) — its weak-set check is skipped; later rounds
-          // read the weak count off the degree materialization job itself
-          val (deg, nWeak) = if (first) (deg0, -1L)
-            else graft.prims.Iterate.materializeCount(
-              verts.join(degOf(remaining), Seq(ID), "left")
-                .select(col(ID), coalesce(col("degree"), lit(0L)).as("degree")),
-              sum(when(col("degree") < k, 1L).otherwise(0L)),
-              _.filter(col("degree") < k).count())
-          first = false
-          val weak = deg.filter(col("degree") < k).select(ID)
-          if (nWeak == 0) stable = true
-          else {
-            cascade += 1
-            maxCore = math.max(maxCore, k - 1)
-            resultParts += weak.withColumn("core_number", lit(k - 1))
-            verts = verts.join(weak, Seq(ID), "left_anti").mat
-            remaining = remaining
-              .join(weak.withColumnRenamed(ID, SRC), Seq(SRC), "left_anti")
-              .join(weak.withColumnRenamed(ID, DST), Seq(DST), "left_anti")
-              .mat
-          }
-        }
-        maxCascade = math.max(maxCascade, cascade)
-        nVerts = verts.count()
-      }
-      k += 1
-    }
-    val result = resultParts.foldLeft(
-      spark.emptyDataset[(Long, Int)].toDF(ID, "core_number"))(_ union _)
-    (result, maxCore, maxCascade)
-  }
+    * `degreeType` follows the reference: "bidirectional" uses the
+    * symmetrized simple graph by undirected degree; "incoming"/"outgoing"
+    * use the DIRECTED simple graph by in-/out-degree (a peeled vertex takes
+    * all its incident edges with it, both directions).
+    * @return DataFrame(id, core_number: int). */
+  def coreNumber(g: PropertyGraph, degreeType: String = "bidirectional"): DataFrame =
+    coreNumberHIndex(g, degreeType)._1
+      .select(col(ID), col("core_number").cast("int").as("core_number"))
 
   /** Core number via the iterated H-operator fixpoint (Lü, Zhou, Zhang,
     * Stanley, "The H-index of a network node and its relation to degree and
@@ -253,27 +165,24 @@ object Components {
     * in-/out-neighbor message sets (reference semantics
     * `cores/core_number.py:10`, `degree_type`).
     *
-    * Same result as [[coreNumberWithStats]] (cross-checked in AlgoSpec on
-    * the gated RMAT fixture for all three degree types) but a different
-    * cost shape: one aggregate-messages shuffle per sweep and typically
-    * O(10) sweeps, versus one Spark job cascade PER peel round — on graphs
-    * with deep cores the peel's job count is O(Σ cascade rounds) while this
-    * is O(sweeps). The per-vertex `collect_list` is bounded by degree — the
-    * same O(d_max) row bound a CSR adjacency row has; hub rows are handled
-    * by Spark's spillable aggregation buffers.
+    * Cost shape: one aggregate-messages shuffle per sweep and typically
+    * O(10) sweeps, where a peel pays one Spark job cascade PER peel round —
+    * on graphs with deep cores the peel's job count is O(Σ cascade rounds)
+    * while this is O(sweeps). The per-vertex `collect_list` is bounded by
+    * degree — the same O(d_max) row bound a CSR adjacency row has; hub rows
+    * are handled by Spark's spillable aggregation buffers.
     *
-    * Sweeps run in LAZY batches of `checkEvery`: within a batch no job is
-    * submitted, so Catalyst chains the K aggregate-messages shuffles into
-    * one job — driver sync (materialize + convergence check) happens once
-    * per batch, not once per sweep. The check itself exploits monotonicity:
-    * h is pointwise non-increasing, so Σh unchanged across a batch ⟺ the
-    * batch's first sweep was already a fixpoint — one scalar agg on the
-    * cached frame, no old-vs-new join. Callers at very large scale where a
-    * single wasted sweep is a full-graph shuffle can set checkEvery=1.
-    * @return (DataFrame(id, core_number: long), sweeps incl. ≤ checkEvery−1
-    *         post-convergence no-ops). */
+    * One [[Iterate.fixpoint]] round is a LAZY batch of [[SweepsPerRound]]
+    * sweeps: within a batch no job is submitted, so Catalyst chains the
+    * aggregate-messages shuffles into the round's one materialize job. The
+    * round's metric is Σh, read off that job. h is pointwise non-increasing,
+    * so Σh unchanged across a batch ⟺ the batch's first sweep was already a
+    * fixpoint — no old-vs-new join. Throws if `maxIter` sweeps end before
+    * the fixpoint.
+    * @return (DataFrame(id, core_number: long), sweeps incl. ≤
+    *         SweepsPerRound−1 post-convergence no-ops). */
   def coreNumberHIndex(g: PropertyGraph, degreeType: String = "bidirectional",
-                       maxIter: Int = 200, checkEvery: Int = 4): (DataFrame, Int) = {
+                       maxIter: Int = 200): (DataFrame, Int) = {
     // adjacency rows (id, nbr): nbr's h value is counted in id's H-set.
     // Simple graph per the reference: self-loops and multi-edges dropped.
     val adj = (degreeType match {
@@ -293,21 +202,20 @@ object Components {
     // groupBy(ID) key set of adj), so each sweep is a closed map over it —
     // no old-vs-new left join. Isolated vertices are h = 0 from the first
     // H-operator application onward and are appended once at the end.
-    var h = adj.groupBy(ID).agg(count(lit(1)).as("h")).mat
-    def hSum(df: org.apache.spark.sql.DataFrame): Long =
-      df.agg(coalesce(sum("h"), lit(0L))).first().getLong(0)
+    val h0 = adj.groupBy(ID).agg(count(lit(1)).as("h")).mat
+    val hSum = coalesce(sum("h"), lit(0L))
+    val sum0 = h0.agg(hSum).first().getLong(0)
+    var prevSum = sum0
     // H-index of the multiset: sort descending, count positions i (0-based)
     // with value ≥ i+1. Evaluates inside the aggregation projection — no
     // second shuffle per sweep.
     val hIdx = size(filter(sort_array(col("hs"), asc = false),
       (x, i) => x >= (i + lit(1)).cast("long"))).cast("long")
-    var prevSum = hSum(h)
-    var it = 0
-    var converged = prevSum == 0L
-    while (!converged && it < maxIter) {
-      val sweeps = math.min(checkEvery, maxIter - it)
-      var next = h
-      for (_ <- 0 until sweeps) {
+    // an empty adjacency is already the fixpoint: no batch runs
+    val batches = if (sum0 == 0L || maxIter <= 0) 0 else (maxIter - 1) / SweepsPerRound + 1
+    val (h, rounds, converged) = Iterate.fixpoint(h0, batches, -1L)({ (st, r) =>
+      var next = st
+      for (_ <- 0 until math.min(SweepsPerRound, maxIter - r * SweepsPerRound)) {
         // plain shuffle join (not a forced broadcast): a broadcast would
         // collect `next` to the driver NOW, serializing the batch into
         // per-sweep jobs; AQE still picks broadcast at runtime when small
@@ -315,16 +223,24 @@ object Components {
           .groupBy(ID).agg(collect_list(col("nh")).as("hs"))
           .select(col(ID), hIdx.as("h"))
       }
-      h = next.mat
-      it += sweeps
-      val s = hSum(h)
-      converged = s == prevSum
+      next
+    }, Some(hSum), { (_, _, s) =>
+      val same = s == prevSum
       prevSum = s
-    }
+      same
+    })
+    Release.free(adj)
+    require(converged || sum0 == 0L,
+      s"coreNumberHIndex: h still falling after $maxIter sweeps (raise maxIter)")
     val isolated = g.vertices.select(ID)
       .join(h, Seq(ID), "left_anti").select(col(ID), lit(0L).as("h"))
-    (h.union(isolated).select(col(ID), col("h").as("core_number")), it)
+    (h.union(isolated).select(col(ID), col("h").as("core_number")),
+      math.min(rounds * SweepsPerRound, maxIter))
   }
+
+  /** H-operator sweeps per [[coreNumberHIndex]] round: one driver sync per
+    * batch, at the price of ≤ SweepsPerRound−1 wasted sweeps at the end. */
+  private val SweepsPerRound = 4
 
   /** Strongly connected components — trim + forward/backward min-label
     * coloring (reference legacy SCC `algorithms.hpp:1767`,
@@ -380,27 +296,37 @@ object Components {
     var n = verts.count()
     while (n > 0 && round < maxRounds) {
       round += 1
-      // 1. trim: zero-in/out vertices are singleton SCCs (component = own id)
-      var trimmed = 1L
-      var t = 0
-      while (trimmed > 0 && t < trimCap) {
-        t += 1
-        val hasOut = edges.select(col(SRC).as(ID)).distinct()
-        val hasIn = edges.select(col(DST).as(ID)).distinct()
-        val (dead, nDead) = graft.prims.Iterate.materializeCount(
-          verts.join(hasOut, Seq(ID), "left_anti")
-            .union(verts.join(hasIn, Seq(ID), "left_anti")).distinct(),
-          count(lit(1)), _.count())
-        trimmed = nDead
-        if (trimmed > 0) {
-          verts = shrink(verts, verts.join(dead, Seq(ID), "left_anti"))
-          edges = shrink(edges, edges
-            .join(dead.withColumnRenamed(ID, SRC), Seq(SRC), "left_anti")
-            .join(dead.withColumnRenamed(ID, DST), Seq(DST), "left_anti"))
-          appendResult(dead.select(col(ID), col(ID).as("component")))
-        } else Release.free(dead)
+      // 1. trim: zero-in/out vertices are singleton SCCs (component = own
+      // id). The state is (id, component) over the remainder, null while a
+      // vertex is in play; a round trims every live vertex without a live
+      // in- or out-neighbour, and the loop stops when a round trims nothing.
+      var live = n
+      val (trim, _, _) = Iterate.fixpoint(
+          verts.select(col(ID), lit(null).cast("long").as("component")).mat, trimCap, -1L)({
+        (st, _) =>
+          val alive = st.filter(col("component").isNull).select(ID)
+          val e = edges.join(alive.withColumnRenamed(ID, SRC), SRC)
+            .join(alive.withColumnRenamed(ID, DST), DST)
+          val hasOut = e.select(col(SRC).as(ID), lit(true).as("o")).distinct()
+          val hasIn = e.select(col(DST).as(ID), lit(true).as("i")).distinct()
+          st.join(hasOut, Seq(ID), "left").join(hasIn, Seq(ID), "left")
+            .select(col(ID), when(col("component").isNull && (col("o").isNull || col("i").isNull),
+              col(ID)).otherwise(col("component")).as("component"))
+      }, Some(sum(when(col("component").isNull, 1L).otherwise(0L))), { (_, _, m) =>
+        val done = m == live || m == 0
+        live = m
+        done
+      })
+      if (live < n) {
+        val dead = trim.filter(col("component").isNotNull).mat
+        verts = shrink(verts, trim.filter(col("component").isNull).select(ID))
+        edges = shrink(edges, edges
+          .join(dead.select(col(ID).as(SRC)), Seq(SRC), "left_anti")
+          .join(dead.select(col(ID).as(DST)), Seq(DST), "left_anti"))
+        appendResult(dead)
+        n = live
       }
-      n = verts.count()
+      Release.free(trim)
       if (n > 0) {
         // 2. capped fwd/bwd coloring over the trimmed remainder
         val (fwd, fConv) = minLabelProp(verts, edges, forward = true, cap, n)
@@ -463,7 +389,11 @@ object Components {
   def kCore(g: PropertyGraph, k: Int, coreNumbers: Option[DataFrame] = None): DataFrame =
     kCoreWithRounds(g, k, coreNumbers)._1
 
-  /** k-core also returning the cascade round count (for oracle budgets). */
+  /** k-core also returning the cascade round count (for oracle budgets).
+    * The peel runs on [[Iterate.fixpoint]] with the remaining canonical
+    * edge set as its state: a round drops every edge incident to a vertex
+    * of degree < k, and the loop stops on a round whose edge count is
+    * unchanged — the confirming round, which the count includes. */
   def kCoreWithRounds(g: PropertyGraph, k: Int,
                       coreNumbers: Option[DataFrame] = None): (DataFrame, Int) = {
     val canon = Structure.canonicalize(Structure.symmetrize(g.edges.select(SRC, DST)))
@@ -472,21 +402,20 @@ object Components {
         val keep = cores.filter(col("core_number") >= k).select(ID)
         (Structure.inducedSubgraph(canon, keep), 0)
       case None =>
-        var e = canon.mat
-        var changed = 1L
-        var rounds = 0
-        while (changed > 0) {
-          rounds += 1
-          val (weak, nWeak) = graft.prims.Iterate.materializeCount(
-            undirDegrees(e).filter(col("degree") < k).select(ID),
-            count(lit(1)), _.count())
-          changed = nWeak
-          if (changed > 0) {
-            e = e.join(weak.withColumnRenamed(ID, SRC), Seq(SRC), "left_anti")
-              .join(weak.withColumnRenamed(ID, DST), Seq(DST), "left_anti")
-              .mat
-          }
-        }
+        val e0 = canon.mat
+        var nEdges = e0.count()
+        // every join of a round is sized by the edge count: under the gate
+        // the round is one job, not one per AQE query stage
+        val (e, rounds, _) = Iterate.fixpoint(e0, Int.MaxValue, nEdges)({ (e, _) =>
+          val weak = undirDegrees(e).filter(col("degree") < k).select(ID)
+          e.join(weak.withColumnRenamed(ID, SRC), Seq(SRC), "left_anti")
+            .join(weak.withColumnRenamed(ID, DST), Seq(DST), "left_anti")
+        }, Some(count(lit(1))), { (_, _, m) =>
+          // a weak vertex has ≥ 1 edge, so an unchanged count means none
+          val same = m == nEdges
+          nEdges = m
+          same
+        })
         (e, rounds)
     }
   }

@@ -3,6 +3,7 @@ package graft.algos
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.{PropertyGraph, Structure, Gr}
+import graft.prims.{Hint, Iterate, Release}
 import graft.prims.Mat._
 import graft.pipeline.TextOps.hash60
 
@@ -29,17 +30,19 @@ object Misc {
 
   /** Maximal independent set, Luby's algorithm: a vertex enters the MIS when
     * its (hash, id) priority beats every remaining neighbor; winners'
-    * neighborhoods leave the arena. Returns (mis DataFrame(id), rounds). */
+    * neighborhoods leave the arena. The rounds run on [[Iterate.fixpoint]]
+    * over the state (id, p, status): status is null while a vertex is in
+    * the arena, true once it entered the MIS and false once a neighbor did.
+    * Throws if vertices remain after `maxRounds`.
+    * Returns (mis DataFrame(id), rounds). */
   def misWithRounds(g: PropertyGraph, seed: Long = 42, maxRounds: Int = 50): (DataFrame, Int) = {
     val und = Structure.removeSelfLoops(Structure.symmetrize(g.edges.select(SRC, DST))).mat
     // seed from the VERTEX set (isolated vertices belong in every MIS;
     // edge-derived vertex lists would also NPE on edgeless subgraphs)
-    var rem = g.vertices.select(col(ID), priority(col(ID), seed).as("p")).mat
-    var mis: DataFrame = rem.select(ID).limit(0)
-    var rounds = 0
-    var nRem = rem.count()
-    while (nRem > 0 && rounds < maxRounds) {
-      rounds += 1
+    val init = g.vertices.select(col(ID), priority(col(ID), seed).as("p"),
+      lit(null).cast("boolean").as("status")).mat
+    val (state, rounds, converged) = Iterate.fixpoint(init, maxRounds, -1L)({ (st, _) =>
+      val rem = st.filter(col("status").isNull)
       // smallest neighbor priority among remaining vertices, per vertex
       val nbrBest = und
         .join(rem.select(col(ID).as(SRC)), SRC)
@@ -49,19 +52,18 @@ object Misc {
       val winners = rem.join(nbrBest, Seq(ID), "left")
         .filter(col("nb").isNull ||
           struct(col("p"), col(ID)) < col("nb"))
-        .select(ID).mat
-      mis = mis.union(winners) // lazy union of checkpointed round frames
-      // drop winners and their neighbors from the arena; the remaining
-      // count rides the materialization job
-      val killed = winners.union(
-        und.join(winners.withColumnRenamed(ID, SRC), SRC).select(col(DST).as(ID)))
-        .distinct()
-      val (rem2, nR) = graft.prims.Iterate.materializeCount(
-        rem.join(killed, Seq(ID), "left_anti"), count(lit(1)), _.count())
-      rem = rem2
-      nRem = nR
-    }
-    (mis.select(ID), rounds)
+        .select(ID)
+      // winners' neighbors leave the arena
+      val killed = und.join(winners.withColumnRenamed(ID, SRC), SRC)
+        .select(col(DST).as(ID)).distinct()
+      st.join(winners.withColumn("won", lit(true)), Seq(ID), "left")
+        .join(killed.withColumn("lost", lit(false)), Seq(ID), "left")
+        .select(col(ID), col("p"),
+          coalesce(col("status"), col("won"), col("lost")).as("status"))
+    }, Some(sum(when(col("status").isNull, 1L).otherwise(0L))), (_, _, nRem) => nRem == 0)
+    Release.free(und)
+    require(converged, s"MIS: vertices remain after $maxRounds rounds (raise maxRounds)")
+    (state.filter(col("status")).select(ID), rounds)
   }
 
   def mis(g: PropertyGraph, seed: Long = 42): DataFrame = misWithRounds(g, seed)._1
@@ -73,34 +75,39 @@ object Misc {
     vertexColoringWithStats(g, seed, maxColors)._1
 
   /** Coloring also returning (colors used, max MIS rounds) so oracle
-    * queries can assert the unrolled color×round budget was sufficient. */
+    * queries can assert the unrolled color×round budget was sufficient.
+    * The colors run on [[Iterate.fixpoint]] over the state (id, color),
+    * color null while a vertex is uncolored; each round runs the nested
+    * MIS over the uncolored subgraph. Throws if vertices remain uncolored
+    * after `maxColors`. */
   def vertexColoringWithStats(g: PropertyGraph, seed: Long = 42,
                               maxColors: Int = 100): (DataFrame, Int, Int) = {
     val und = Structure.removeSelfLoops(Structure.symmetrize(g.edges.select(SRC, DST))).mat
     // seed from the VERTEX set, like misWithRounds above: isolated vertices
     // must be colored too (they trivially join the color-0 MIS)
-    var remV = g.vertices.select(ID).mat
-    var colored: DataFrame = null
-    var color = 0
+    val init = g.vertices.select(col(ID), lit(null).cast("long").as("color")).mat
     var maxRounds = 0
-    var nRem = remV.count()
-    while (nRem > 0 && color < maxColors) {
+    var m: DataFrame = null // the round's MIS, freed once the next state is materialized
+    val (colors, nColors, converged) = Iterate.fixpoint(init, maxColors, -1L)({ (st, color) =>
+      val remV = st.filter(col("color").isNull).select(ID)
       val subE = und
         .join(remV.withColumnRenamed(ID, SRC), SRC)
         .join(remV.withColumnRenamed(ID, DST), DST)
         .select(SRC, DST)
       val sub = PropertyGraph(remV, subE, g.props.copy(directed = false))
-      val (m0, rounds) = misWithRounds(sub, seed + color)
+      val (mis, rounds) = misWithRounds(sub, seed + color)
       maxRounds = math.max(maxRounds, rounds)
-      val m = m0.withColumn("color", lit(color.toLong))
-      colored = if (colored == null) m else colored.union(m)
-      val (remV2, nR) = graft.prims.Iterate.materializeCount(
-        remV.join(m.select(ID), Seq(ID), "left_anti"), count(lit(1)), _.count())
-      remV = remV2
-      color += 1
-      nRem = nR
-    }
-    (colored, color, maxRounds)
+      m = mis
+      st.join(mis.withColumn("c", lit(color.toLong)), Seq(ID), "left")
+        .select(col(ID), coalesce(col("color"), col("c")).as("color"))
+    }, Some(sum(when(col("color").isNull, 1L).otherwise(0L))), { (_, _, nRem) =>
+      Release.free(m)
+      nRem == 0
+    })
+    Release.free(und)
+    require(converged, s"coloring: vertices remain uncolored after $maxColors colors " +
+      "(raise maxColors)")
+    (colors, nColors, maxRounds)
   }
 
   /** Speculative coloring: hash-mod-k initial colors + iterative conflict
@@ -136,72 +143,73 @@ object Misc {
     * (MiscSql.fastColoringTree). Work per round is bounded by the conflict
     * set and its incident edges, not the whole graph.
     *
-    * Throws if the conflict set is nonempty after `maxRounds` — a silent
-    * improper coloring is worse than a loud failure.
+    * The repairs run on [[Iterate.fixpoint]] over the color table, with
+    * the vertices a round recolored marked; the round that finds no
+    * conflict recolors nothing and ends the loop (it is not counted as a
+    * repair round). Throws if the conflict set is nonempty after
+    * `maxRounds` repairs — a silent improper coloring is worse than a loud
+    * failure.
     * @return (DataFrame(id, color), colors used, repair rounds run). */
   def fastColoringWithStats(g: PropertyGraph, seed: Long = 42, initColors: Int = 4,
                             maxRounds: Int = 50): (DataFrame, Long, Int) = {
     val und = Structure.removeSelfLoops(Structure.symmetrize(g.edges.select(SRC, DST))).mat
     val nV = g.numVertices
-    def hinted(df: DataFrame) = graft.prims.Hint.state(df, nV)
-    var colors = g.vertices.select(col(ID),
+    def hinted(df: DataFrame) = Hint.state(df, nV)
+    val init = g.vertices.select(col(ID),
       pmod(hash60(concat_ws("|", lit("color"), col(ID), lit(seed))),
-        lit(initColors.toLong)).as("color")).mat
+        lit(initColors.toLong)).as("color"), lit(true).as(Recolored)).mat
     def pOf(c: org.apache.spark.sql.Column) =
       hash60(concat_ws("|", lit("colp"), c, lit(seed)))
-    var rounds = 0
-    var done = false
-    while (!done && rounds < maxRounds) {
+    // the loser set is hinted by the previous round's loser count (the
+    // first round's by |V|, which bounds it)
+    var nLose = nV
+    // a round's losers recolor and are marked; the round that finds none
+    // changes nothing and ends the loop, so the cap is maxRounds repairs
+    // plus that confirming round
+    val (state, rounds, converged) = Iterate.fixpoint(init, maxRounds + 1, -1L)({ (st, r) =>
+      val colors = st.select(col(ID), col("color"))
       // loser endpoint of every monochromatic edge (und carries both
       // directions, so evaluating the rule once per direction and
       // dedup-ing yields each conflict's single loser)
-      val cc = und
+      val losers = und
         .join(hinted(colors.select(col(ID).as(SRC), col("color").as("ca"))), SRC)
         .join(hinted(colors.select(col(ID).as(DST), col("color").as("cb"))), DST)
         .filter(col("ca") === col("cb"))
-      val (losers, nLose) = graft.prims.Iterate.materializeCount(
-        cc.select(when(struct(pOf(col(SRC)), col(SRC)) > struct(pOf(col(DST)), col(DST)),
-          col(SRC)).otherwise(col(DST)).as(ID)).distinct(),
-        count(lit(1)), _.count())
-      if (nLose == 0) { graft.prims.Release.free(losers); done = true }
-      else {
-        rounds += 1
-        // distinct neighbor colors of each loser (pre-update colors) — the
-        // loser set broadcasts, so this too is a scan of the cached frame
-        val nbrC = und.join(graft.prims.Hint.state(losers.withColumnRenamed(ID, SRC), nLose), SRC)
-          .join(hinted(colors.select(col(ID).as(DST), col("color").as("nc"))), DST)
-          .select(col(SRC).as(ID), col("nc")).distinct().mat
-        // hash-jittered pick among the free candidates in 0..#colors-seen
-        val w = org.apache.spark.sql.expressions.Window.partitionBy(ID)
-        val pick = nbrC.groupBy(ID).agg(count(lit(1)).as("n"))
-          .select(col(ID), explode(sequence(lit(0L), col("n") * 2 + 1)).as("c"))
-          .join(nbrC.withColumnRenamed("nc", "c"), Seq(ID, "c"), "left_anti")
-          .withColumn("rk", row_number().over(w.orderBy("c")))
-          .withColumn("nf", count(lit(1)).over(w))
-          .filter(col("rk") === lit(1) + pmod(
-            hash60(concat_ws("|", lit("coljit"), col(ID), lit(rounds), lit(seed))),
-            col("nf")))
-          .select(col(ID), col("c").as("newc"))
-        val next = colors.join(pick, Seq(ID), "left")
-          .select(col(ID), coalesce(col("newc"), col("color")).as("color")).mat
-        graft.prims.Release.free(colors, losers, nbrC)
-        colors = next
-      }
-    }
-    if (!done) {
-      // the loop can exhaust maxRounds with its LAST repair having fixed
-      // everything — one closing conflict count decides honestly
-      done = und
-        .join(hinted(colors.select(col(ID).as(SRC), col("color").as("ca"))), SRC)
-        .join(hinted(colors.select(col(ID).as(DST), col("color").as("cb"))), DST)
-        .filter(col("ca") === col("cb")).isEmpty
-    }
-    require(done, s"fastColoring: conflicts remain after $maxRounds repair rounds " +
+        .select(when(struct(pOf(col(SRC)), col(SRC)) > struct(pOf(col(DST)), col(DST)),
+          col(SRC)).otherwise(col(DST)).as(ID)).distinct()
+      // distinct neighbor colors of each loser (pre-update colors) — the
+      // loser set broadcasts, so this too is a scan of the cached frame
+      val nbrC = und.join(Hint.state(losers.withColumnRenamed(ID, SRC), nLose), SRC)
+        .join(hinted(colors.select(col(ID).as(DST), col("color").as("nc"))), DST)
+        .select(col(SRC).as(ID), col("nc")).distinct()
+      // hash-jittered pick among the free candidates in 0..#colors-seen
+      val w = org.apache.spark.sql.expressions.Window.partitionBy(ID)
+      val pick = nbrC.groupBy(ID).agg(count(lit(1)).as("n"))
+        .select(col(ID), explode(sequence(lit(0L), col("n") * 2 + 1)).as("c"))
+        .join(nbrC.withColumnRenamed("nc", "c"), Seq(ID, "c"), "left_anti")
+        .withColumn("rk", row_number().over(w.orderBy("c")))
+        .withColumn("nf", count(lit(1)).over(w))
+        .filter(col("rk") === lit(1) + pmod(
+          hash60(concat_ws("|", lit("coljit"), col(ID), lit(r + 1), lit(seed))),
+          col("nf")))
+        .select(col(ID), col("c").as("newc"))
+      colors.join(pick, Seq(ID), "left")
+        .select(col(ID), coalesce(col("newc"), col("color")).as("color"),
+          col("newc").isNotNull.as(Recolored))
+    }, Some(sum(when(col(Recolored), 1L).otherwise(0L))), { (_, _, n) =>
+      nLose = n
+      n == 0
+    })
+    Release.free(und)
+    require(converged, s"fastColoring: conflicts remain after $maxRounds repair rounds " +
       "(raise maxRounds; the jittered pick decays conflicts geometrically)")
+    val colors = state.select(col(ID), col("color"))
     val nColors = colors.agg(coalesce(max("color"), lit(-1L))).first().getLong(0) + 1L
-    graft.prims.Release.free(und)
-    (colors, nColors, rounds)
+    (colors, nColors, rounds - 1)
   }
+
+  /** Marks the vertices a [[fastColoringWithStats]] round recolored. */
+  private val Recolored = "_recolored"
 
   /** Approximate weighted matching, fixed handshake rounds: every vertex
     * points at its heaviest remaining neighbor (key = weight·1e6 − dst,
@@ -360,17 +368,14 @@ object Misc {
     val nPersons = persons.count()
     // ONE object-state frame (j, price, holder) instead of separate prices
     // + assignment frames (r11-opt): the round's whole bid→win→update
-    // pipeline rides a single materializeCount — 2 jobs per round where the
+    // pipeline rides the round's one materialize job — 2 jobs per round where the
     // old shape paid 5 (unassigned count, winners mat, prices mat, assign
     // mat + its scan). The per-round arithmetic (bids, winners, price and
     // holder updates, tie-breaks) is unchanged, so the assignment and the
     // round count are identical.
-    var state = vals.select("j").distinct()
+    val init = vals.select("j").distinct()
       .select(col("j"), lit(0L).as("p"), lit(null).cast("long").as("hi")).mat
-    var round = 0
-    var nAssigned = 0L
-    while (nAssigned < nPersons && round < maxRounds) {
-      round += 1
+    val (state, rounds, converged) = Iterate.fixpoint(init, maxRounds, -1L)({ (state, _) =>
       val unassigned = persons.join(
         state.filter(col("hi").isNotNull).select(col("hi").as("i")),
         Seq("i"), "left_anti")
@@ -396,19 +401,14 @@ object Misc {
         .agg(max_by(struct(col("i"), col("bid")),
           struct(col("bid"), (-col("i")).as("ni"))).as("w"))
         .select(col("j").as("wj"), col("w.i").as("wi"), col("w.bid").as("bid"))
-      val (nextState, nAs) = graft.prims.Iterate.materializeCount(
-        state.join(winners, col("j") === col("wj"), "left")
-          .select(col("j"), coalesce(col("bid"), col("p")).as("p"),
-            coalesce(col("wi"), col("hi")).as("hi")),
-        sum(when(col("hi").isNotNull, 1L).otherwise(0L)),
-        _.filter(col("hi").isNotNull).count())
-      graft.prims.Release.free(state)
-      state = nextState
-      nAssigned = nAs
-    }
-    require(nAssigned == nPersons,
-      s"auction did not complete within $maxRounds rounds")
-    (state.filter(col("hi").isNotNull).select(col("hi").as("i"), col("j")), round)
+      state.join(winners, col("j") === col("wj"), "left")
+        .select(col("j"), coalesce(col("bid"), col("p")).as("p"),
+          coalesce(col("wi"), col("hi")).as("hi"))
+    }, Some(sum(when(col("hi").isNotNull, 1L).otherwise(0L))),
+      (_, _, nAssigned) => nAssigned == nPersons)
+    Release.free(vals, persons)
+    require(converged, s"auction did not complete within $maxRounds rounds")
+    (state.filter(col("hi").isNotNull).select(col("hi").as("i"), col("j")), rounds)
   }
 
   /** ForceAtlas2-shaped layout: attraction along edges + cell-binned

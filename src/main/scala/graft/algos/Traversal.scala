@@ -207,6 +207,7 @@ object Traversal {
         .mat
       acc += prev
     }
+    Release.free(w)
     acc.reduce(_ union _)
   }
 }

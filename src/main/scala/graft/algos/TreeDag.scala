@@ -103,30 +103,35 @@ object TreeDag {
   }
 
   /** Topological levels of a DAG by zero-in-degree peeling: level(v) =
-    * length of the longest path from any source to v. Throws if a cycle
-    * remains after V rounds (not a DAG), mirroring the reference error
-    * contract. @return DataFrame(id, level). */
+    * length of the longest path from any source to v. The peel runs on
+    * [[Iterate.fixpoint]] over the state (id, level), level null while a
+    * vertex is unplaced; round r places every unplaced vertex without an
+    * unplaced in-neighbour at level r. Throws on a round that places
+    * nothing while vertices remain (a cycle: not a DAG, mirroring the
+    * reference error contract), and if vertices remain after `maxRounds`.
+    * @return DataFrame(id, level). */
   def topologicalLevels(g: PropertyGraph, maxRounds: Int = 100000): DataFrame = {
     val e = g.edges.select(SRC, DST).mat
-    var remainingV = g.vertices.select(ID).mat
-    var remainingE = e
-    var out = remainingV.limit(0).withColumn("level", lit(0))
-    var lvl = 0
-    var n = remainingV.count()
-    while (n > 0 && lvl < maxRounds) {
-      val withIn = remainingV.join(
-        remainingE.groupBy(col(DST).as(ID)).agg(count(lit(1)).as("ind")), Seq(ID), "left")
-      val (zero, nZero) = graft.prims.Iterate.materializeCount(
-        withIn.filter(col("ind").isNull).select(ID), count(lit(1)), _.count())
-      if (nZero == 0)
+    var unplaced = g.numVertices
+    val (out, _, converged) = Iterate.fixpoint(
+        g.vertices.select(col(ID), lit(null).cast("int").as("level")).mat, maxRounds, -1L)({
+      (st, lvl) =>
+        val blocked = e
+          .join(st.filter(col("level").isNull).select(col(ID).as(SRC)), SRC)
+          .select(col(DST).as(ID), lit(true).as("blocked")).distinct()
+        st.join(blocked, Seq(ID), "left")
+          .select(col(ID), when(col("level").isNull && col("blocked").isNull, lit(lvl))
+            .otherwise(col("level")).as("level"))
+    }, Some(sum(when(col("level").isNull, 1L).otherwise(0L))), { (prev, next, left) =>
+      if (left > 0 && left == unplaced) {
+        Release.free(prev, next, e)
         throw new IllegalArgumentException("topological_sort: graph has a cycle")
-      out = out.union(zero.withColumn("level", lit(lvl))).mat
-      remainingV = remainingV.join(zero, Seq(ID), "left_anti").mat
-      remainingE = remainingE.join(zero.withColumnRenamed(ID, SRC), Seq(SRC), "left_anti")
-        .mat
-      n -= nZero
-      lvl += 1
-    }
+      }
+      unplaced = left
+      left == 0
+    })
+    Release.free(e)
+    require(converged, s"topological_sort: vertices unplaced after $maxRounds rounds")
     out
   }
 }

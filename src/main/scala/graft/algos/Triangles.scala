@@ -100,6 +100,7 @@ object Triangles {
       val comp = verts.select(col(ID).as(SRC)).crossJoin(verts.select(col(ID).as(DST)))
         .filter(col(SRC) < col(DST))
         .join(e.select(SRC, DST), Seq(SRC, DST), "left_anti").mat
+      graft.prims.Release.free(verts)
       val cund = comp.select(SRC, DST)
         .union(comp.select(col(DST).as(SRC), col(SRC).as(DST)))
       val inter = cund.select(col(SRC).as("mid"), col(DST).as("u"))
@@ -115,6 +116,7 @@ object Triangles {
         .select(col(SRC), col(DST),
           (col("ds") + col("dd") - lit(nV) + coalesce(col("cc"), lit(0L))).as("support"))
     }
+    graft.prims.Release.free(verts)
     val bounds = e.agg(least(min(SRC), min(DST)), greatest(max(SRC), max(DST))).first()
     val sup =
       if (!bounds.isNullAt(0) && bounds.getLong(0) >= 0 && bounds.getLong(1) < (1L << 31)) {
@@ -236,8 +238,9 @@ object Triangles {
     // truss ⊆ (k−1)-core (see above); kCore peels at the level directly.
     // k ≤ 3 gives a ≤2-core whose peel mostly spins (or is the identity),
     // while the support filter at k−2 ≤ 1 does the same work — skip it.
+    // kCore's result is already a materialized frame
     val e0 =
-      if (k >= 4) Components.kCore(g, k - 1).mat
+      if (k >= 4) Components.kCore(g, k - 1)
       else oriented(g).mat
     // Dense-graph fast path: support(u,v) = |N(u)∩N(v)| ≥ d(u)+d(v)−|V|
     // (inclusion–exclusion). If EVERY edge clears the truss threshold by
@@ -254,7 +257,10 @@ object Triangles {
     val minDegSum = if (minRow.isNullAt(0)) Long.MaxValue else minRow.getLong(0)
     if (minDegSum == Long.MaxValue || minDegSum - nV >= k - 2)
       return (e0.select(SRC, DST), 1)
-    var alive = edgeSupportOf(e0).mat // (src, dst, support)
+    // (src, dst, support); freeing the support frame frees e0 with it
+    val sup0 = edgeSupportOf(e0)
+    var alive = sup0.mat
+    graft.prims.Release.free(sup0)
     // live-edge count maintained arithmetically (del rows are distinct live
     // edges), so the bulk-regime gate costs zero extra jobs per round
     var nAlive = alive.count()
@@ -275,8 +281,9 @@ object Triangles {
         // and the five full-frame joins of the incremental path vanish)
         val survivors = alive.filter(col("support") >= k - 2).select(SRC, DST).mat
         val prev = alive
-        alive = edgeSupportOf(survivors).mat
-        graft.prims.Release.free(prev, survivors)
+        val sup = edgeSupportOf(survivors)
+        alive = sup.mat
+        graft.prims.Release.free(prev, sup)
         nAlive -= nDel
       } else {
         val e = alive.select(SRC, DST) // edge set at the start of the round
@@ -330,13 +337,16 @@ object Triangles {
             .select(col(s"t.$SRC"), col(s"t.$DST"))
             .groupBy(SRC, DST).agg(count(lit(1)).as("dec")),
           count(lit(1)), _.count())
+        val prev = alive
         alive = alive.join(delB, Seq(SRC, DST), "left_anti")
           .join(graft.prims.Hint.state(dec, nDec), Seq(SRC, DST), "left")
           .select(col(SRC), col(DST),
             (col("support") - coalesce(col("dec"), lit(0L))).as("support"))
           .mat
+        graft.prims.Release.free(prev, dec)
         nAlive -= nDel
       }
+      graft.prims.Release.free(del)
     }
     (alive.select(SRC, DST), it)
   }

@@ -180,12 +180,11 @@ object ScaleProbe {
       results += item("wcc")(Components.wcc(g).count())
     }
     if (want("structure") || want("corenum")) {
-      // h-index fixpoint, NOT the peel: the peel
-      // (Components.coreNumber) is O(#distinct core values × cascade)
+      // the h-index fixpoint, the engine's one core-number path: a
+      // full-range peel is O(#distinct core values × cascade)
       // shrinking-frame rounds — measured >100 min at scale 22 without
       // finishing — while the h-index sweep is O(tens) of full-frame
-      // rounds and is what all three q_core_number* gates ship. The peel
-      // remains the per-k primitive kCore uses at a single level.
+      // rounds. kCore peels at its single level k only.
       results += item("core_number_hindex")(
         Components.coreNumberHIndex(g)._1.count())
     }

@@ -342,16 +342,24 @@ class AlgoSpec extends SparkSpec {
   test("h-index core number equals the peel on the gated RMAT fixture, all degree types") {
     // the exact fixture + degree types behind q_core_number{,_in,_out}: the
     // DuckDB oracle unrolls the peel, the gate runs the h-index fixpoint —
-    // this equality is what licenses the swap
+    // this equality with the plain-Scala peel is what licenses the swap
     val g = Fixtures.rmatGraph(spark)
+    val vs = g.vertices.select(ID).collect().map(_.getLong(0)).toSeq
+    val es = g.edges.select(SRC, DST).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     for (dt <- Seq("bidirectional", "incoming", "outgoing")) {
-      val peel = Components.coreNumberWithStats(g, degreeType = dt)._1.collect()
-        .map(r => r.getLong(0) -> r.getInt(1).toLong).toMap
       val (hRes, sweeps) = Components.coreNumberHIndex(g, degreeType = dt)
       val h = hRes.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(h == peel, s"h-index != peel for degree_type=$dt")
+      assert(h == CorePeel(vs, es, dt), s"h-index != peel for degree_type=$dt")
       assert(sweeps < 50, s"h-index took $sweeps sweeps on a 192-vertex fixture")
     }
+  }
+
+  test("h-index core number throws when maxIter ends before the fixpoint") {
+    // path 1-2-3-4-5: the first sweep lowers h(2) and h(4) from 2 to 1
+    val g = graphOf(Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)), directed = false)
+    val err = intercept[IllegalArgumentException](Components.coreNumberHIndex(g, maxIter = 1))
+    assert(err.getMessage.contains("raise maxIter"), err.getMessage)
+    assert(Components.coreNumberHIndex(g)._1.collect().forall(_.getLong(1) == 1L))
   }
 
   test("topological levels respect the DAG order") {
@@ -359,6 +367,16 @@ class AlgoSpec extends SparkSpec {
     val lvl = TreeDag.topologicalLevels(g).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(lvl == Map(1L -> 0, 2L -> 1, 3L -> 1, 4L -> 2))
+  }
+
+  test("topological levels throw on a cycle and when maxRounds ends first") {
+    val cyc = intercept[IllegalArgumentException](
+      TreeDag.topologicalLevels(graphOf(Seq((1L, 2L), (2L, 3L), (3L, 2L)))))
+    assert(cyc.getMessage.contains("graph has a cycle"), cyc.getMessage)
+    val chain = graphOf(Seq((1L, 2L), (2L, 3L)))
+    val cap = intercept[IllegalArgumentException](TreeDag.topologicalLevels(chain, maxRounds = 2))
+    assert(cap.getMessage.contains("unplaced after 2 rounds"), cap.getMessage)
+    assert(TreeDag.topologicalLevels(chain, maxRounds = 3).count() == 3)
   }
 
   test("Jaccard on a known pair") {

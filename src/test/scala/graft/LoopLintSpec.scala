@@ -1,28 +1,43 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Static lint over the frontier-traversal sources, in the style of
-  * [[KnobLintSpec]]: BFS, SSSP, their batched twins, path extraction and
-  * Brandes all run on `Iterate.fixpoint`, which owns materialize-and-observe,
+/** Static lint over the kernel sources that run on `Iterate.fixpoint`, in
+  * the style of [[KnobLintSpec]]. The driver owns materialize-and-observe,
   * the round counter, the cap, the free of the previous state and the
-  * regime scope. A `while (` loop or a direct `materializeCount(` call in
-  * these files is a hand-rolled frontier loop coming back. */
+  * regime scope, so a direct `materializeCount(` call in these files is a
+  * hand-rolled loop coming back.
+  *  - BFS, SSSP, their batched twins, path extraction and Brandes
+  *    (Traversal, MultiTraversal, Centrality) have no `while (` loop either.
+  *  - The peeling and Luby kernels (Components, Misc) keep two outer
+  *    driver-side loops: SCC's extraction rounds and the Hungarian
+  *    assignment's array scans. */
 class LoopLintSpec extends AnyFunSuite {
 
-  private val files = Seq("Traversal.scala", "MultiTraversal.scala", "Centrality.scala")
-    .map(f => Paths.get("src/main/scala/graft/algos", f))
+  private def sources(names: String*): Seq[Path] =
+    names.map(f => Paths.get("src/main/scala/graft/algos", f))
 
-  test("Traversal, MultiTraversal and Centrality hand-roll no loop: no while (, no materializeCount(") {
-    // the files exist, so the scan cannot pass by reading nothing
+  /** Lines of `files` containing any of `needles`; the files must exist,
+    * so the scan cannot pass by reading nothing. */
+  private def hits(files: Seq[Path], needles: String*): Seq[String] = {
     files.foreach(f => assert(Files.isRegularFile(f), s"not found: ${f.toAbsolutePath}"))
-    val hits = for {
+    for {
       f <- files
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
-      if line.contains("while (") || line.contains("materializeCount(")
+      if needles.exists(line.contains)
     } yield s"  ${f.getFileName}:${i + 1} ${line.trim}"
-    assert(hits.isEmpty, "hand-rolled frontier loop:\n" + hits.mkString("\n"))
+  }
+
+  test("Traversal, MultiTraversal and Centrality hand-roll no loop: no while (, no materializeCount(") {
+    val found = hits(sources("Traversal.scala", "MultiTraversal.scala", "Centrality.scala"),
+      "while (", "materializeCount(")
+    assert(found.isEmpty, "hand-rolled frontier loop:\n" + found.mkString("\n"))
+  }
+
+  test("Components and Misc hand-roll no round: no materializeCount(") {
+    val found = hits(sources("Components.scala", "Misc.scala"), "materializeCount(")
+    assert(found.isEmpty, "hand-rolled peel or Luby round:\n" + found.mkString("\n"))
   }
 }

@@ -35,6 +35,22 @@ class MiscSpec extends SparkSpec {
     assert(und.forall { case (a, b) => colors(a) != colors(b) })
   }
 
+  test("MIS throws when maxRounds ends before the arena empties") {
+    // a 20-vertex path: one Luby round cannot decide every vertex
+    val path = graphOf((1L until 20L).map(i => (i, i + 1)), directed = false)
+    val err = intercept[IllegalArgumentException](Misc.misWithRounds(path, maxRounds = 1))
+    assert(err.getMessage.contains("vertices remain after 1 rounds"), err.getMessage)
+    assert(Misc.misWithRounds(path)._2 > 1)
+  }
+
+  test("vertex coloring throws when maxColors ends before every vertex is colored") {
+    val triangle = graphOf(Seq((1L, 2L), (2L, 3L), (3L, 1L)), directed = false)
+    val err = intercept[IllegalArgumentException](
+      Misc.vertexColoringWithStats(triangle, maxColors = 2))
+    assert(err.getMessage.contains("uncolored after 2 colors"), err.getMessage)
+    assert(Misc.vertexColoringWithStats(triangle, maxColors = 3)._2 == 3)
+  }
+
   test("fast coloring is proper, deterministic, and colors every vertex") {
     // random-ish denser graph than the fixture so repair rounds actually run
     val es = (for (i <- 0L until 40L; j <- (i + 1) until 40L
@@ -108,7 +124,13 @@ class MiscSpec extends SparkSpec {
     val g = graphOf(es).symmetrized
     val wg = wGraphOf(es.map { case (a, b) => (a, b, 1.0 + (a * b) % 5) }).symmetrized
     val dg = graphOf(es)
-    Seq(g, wg, dg).foreach(_.numVertices)
+    val dag = graphOf(es.filter { case (a, b) => a < b })
+    // a pendant vertex 8 for the 2-core to peel
+    val pendant = graphOf(es :+ ((7L, 8L))).symmetrized
+    import spark.implicits._
+    val values = Seq((1L, 1L, 4L), (1L, 2L, 8L), (2L, 1L, 8L), (2L, 2L, 4L))
+      .toDF("i", "j", "v")
+    Seq(g, wg, dg, dag, pendant).foreach(_.numVertices)
     val ids = (vs: Seq[Long]) => edgeDF(vs.map(v => (v, v))).select(col(SRC).as(ID))
     val kernels = Seq[(String, () => Seq[org.apache.spark.sql.DataFrame])](
       "bfs" -> (() => Seq(Traversal.bfs(g, 1L))),
@@ -135,18 +157,47 @@ class MiscSpec extends SparkSpec {
       "eigenvector" -> (() => Seq(Centrality.eigenvector(wg))),
       "hits" -> (() => Seq(Centrality.hits(dg, normalized = false))),
       "boruvka" -> (() => Seq(TreeDag.boruvkaMst(wg))),
-      "scc" -> (() => Seq(Components.scc(dg))))
+      "scc" -> (() => Seq(Components.scc(dg))),
+      "topologicalLevels" -> (() => Seq(TreeDag.topologicalLevels(dag))),
+      "coreNumber" -> (() => Seq(Components.coreNumber(g))),
+      "kCore" -> (() => Seq(Components.kCore(pendant, 2))),
+      "mis" -> (() => Seq(Misc.mis(g))),
+      "vertexColoring" -> (() => Seq(Misc.vertexColoring(g))),
+      "fastColoringWithStats" -> (() => Seq(Misc.fastColoringWithStats(g, initColors = 2)._1)),
+      "auctionAssignment" -> (() => Seq(Misc.auctionAssignment(values)._1)),
+      "traversedCost" -> { () =>
+        val b = Traversal.bfs(g, 1L)
+        Seq(b, Traversal.traversedCost(b, wg.weightedEdges))
+      },
+      "kTruss" -> (() => Seq(Triangles.kTruss(g, 3))),
+      "kTruss incremental" -> (() => Seq(Triangles.kTrussWithRounds(g, 3,
+        bulkRecomputeFrac = Double.MaxValue)._1)))
     // compared by id: the ContextCleaner may drop an earlier test's
     // unreachable RDDs while a kernel runs
-    def held = spark.sparkContext.getPersistentRDDs.keySet
-    kernels.foreach { case (name, run) =>
+    val sc = spark.sparkContext
+    def held = sc.getPersistentRDDs.keySet
+    val leaks = kernels.flatMap { case (name, run) =>
       val before = held
-      val out = run()
+      // Spark tracks persisted RDDs weakly, so after a GC the ContextCleaner
+      // may unpersist a dropped frame and hide its leak: a poller holds
+      // every persisted RDD seen during the run (each stays reachable for
+      // at least its own materialize job) until the check is done
+      val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
+      val running = new java.util.concurrent.atomic.AtomicBoolean(true)
+      val poller = new Thread(() => while (running.get) {
+        sc.getPersistentRDDs.values.foreach(seen.add)
+        Thread.sleep(1)
+      })
+      poller.setDaemon(true)
+      poller.start()
+      val out = try run() finally { running.set(false); poller.join() }
       out.foreach(df => assert(df.collect().nonEmpty, name))
       Release.free(out: _*)
       val left = held -- before
-      assert(left.isEmpty, s"$name left ${left.size} persisted RDDs behind")
+      java.lang.ref.Reference.reachabilityFence(seen)
+      if (left.isEmpty) None else Some(s"$name left ${left.size} persisted RDDs behind")
     }
+    assert(leaks.isEmpty, leaks.mkString("; "))
   }
 
   test("weighted matching is a valid matching over existing edges") {

@@ -576,22 +576,21 @@ class RandomizedSpec extends SparkSpec {
   test("core numbers equal the sequential peel on random graphs") {
     for (seed <- 1L to 3L) {
       val es = randomEdges(24, 0.2, seed)
-      if (es.nonEmpty) {
-        var a = adj(es)
-        val core = scala.collection.mutable.Map.empty[Long, Long]
-        var k = 0L
-        while (a.nonEmpty) {
-          val victims = a.filter(_._2.size <= k).keys.toSet
-          if (victims.isEmpty) k += 1
-          else {
-            victims.foreach { v => core(v) = k }
-            a = (a -- victims).map { case (v, nb) => v -> (nb -- victims) }
-          }
-        }
-        val got = Components.coreNumber(graphOf(es, directed = false))
+      // directed: each pair in one random orientation, plus a self-loop and
+      // a duplicate edge that the simple graph drops
+      val rng = new scala.util.Random(seed)
+      val des = es.map(e => if (rng.nextBoolean()) e else e.swap)
+      val cases = Seq("bidirectional" -> es) ++
+        (if (des.nonEmpty) Seq("incoming", "outgoing").map(_ -> (des ++ Seq(des.head,
+          (des.head._1, des.head._1)))) else Nil)
+      for ((dt, input) <- cases if input.nonEmpty) {
+        val vs = input.flatMap(e => Seq(e._1, e._2)).distinct
+        val got = Components.coreNumber(graphOf(input, directed = dt != "bidirectional"),
+            degreeType = dt)
           .collect().map(r => r.getLong(0) -> r.getInt(1).toLong).toMap
-        assert(got == core.toMap, s"seed $seed")
+        assert(got == CorePeel(vs, input, dt), s"seed $seed, $dt")
       }
     }
   }
+
 }
