@@ -209,15 +209,14 @@ object Fixtures {
   /** Shared Louvain level-1 labels (maxIter=8) on the supplier graph:
     * q_louvain_l1 gates them directly, q_leiden_refine refines them — same
     * deterministic schedule, so one run serves both (the move phase is the
-    * family's dominant cost). Rounds are cached with the labels so both
-    * queries keep their unroll-budget asserts. */
-  private val l1Cache = scala.collection.concurrent.TrieMap[(String, String), (DataFrame, Int)]()
-  def supplierLouvainL1(spark: SparkSession, dir: String): (DataFrame, Int) =
-    l1Cache.getOrElseUpdate((sessionKey(spark), s"louvain_l1:$dir"), {
-      val (labels, rounds) = graft.algos.Community.oneLevelWithRounds(
-        supplierGraph(spark, dir), maxIter = 8)
-      (labels.mat, rounds)
-    })
+    * family's dominant cost). Rounds and the level's converged flag are
+    * cached with the labels so both queries keep their unroll-budget
+    * asserts. The labels read the level's materialized final state. */
+  private val l1Cache =
+    scala.collection.concurrent.TrieMap[(String, String), (DataFrame, Int, Boolean)]()
+  def supplierLouvainL1(spark: SparkSession, dir: String): (DataFrame, Int, Boolean) =
+    l1Cache.getOrElseUpdate((sessionKey(spark), s"louvain_l1:$dir"),
+      graft.algos.Community.oneLevelWithRounds(supplierGraph(spark, dir), maxIter = 8))
 
   /** Shared Brandes states (k=32 sampled roots) on the supplier graph:
     * q_betweenness and q_betweenness_endpoints are two scoring passes over

@@ -343,7 +343,7 @@ object SparkEntry {
       // .louvainL1Supplier). Integral weights make the gain arithmetic
       // bit-reproducible across engines, so this pins the real move logic
       // — gain formula, tie-breaks, parity escalation — not just a floor.
-      val (labels, rounds) = Fixtures.supplierLouvainL1(s, dir)
+      val (labels, rounds, _) = Fixtures.supplierLouvainL1(s, dir)
       require(rounds <= 8, s"louvain level-1 took $rounds rounds, oracle unrolls 8")
       labels
     },
@@ -1423,7 +1423,7 @@ object SparkEntry {
       // L1 labels on the supplier graph, then WCC over intra-community
       // edges, both unrolled in DuckDB (MiscSql.leidenRefineSupplier).
       val g = Fixtures.supplierGraph(s, dir)
-      val (labels, lr) = Fixtures.supplierLouvainL1(s, dir)
+      val (labels, lr, _) = Fixtures.supplierLouvainL1(s, dir)
       require(lr <= 8, s"louvain level-1 took $lr rounds, oracle unrolls 8")
       val (refined, wr) = Community.leidenRefine(g, labels, "community")
       require(wr <= 6, s"refinement WCC took $wr rounds, oracle unrolls 6")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.{PropertyGraph, Structure, Gr}
-import graft.prims.Regime
+import graft.prims.{Iterate, Regime}
 
 /** Community detection: Louvain (+ Leiden-style refinement hook, ECG) and
   * the clustering-quality analyzers (modularity / edge cut / ratio cut).
@@ -17,8 +17,10 @@ import graft.prims.Regime
   *
   * Spark realization of one Louvain move round: per-vertex
   * neighbor-community weights = one join + groupBy(vertex, community); best
-  * move = Window top-1 by delta-modularity; community aggregates = one
-  * groupBy(community). Contraction = `Structure.coarsen` (join×2 + agg).
+  * move = max_by top-1 by delta-modularity; community aggregates = one
+  * groupBy(community). A level's move rounds run on `Iterate.fixpoint`,
+  * whose stop rule holds the parity / stall / probe escalation schedule
+  * ([[moveLevel]]). Contraction = `Structure.coarsen` (join×2 + agg).
   */
 object Community {
   import Gr._
@@ -127,13 +129,15 @@ object Community {
     var ownsLvlEdges = false
     while (level < maxLevel && improved) {
       level += 1
-      val (lvlLabels, nLvl) = oneLevelCounted(lvlEdges, maxIter, resolution)
+      val (keyed, _, _, nLvl) =
+        moveLevel(lvlEdges.withColumn("run", lit(0L)), maxIter, resolution, inputMat = true)
+      val lvlLabels = keyed.drop("run")
       // map original vertices through this level's assignment — the level
       // label table is one row per CURRENT-level vertex (shrinks per
       // level), so it rides the same size-gated broadcast as the in-round
       // state joins instead of shuffling the original-V flat table.
       // Level 1: the label table already IS the (original id → community)
-      // map over exactly the base vertex set (oneLevel's state covers every
+      // map over exactly the base vertex set (the level's state covers every
       // endpoint of base, the same set extractVertexList(base) yields), so
       // it becomes flat directly — no vertex-list build, no re-map join.
       val newFlat =
@@ -179,54 +183,43 @@ object Community {
     (flat, prevQ, level)
   }
 
-  /** One Louvain level: synchronous best-move rounds until no vertex moves.
-    * @return (DataFrame(id, community), vertex count of this level). */
-  private def oneLevelCounted(und: DataFrame, maxIter: Int,
-                              resolution: Double): (DataFrame, Long) = {
-    // callers (louvainPrepared) always pass a MATERIALIZED level graph
-    // (the prepared base or a coarsen .mat), so the level skips its own
-    // full-size edge copy — at scale 22 that copy was 134M rows per level
-    val (labels, _, n) =
-      oneLevelKeyedCounted(und.withColumn("run", lit(0L)), maxIter, resolution,
-        inputMat = true)
-    (labels.drop("run"), n)
-  }
-
-  /** Public level-1 entry exposing the ROUND COUNT, for gates that pin the
-    * exact move schedule (the q_louvain_l1 DuckDB oracle unrolls the same
-    * fixed rounds: full-move round 1, then parity-masked rounds — see
-    * oneLevelKeyed). Prep matches [[louvain]]: self-loops dropped,
-    * symmetrized without weight summing. */
+  /** Public level-1 entry exposing the ROUND COUNT and the level's
+    * convergence, for gates that pin the exact move schedule (the
+    * q_louvain_l1 DuckDB oracle unrolls the same fixed rounds: full-move
+    * round 1, then parity-masked rounds — see [[moveLevel]]). A level that
+    * stops at `maxIter` returns converged = false. Prep matches
+    * [[louvain]]: self-loops dropped, symmetrized without weight summing.
+    * @return (DataFrame(id, community), rounds, converged). */
   def oneLevelWithRounds(g: PropertyGraph, maxIter: Int = 20,
-                         resolution: Double = 1.0): (DataFrame, Int) = {
+                         resolution: Double = 1.0): (DataFrame, Int, Boolean) = {
     val base = Structure.removeSelfLoops(
       Structure.symmetrize(g.weightedEdges.select(SRC, DST, WEIGHT), sumWeights = false))
-    val (labels, rounds) =
-      oneLevelKeyed(base.withColumn("run", lit(0L)), maxIter, resolution)
-    (labels.drop("run"), rounds)
+    val (labels, rounds, converged, _) =
+      moveLevel(base.withColumn("run", lit(0L)), maxIter, resolution)
+    (labels.drop("run"), rounds, converged)
   }
 
-  /** Batched one-level Louvain over MANY graphs at once: every state table
-    * carries a `run` key, so an ensemble of R randomized runs (ECG) costs
-    * one set of per-round jobs instead of R — the same batching trick as
-    * multi-source BFS and k-sampled Brandes (SURVEY §7.4-2). The per-run
+  /** One Louvain level: synchronous best-move rounds on [[Iterate.fixpoint]]
+    * until no vertex moves, batched over MANY graphs at once. Every state
+    * table carries a `run` key, so an ensemble of R randomized runs (ECG)
+    * costs one set of per-round jobs instead of R — the same batching trick
+    * as multi-source BFS and k-sampled Brandes (SURVEY §7.4-2). The per-run
     * 2m normalizer is a broadcast-joined table instead of a driver scalar.
     * Converged runs simply stop changing while the stragglers finish.
-    * Input: (run, src, dst, weight); output ((run, id, community), rounds). */
-  private def oneLevelKeyed(undK: DataFrame, maxIter: Int,
-                            resolution: Double): (DataFrame, Int) = {
-    val (labels, rounds, _) = oneLevelKeyedCounted(undK, maxIter, resolution)
-    (labels, rounds)
-  }
-
-  /** `inputMat`: the caller's edge frame is already materialized, so the
+    *
+    * `inputMat`: the caller's edge frame is already materialized, so the
     * run-keyed projection over it is recomputable at scan cost — skip the
     * level's own full-size checkpoint copy (and don't free the caller's
-    * frame). The ECG ensemble path keeps `inputMat = false`: its input is
-    * an expensive lazy explode that must be pinned once. */
-  private def oneLevelKeyedCounted(undK: DataFrame, maxIter: Int,
-                                   resolution: Double,
-                                   inputMat: Boolean = false): (DataFrame, Int, Long) = {
+    * frame). louvainPrepared passes its prepared base or a coarsen .mat
+    * (at scale 22 the skipped copy was 134M rows per level). The ECG
+    * ensemble path keeps `inputMat = false`: its input is an expensive lazy
+    * explode that must be pinned once.
+    *
+    * Input: (run, src, dst, weight).
+    * @return (DataFrame(run, id, community), rounds, converged, state rows);
+    *         converged is false when `maxIter` ended the level. */
+  private def moveLevel(undK: DataFrame, maxIter: Int, resolution: Double,
+                        inputMat: Boolean = false): (DataFrame, Int, Boolean, Long) = {
     val e = if (inputMat) undK else undK.mat
     // k_i: weighted degree (self-loops count fully toward k_i here since the
     // coarsened graph stores c->c weight once per direction pair). The row
@@ -259,7 +252,7 @@ object Community {
     // now reads one checkpointed frame — two recomputed join subplans per
     // round gone. Values are identical; all gated fixtures carry
     // integer-valued weights, so every reordered sum stays bit-exact.
-    var state = ki.select(col("run"), col(ID), col(ID).as("community"), col("k")).mat
+    val init = ki.select(col("run"), col(ID), col(ID).as("community"), col("k")).mat
     // Edge stream prepared ONCE per level (r7 verdict item #2 — cut the
     // per-round job count): static per-source k attached (the candidate
     // rows then carry k, so scoring needs no per-vertex state join), and
@@ -326,17 +319,15 @@ object Community {
     // frame belongs to the caller (inputMat) it is NOT freed here.
     if (inputMat) graft.prims.Release.free(ki)
     else graft.prims.Release.free(e, ki)
-    var moved = 1L
-    var zeroStreak = 0
-    var it = 0
-    // Synchronous best-move updates can oscillate (two vertices that each
-    // want the other's community swap forever — a constant nonzero moved
-    // count burning maxIter rounds). Always-on parity masking fixes that
-    // but doubles the round count on well-behaved graphs, so parity is
-    // ESCALATION, not default: the opening full-move round either moves
-    // nothing (converged) or switches the loop to the masked regime where
-    // only vertices with (id+round) parity may move. Converged = one zero-move full round, or
-    // maskMod consecutive zero-move masked rounds (one per residue class).
+    // The move schedule. Synchronous best-move updates can oscillate (two
+    // vertices that each want the other's community swap forever — a
+    // constant nonzero moved count burning maxIter rounds). Always-on parity
+    // masking fixes that but doubles the round count on well-behaved graphs,
+    // so parity is ESCALATION, not default: the opening full-move round
+    // either moves nothing (converged) or switches the loop to the masked
+    // regime where only vertices with (id+round) parity may move. Converged
+    // = one zero-move full round, or maskMod consecutive zero-move masked
+    // rounds (one per residue class).
     // Parity itself can still churn (same-parity neighbors co-moving in a
     // cycle — observed on small G(n,p) graphs by RandomizedSpec): after
     // `StallLimit` consecutive nonzero masked rounds the residue modulus
@@ -346,13 +337,18 @@ object Community {
     // m rounds, so after two zero masked rounds ONE free probe round
     // certifies instead: zero probe moves = global single-move optimality;
     // nonzero = the free round re-perturbed, escalate the modulus and keep
-    // masking. Gated fixtures converge in plain parity mode well before
-    // StallLimit, so their unrolled oracles are untouched.
+    // masking. Gated fixtures cap their levels at 5–8 rounds, so StallLimit
+    // never fires there (at most 7 masked rounds) and their unrolled
+    // oracles are untouched.
+    // The fixpoint's stop rule below is the only code that updates this
+    // state; the step reads it to build the round's move mask.
     val StallLimit = 8
     var parityMode = false
     var maskMod = 2L
     var stall = 0
+    var zeroStreak = 0
     var probe = false
+    var settled = 0 // rounds the stop rule has seen
     // AQE off for the loop UNDER THE BROADCAST GATE ONLY (prims.Aqe
     // scaladoc): there every join inside is explicitly broadcast-hinted,
     // so AQE's only contribution is one query-stage job per exchange —
@@ -364,10 +360,13 @@ object Community {
     // over the power-law edge stream, where AQE's runtime skew split and
     // plan sizing earn their keep — disabling it there OOM'd the 32g scale-22 ecg4
     // probe while the same code completed louvain at 4× the per-run data.
-    try {
-    Regime.scope(e.sparkSession, nState, math.max(nState, nEdgeStream)) {
-    while (zeroStreak < maskMod && it < maxIter) {
-      it += 1
+    val (fin, rounds, converged) = try {
+      Iterate.fixpoint(init, maxIter, nState, math.max(nState, nEdgeStream))({ (prev, rnd) =>
+      val state = prev.select(col("run"), col(ID), col("community"), col("k"))
+      // rounds count from 1 in the parity residue, as the oracles unroll it
+      val mayMove =
+        if (parityMode && !probe) pmod(col(ID) + lit(rnd + 1), lit(maskMod)) === 0
+        else lit(true)
       // per-vertex weight to each neighboring community (self-loops
       // excluded from candidate weights — a vertex always "links" to its
       // own c). The dst-side community attach is a shuffle-hash join
@@ -439,34 +438,12 @@ object Community {
             max(when(col("nc") === col("c_cur"), col("gain"))).as("intra_gain"),
             max(lit(0.0) - lit(resolution) * col("k") * (col("tot_cur") - col("k"))
               / m2Col).as("stay_base"))
-        val mayMove =
-          if (parityMode && !probe) pmod(col(ID) + lit(it), lit(maskMod)) === 0
-          else lit(true)
-        val roundFrame = state.join(best, Seq("run", ID), "left")
+        state.join(best, Seq("run", ID), "left")
           .select(col("run"), col(ID), col("community").as("old"),
             when(mayMove &&
                  col("b.gain") > coalesce(col("intra_gain"), col("stay_base")) + lit(1e-12),
               col("b.nc")).otherwise(col("community")).as("community"),
             col("k"))
-        val (nextC, movedNow) = graft.prims.Iterate.materializeCount(roundFrame,
-          sum(when(col("community") =!= col("old"), 1L).otherwise(0L)),
-          _.filter(col("community") =!= col("old")).count())
-        moved = movedNow
-        if (!parityMode) {
-          if (moved == 0) zeroStreak = Int.MaxValue
-          else parityMode = true
-        } else if (probe) {
-          probe = false
-          if (moved == 0) zeroStreak = Int.MaxValue
-          else { maskMod *= 2; stall = 0; zeroStreak = 0 }
-        } else {
-          zeroStreak = if (moved == 0) zeroStreak + 1 else 0
-          stall = if (moved == 0) 0 else stall + 1
-          if (stall >= StallLimit) { maskMod *= 2; stall = 0; zeroStreak = 0 }
-          if (maskMod > 2 && zeroStreak >= 2) probe = true
-        }
-        graft.prims.Release.free(state)
-        state = nextC.select(col("run"), col(ID), col("community"), col("k"))
       } else {
       // tot_c = Σ k_i over community members, derived from the state frame
       val tot = state.groupBy("run", "community").agg(sum("k").as("tot"))
@@ -531,20 +508,17 @@ object Community {
       // move only on strict positive improvement over staying; every state
       // vertex appears in best (the self row guarantees its group), so
       // next-state derives from best alone — no state re-join
-      val mayMove =
-        if (parityMode && !probe) pmod(col(ID) + lit(it), lit(maskMod)) === 0
-        else lit(true)
-      // the moved count rides the materialization job itself — no separate
-      // per-round count scan
-      val (nextC, movedNow) = graft.prims.Iterate.materializeCount(
-        best.select(col("run"), col(ID), col("old"),
-            when(mayMove &&
-                 col("b.gain") > coalesce(col("stay_gain"), lit(0.0)) + lit(1e-12), col("b.nc"))
-              .otherwise(col("old")).as("community"),
-            col("k")),
-        sum(when(col("community") =!= col("old"), 1L).otherwise(0L)),
-        _.filter(col("community") =!= col("old")).count())
-      moved = movedNow
+      best.select(col("run"), col(ID), col("old"),
+          when(mayMove &&
+               col("b.gain") > coalesce(col("stay_gain"), lit(0.0)) + lit(1e-12), col("b.nc"))
+            .otherwise(col("old")).as("community"),
+          col("k"))
+      }
+      },
+      // the round's movers
+      Some(sum(when(col("community") =!= col("old"), 1L).otherwise(0L))),
+      { (_, _, moved) =>
+      settled += 1
       // Past the broadcast gate each round still exchanges the candidate
       // stream (repartition + tot join) — tens of GB of shuffle files at
       // ensemble scale whose deletion waits on the ContextCleaner, which
@@ -556,7 +530,7 @@ object Community {
       // long-loop deployments additionally set
       // spark.cleaner.periodicGC.interval (ScaleProbe pins 60s), which
       // bounds scratch continuously regardless of round cadence.
-      if (!Regime.fits(nState) && it % 3 == 0) System.gc()
+      if (!broadcastRound && settled % 3 == 0) System.gc()
       if (!parityMode) {
         if (moved == 0) zeroStreak = Int.MaxValue // free full round; done
         else parityMode = true // escalate after the opening mass-move round
@@ -573,23 +547,17 @@ object Community {
         // 2-zero-rounds exit, which gated oracles unroll)
         if (maskMod > 2 && zeroStreak >= 2) probe = true
       }
-      // the round's reads of the old state all fed nextC's materialization —
-      // free its blocks now instead of holding rounds × nState rows for the
-      // rest of the composed run (prims.Release scaladoc)
-      graft.prims.Release.free(state)
-      state = nextC.select(col("run"), col(ID), col("community"), col("k"))
-      }
-    }
-    }
+      zeroStreak >= maskMod
+      })
     } finally {
       eNoSelfK.unpersist(false)
     }
-    (state.select(col("run"), col(ID), col("community")), it, nState)
+    (fin.select(col("run"), col(ID), col("community")), rounds, converged, nState)
   }
 
   /** Co-clustering vote table of the batched ECG ensemble: `ensembleSize`
     * perturbed one-level Louvain runs in ONE run-keyed level
-    * (oneLevelKeyed — R runs cost one set of per-round jobs, not R), then
+    * ([[moveLevel]] — R runs cost one set of per-round jobs, not R), then
     * votes = how many runs co-cluster each undirected edge's endpoints.
     *
     * The per-run perturbation is INTEGRAL: w · (10000 + md5-hash(edge,run)
@@ -625,7 +593,7 @@ object Community {
         (col(WEIGHT) * (lit(10000L) + pmod(graft.pipeline.TextOps.hash60(
           concat_ws("|", lit("ecg"), col(SRC), col(DST), lit(seed) + col("run"))),
           lit(1000)))).as(WEIGHT))
-    val labels = oneLevelKeyed(undR, maxIter, resolution = 1.0)._1.mat
+    val (labels, _, _, _) = moveLevel(undR, maxIter, resolution = 1.0)
     // co-clustering votes per edge: one pass over (run × edges) — read
     // from the sliced frame for the same post-explode reason as above.
     // Materialized HERE so the ensemble's label table and base frame (the
@@ -704,9 +672,11 @@ object Community {
       louvainPrepared(base, maxLevel, maxIter = maxIter, resolution = resolution)
     // materialize the refinement output before freeing the Louvain phase:
     // the WCC star path's label frame is lazy over the input vertex list,
-    // which here IS the Louvain label table (prims.Release scaladoc)
-    val refined = leidenRefinePrepared(base.select(SRC, DST), labels, "louvain")._1.mat
-    graft.prims.Release.free(labels)
+    // which here IS the Louvain label table (prims.Release scaladoc); the
+    // WCC state under it is dead once the copy exists
+    val (wcc, _) = leidenRefinePrepared(base.select(SRC, DST), labels, "louvain")
+    val refined = wcc.mat
+    graft.prims.Release.free(wcc, labels)
     val q = modularity(base, refined, resolution)
     graft.prims.Release.free(base)
     (refined, q)

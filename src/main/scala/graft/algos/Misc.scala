@@ -230,13 +230,22 @@ object Misc {
       // compact per round: `pairs` feeds the mv anti-joins below, so a lazy
       // union chain would replan r frames in round r (matched is tiny —
       // the checkpoint is one cheap job per round)
-      pairs = if (pairs == null) matched else pairs.union(matched).mat
+      if (pairs == null) pairs = matched
+      else {
+        val grown = pairs.union(matched).mat
+        Release.free(pairs, matched)
+        pairs = grown
+      }
       val mv = pairs.select(col(SRC).as(ID)).union(pairs.select(col(DST).as(ID))).distinct()
-      remE = remE
+      val rest = remE
         .join(mv.withColumnRenamed(ID, SRC), Seq(SRC), "left_anti")
         .join(mv.withColumnRenamed(ID, DST), Seq(DST), "left_anti")
         .mat
+      // the first round's remE is und itself
+      Release.free(remE)
+      remE = rest
     }
+    Release.free(remE)
     pairs
   }
 
@@ -511,14 +520,17 @@ object Misc {
       // snap to a 1e-8 grid each round: float-sum association differs across
       // partitionings (and engines), and without the snap an ulp of drift
       // compounds through floor(x*grid) cell binning into divergent layouts
-      pos = rep.join(att, Seq(ID), "left")
+      val next = rep.join(att, Seq(ID), "left")
         .select(col(ID),
           round(least(greatest(col("x") + lit(step) * (coalesce(col("ax"), lit(0.0)) * 0.1 + col("rx") * lit(repCoeff)
             + lit(gravity) * (lit(0.5) - col("x"))), lit(0.0)), lit(1.0)), 8).as("x"),
           round(least(greatest(col("y") + lit(step) * (coalesce(col("ay"), lit(0.0)) * 0.1 + col("ry") * lit(repCoeff)
             + lit(gravity) * (lit(0.5) - col("y"))), lit(0.0)), lit(1.0)), 8).as("y"))
         .mat
+      Release.free(pos)
+      pos = next
     }
+    Release.free(und)
     pos
   }
 }

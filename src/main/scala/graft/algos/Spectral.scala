@@ -4,7 +4,7 @@ import graft.prims.Mat._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.{PropertyGraph, Structure, Gr}
-import graft.prims.Regime
+import graft.prims.{Regime, Release}
 
 /** Spectral graph clustering (reference: legacy Lanczos+kmeans
   * `algorithms.hpp:878` `spectralBalancedCutClustering`, `:914`
@@ -87,6 +87,8 @@ object Spectral {
       val vRen = v.withColumnRenamed(ID, DST)
       val y = trans.join(graft.prims.Hint.state(vRen, n), DST)
         .groupBy(col(SRC).as(ID)).agg(sum(col("w") * col("v")).as("v")).mat
+      // v (the initial frame, or the previous round's y under it) is dead
+      Release.free(v)
       // center + L∞ rescale from ONE scalar agg (max|y−c| = max(mx−c, c−mn));
       // the single driver sync per iteration, same budget as the eigen
       // path's Gram collect
@@ -99,7 +101,10 @@ object Spectral {
       // small fixtures
       v = y.select(col(ID), round((col("v") - lit(c)) / lit(m), 8).as("v"))
     }
-    v = v.mat
+    val embedded = v.mat
+    // v is a projection over the last round's y
+    Release.free(v, und, deg, trans)
+    v = embedded
     }
     // deterministic 1-D k-means: evenly spaced initial centroids over the
     // embedding's range (scalars from one agg — no global sort), then Lloyd
@@ -185,11 +190,14 @@ object Spectral {
       // ULP level; snapping re-quantizes the state each round so the DuckDB
       // oracle (MiscSql.spectralEigenSupplier) reproduces the iteration
       // exactly instead of drifting
-      x = y.select(col(ID) +: (0 until p).map(j =>
+      val next = y.select(col(ID) +: (0 until p).map(j =>
         round((0 to j).map(i => col(s"x$i") * lit(rInv(i)(j))).reduce(_ + _), 8).as(s"x$j")): _*)
         .mat
+      Release.free(x, y)
+      x = next
     }
     }
+    Release.free(und, aNorm)
     // deterministic k-means on the embedding: centroids seeded from the k
     // smallest vertex ids, Lloyd rounds with arg-min assignment
     var cents: Array[(Long, Array[Double])] = x.orderBy(ID).limit(k).collect()

@@ -402,6 +402,21 @@ class AlgoSpec extends SparkSpec {
     assert(q > 0.3)
   }
 
+  test("a Louvain level capped before it settles reports converged = false") {
+    // the two-block graph above: every vertex moves in the opening round,
+    // so a 1-round cap ends the level mid-flight — reported, not thrown
+    val k4a = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
+    val k4b = k4a.map { case (a, b) => (a + 10L, b + 10L) }
+    val g = wGraphOf((k4a ++ k4b :+ ((4L, 11L))).map { case (a, b) => (a, b, 1.0) },
+      directed = false)
+    val (capped, rounds, converged) = Community.oneLevelWithRounds(g, maxIter = 1)
+    assert((rounds, converged) == ((1, false)))
+    assert(capped.count() == 8L)
+    val (_, fullRounds, fullConverged) = Community.oneLevelWithRounds(g)
+    assert(fullConverged, s"level did not converge in $fullRounds rounds")
+    assert(fullRounds > 1)
+  }
+
   test("betweenness endpoints=True matches hand-computed P3 values") {
     // path 0-1-2: paths {0-1},{0-1-2},{1-2}; endpoint counting gives
     // bc = (2, 3, 2), normalized by n(n-1)/2 = 3 → (2/3, 1, 2/3)

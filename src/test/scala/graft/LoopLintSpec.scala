@@ -13,7 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    (Traversal, MultiTraversal, Centrality) have no `while (` loop either.
   *  - The peeling and Luby kernels (Components, Misc) keep two outer
   *    driver-side loops: SCC's extraction rounds and the Hungarian
-  *    assignment's array scans. */
+  *    assignment's array scans.
+  *  - Louvain's move phase (Community) keeps one `while (`: the level
+  *    loop, an outer cascade whose levels each run on `Iterate.fixpoint`. */
 class LoopLintSpec extends AnyFunSuite {
 
   private def sources(names: String*): Seq[Path] =
@@ -39,5 +41,13 @@ class LoopLintSpec extends AnyFunSuite {
   test("Components and Misc hand-roll no round: no materializeCount(") {
     val found = hits(sources("Components.scala", "Misc.scala"), "materializeCount(")
     assert(found.isEmpty, "hand-rolled peel or Luby round:\n" + found.mkString("\n"))
+  }
+
+  test("Community hand-rolls no move round: no materializeCount(, one while ( (the level loop)") {
+    val community = sources("Community.scala")
+    val rounds = hits(community, "materializeCount(")
+    assert(rounds.isEmpty, "hand-rolled Louvain move round:\n" + rounds.mkString("\n"))
+    val loops = hits(community, "while (")
+    assert(loops.size == 1, "expected only the level loop:\n" + loops.mkString("\n"))
   }
 }

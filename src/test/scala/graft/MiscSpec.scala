@@ -171,7 +171,15 @@ class MiscSpec extends SparkSpec {
       },
       "kTruss" -> (() => Seq(Triangles.kTruss(g, 3))),
       "kTruss incremental" -> (() => Seq(Triangles.kTrussWithRounds(g, 3,
-        bulkRecomputeFrac = Double.MaxValue)._1)))
+        bulkRecomputeFrac = Double.MaxValue)._1)),
+      "louvain" -> (() => Seq(Community.louvain(wg)._1)),
+      "leiden" -> (() => Seq(Community.leiden(wg)._1)),
+      "ecgVotes" -> (() => Seq(Community.ecgVotes(wg, ensembleSize = 2))),
+      "ecg" -> (() => Seq(Community.ecg(wg, ensembleSize = 2)._1)),
+      "weightedMatching" -> (() => Seq(Misc.weightedMatching(wg))),
+      "forceAtlas2" -> (() => Seq(Misc.forceAtlas2(g))),
+      "balancedCutEigen" -> (() => Seq(Spectral.balancedCutEigen(wg, k = 2, numEigenVects = 2))),
+      "balancedCut" -> (() => Seq(Spectral.balancedCut(wg, k = 2))))
     // compared by id: the ContextCleaner may drop an earlier test's
     // unreachable RDDs while a kernel runs
     val sc = spark.sparkContext
