@@ -247,7 +247,10 @@ object Components {
     * `components/strongly_connected_components_impl.cuh`, which likewise
     * interleaves trim with FW-BW rounds).
     *
-    * Each outer round over the remaining subgraph:
+    * The extraction runs on [[Iterate.fixpoint]] over the state (id,
+    * component) of every vertex, component null while the vertex is still
+    * in play; the metric counts the nulls and the loop stops at 0. Each
+    * round over the remaining subgraph:
     *  1. TRIM — iteratively extract vertices with zero remaining in- or
     *     out-degree as singleton SCCs (nothing with no inbound/outbound
     *     edge can sit on a cycle; removing whole SCCs preserves the SCCs
@@ -262,96 +265,73 @@ object Components {
     *     next round — total sweeps stay O(diameter) without any unbounded
     *     inner fixpoint. On converged labels the smallest remaining vertex
     *     is always extracted, so every converged round makes progress.
-    * Label = min vertex id of the SCC.
+    * The edge set is a side frame, shrunk to the trimmed remainder once
+    * per round. Label = min vertex id of the SCC. Throws if `maxRounds`
+    * rounds end with vertices unextracted.
     * @return DataFrame(id, component). */
   def scc(g: PropertyGraph, maxRounds: Int = 50, propCap: Int = 20,
           trimCap: Int = 20): DataFrame = {
-    val spark = g.spark
-    import spark.implicits._
     var edges = g.edges.select(SRC, DST).distinct().mat
-    var verts = g.vertices.select(ID).mat
-    var result = spark.emptyDataset[(Long, Long)].toDF(ID, "component")
-    // extracted SCCs accumulate as a LAZY union chain, compacted every 8
-    // appends (r11-opt): re-checkpointing the whole growing result on every
-    // trim iteration was one full result-sized write per peel for frames
-    // that are only read at the end. A compaction frees the chain it copied.
-    var resultChain = 0
-    def appendResult(df: DataFrame): Unit = {
-      result = result.union(df)
-      resultChain += 1
-      if (resultChain >= 8) {
-        val chain = result
-        result = result.mat; resultChain = 0
-        Release.free(chain)
-      }
-    }
-    // replace a remainder frame by its materialized successor, freeing it
-    def shrink(prev: DataFrame, next: DataFrame): DataFrame = {
-      val m = next.mat
-      Release.free(prev)
-      m
-    }
-    var round = 0
+    val open = col("component").isNull
+    val init = g.vertices.select(col(ID), lit(null).cast("long").as("component")).mat
+    var n = init.count() // vertices still in play
     var cap = propCap
-    var n = verts.count()
-    while (n > 0 && round < maxRounds) {
-      round += 1
+    var labelled = true // whether the round's fwd/bwd labels converged
+    var side = Seq.empty[DataFrame] // the round's frames behind its result
+    val (out, _, _) = Iterate.fixpoint(init, if (n == 0) 0 else maxRounds, -1L)({ (st, _) =>
       // 1. trim: zero-in/out vertices are singleton SCCs (component = own
-      // id). The state is (id, component) over the remainder, null while a
-      // vertex is in play; a round trims every live vertex without a live
-      // in- or out-neighbour, and the loop stops when a round trims nothing.
+      // id); a trim round trims every live vertex without a live in- or
+      // out-neighbour, and the trim stops when a round trims nothing
       var live = n
-      val (trim, _, _) = Iterate.fixpoint(
-          verts.select(col(ID), lit(null).cast("long").as("component")).mat, trimCap, -1L)({
-        (st, _) =>
-          val alive = st.filter(col("component").isNull).select(ID)
-          val e = edges.join(alive.withColumnRenamed(ID, SRC), SRC)
-            .join(alive.withColumnRenamed(ID, DST), DST)
-          val hasOut = e.select(col(SRC).as(ID), lit(true).as("o")).distinct()
-          val hasIn = e.select(col(DST).as(ID), lit(true).as("i")).distinct()
-          st.join(hasOut, Seq(ID), "left").join(hasIn, Seq(ID), "left")
-            .select(col(ID), when(col("component").isNull && (col("o").isNull || col("i").isNull),
-              col(ID)).otherwise(col("component")).as("component"))
-      }, Some(sum(when(col("component").isNull, 1L).otherwise(0L))), { (_, _, m) =>
+      val (trim, _, _) = Iterate.fixpoint(st.filter(open).mat, trimCap, -1L)({ (tr, _) =>
+        val alive = tr.filter(open).select(ID)
+        val e = edges.join(alive.withColumnRenamed(ID, SRC), SRC)
+          .join(alive.withColumnRenamed(ID, DST), DST)
+        val hasOut = e.select(col(SRC).as(ID), lit(true).as("o")).distinct()
+        val hasIn = e.select(col(DST).as(ID), lit(true).as("i")).distinct()
+        tr.join(hasOut, Seq(ID), "left").join(hasIn, Seq(ID), "left")
+          .select(col(ID), when(open && (col("o").isNull || col("i").isNull),
+            col(ID)).otherwise(col("component")).as("component"))
+      }, Some(sum(when(open, 1L).otherwise(0L))), { (_, _, m) =>
         val done = m == live || m == 0
         live = m
         done
       })
-      if (live < n) {
-        val dead = trim.filter(col("component").isNotNull).mat
-        verts = shrink(verts, trim.filter(col("component").isNull).select(ID))
-        edges = shrink(edges, edges
-          .join(dead.select(col(ID).as(SRC)), Seq(SRC), "left_anti")
-          .join(dead.select(col(ID).as(DST)), Seq(DST), "left_anti"))
-        appendResult(dead)
-        n = live
-      }
-      Release.free(trim)
-      if (n > 0) {
-        // 2. capped fwd/bwd coloring over the trimmed remainder
-        val (fwd, fConv) = minLabelProp(verts, edges, forward = true, cap, n)
-        val (bwd, bConv) = minLabelProp(verts, edges, forward = false, cap, n)
-        if (fConv && bConv) {
-          val done = fwd.join(bwd.withColumnRenamed("ml", "ml_b"), ID)
-            .filter(col("ml") === col("ml_b"))
-            .select(col(ID), col("ml").as("component"))
-            .mat
-          Release.free(fwd, bwd)
-          val doneIds = done.select(ID)
-          verts = shrink(verts, verts.join(doneIds, Seq(ID), "left_anti"))
-          edges = shrink(edges, edges
-            .join(doneIds.withColumnRenamed(ID, SRC), Seq(SRC), "left_anti")
-            .join(doneIds.withColumnRenamed(ID, DST), Seq(DST), "left_anti"))
-          appendResult(done)
-          n = verts.count()
-        } else {
-          Release.free(fwd, bwd)
-          cap *= 2 // unconverged labels are unsafe to extract from; retry bigger
+      side = Seq(trim)
+      labelled = true
+      val round =
+        if (live == 0) trim
+        else {
+          // 2. capped fwd/bwd coloring over the trimmed remainder
+          val rem = trim.filter(open).select(ID)
+          val prevEdges = edges
+          edges = edges.join(rem.withColumnRenamed(ID, SRC), Seq(SRC), "left_semi")
+            .join(rem.withColumnRenamed(ID, DST), Seq(DST), "left_semi").mat
+          Release.free(prevEdges)
+          val (fwd, fConv) = minLabelProp(rem, edges, forward = true, cap, live)
+          val (bwd, bConv) = minLabelProp(rem, edges, forward = false, cap, live)
+          side = Seq(trim, fwd, bwd)
+          // unconverged labels are unsafe to extract from
+          labelled = fConv && bConv
+          if (!labelled) trim
+          else {
+            val agree = fwd.join(bwd.withColumnRenamed("ml", "ml_b"), ID)
+              .filter(col("ml") === col("ml_b"))
+              .select(col(ID), col("ml").as("c"))
+            trim.join(agree, Seq(ID), "left")
+              .select(col(ID), coalesce(col("component"), col("c")).as("component"))
+          }
         }
-      }
-    }
-    Release.free(verts, edges)
-    result
+      st.filter(!open).union(round)
+    }, Some(sum(when(open, 1L).otherwise(0L))), { (_, _, m) =>
+      Release.free(side: _*)
+      if (!labelled) cap *= 2 // retry the coloring with a bigger budget
+      n = m
+      m == 0
+    })
+    Release.free(edges)
+    require(n == 0, s"scc: $n vertices unextracted after $maxRounds rounds (raise maxRounds)")
+    out
   }
 
   /** Min-label propagation along (or against) edge direction, capped at

@@ -218,9 +218,9 @@ object Misc {
   def weightedMatching(g: PropertyGraph, rounds: Int = 3): DataFrame = {
     val und = Structure.removeSelfLoops(
       Structure.symmetrize(g.weightedEdges.select(SRC, DST, WEIGHT), sumWeights = false)).mat
-    var remE = und
+    // the state is the remaining edge set (the first is und itself)
     var pairs: DataFrame = null
-    for (_ <- 1 to rounds) {
+    val (remE, _, _) = Iterate.fixpoint(und, rounds, -1L)({ (remE, _) =>
       val best = remE.groupBy(SRC)
         .agg(max_by(col(DST), col(WEIGHT) * lit(1e6) - col(DST)).as("m"))
       val b2 = best.select(col(SRC).as("b_src"), col("m").as("b_m"))
@@ -237,14 +237,10 @@ object Misc {
         pairs = grown
       }
       val mv = pairs.select(col(SRC).as(ID)).union(pairs.select(col(DST).as(ID))).distinct()
-      val rest = remE
+      remE
         .join(mv.withColumnRenamed(ID, SRC), Seq(SRC), "left_anti")
         .join(mv.withColumnRenamed(ID, DST), Seq(DST), "left_anti")
-        .mat
-      // the first round's remE is und itself
-      Release.free(remE)
-      remE = rest
-    }
+    }, None, (_, _, _) => false)
     Release.free(remE)
     pairs
   }
@@ -454,7 +450,7 @@ object Misc {
     val repCoeff = 0.01 * scalingRatio / 2.0
     val hashInit = Structure.extractVertexList(g.edges)
       .select(col(ID), u01x.as("x"), u01y.as("y"))
-    var pos = (posList match {
+    val pos0 = (posList match {
       case Some(p0) =>
         val cols = p0.columns
         hashInit.join(p0.select(col(cols(0)).as(ID), col(cols(1)).as("wx"),
@@ -469,7 +465,7 @@ object Misc {
         (pow(col("x") - col("mx"), 2) + pow(col("y") - col("my"), 2) + lit(1e-4))).as("rx"),
       ((col("y") - col("my")) * col("cnt") /
         (pow(col("x") - col("mx"), 2) + pow(col("y") - col("my"), 2) + lit(1e-4))).as("ry"))
-    for (_ <- 1 to iters) {
+    val (pos, _, _) = Iterate.fixpoint(pos0, iters, -1L)({ (pos, _) =>
       // attraction: pull toward neighbor positions (sum of deltas)
       val att = und
         .join(pos.select(col(ID).as(SRC), col("x").as("sx"), col("y").as("sy")), SRC)
@@ -520,16 +516,13 @@ object Misc {
       // snap to a 1e-8 grid each round: float-sum association differs across
       // partitionings (and engines), and without the snap an ulp of drift
       // compounds through floor(x*grid) cell binning into divergent layouts
-      val next = rep.join(att, Seq(ID), "left")
+      rep.join(att, Seq(ID), "left")
         .select(col(ID),
           round(least(greatest(col("x") + lit(step) * (coalesce(col("ax"), lit(0.0)) * 0.1 + col("rx") * lit(repCoeff)
             + lit(gravity) * (lit(0.5) - col("x"))), lit(0.0)), lit(1.0)), 8).as("x"),
           round(least(greatest(col("y") + lit(step) * (coalesce(col("ay"), lit(0.0)) * 0.1 + col("ry") * lit(repCoeff)
             + lit(gravity) * (lit(0.5) - col("y"))), lit(0.0)), lit(1.0)), 8).as("y"))
-        .mat
-      Release.free(pos)
-      pos = next
-    }
+    }, None, (_, _, _) => false)
     Release.free(und)
     pos
   }

@@ -4,7 +4,7 @@ import graft.prims.Mat._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.core.{PropertyGraph, Structure, Gr}
-import graft.prims.{Iterate, Release}
+import graft.prims.{Hint, Iterate, Release}
 
 /** Minimum spanning tree (Borůvka) and DAG topological sort.
   *
@@ -24,31 +24,40 @@ object TreeDag {
     boruvkaMstWithRounds(g, maximum)._1
 
   /** Borůvka also returning the merge-round count, for oracle round-budget
-    * assertions (rounds ≤ ⌈log2 V⌉: components at least halve per round). */
+    * assertions (rounds ≤ ⌈log2 V⌉ + 1: components at least halve per
+    * round, and the count includes the confirming round). The rounds run
+    * on [[Iterate.fixpoint]] over the component map (id, comp): a round
+    * picks each component's minimum cross edge straight from the lazily
+    * joined edge table, merges the touched components and returns (id,
+    * old, comp). The metric counts the components merged away; the loop
+    * stops at 0 (no cross edge), and once one component is left the
+    * confirming round skips the pick. Throws if 64 rounds end first. */
   def boruvkaMstWithRounds(g: PropertyGraph, maximum: Boolean = false): (DataFrame, Int) = {
     val canon0 = Structure.canonicalize(g.weightedEdges.select(SRC, DST, WEIGHT))
     val canon = (if (maximum) canon0.withColumn(WEIGHT, -col(WEIGHT)) else canon0)
       .mat
-    var comp = Structure.extractVertexList(canon)
+    val comp0 = Structure.extractVertexList(canon)
       .select(col(ID), col(ID).as("comp")).mat
     // the component map stays exactly |V| rows every round — one count up
     // front feeds the size-gated broadcast of both per-round state joins
     // (edge table scanned in place instead of shuffled twice per round)
-    val nV = comp.count()
-    def st(df: DataFrame): DataFrame = graft.prims.Hint.state(df, nV)
+    val nV = comp0.count()
+    def st(df: DataFrame): DataFrame = Hint.state(df, nV)
     var mst = canon.limit(0)
-    var more = true
-    var round = 0
-    while (more && round < 64) {
-      round += 1
-      val (e, nCross) = graft.prims.Iterate.materializeCount(
-        canon
+    // the round's merge-graph frames, freed once the new map is materialized
+    var side = Seq.empty[DataFrame]
+    // a label is its component's smallest id (labels start as ids and merge
+    // by min): a merged-away component is a vertex whose own label changed
+    var nComp = nV
+    val (last, rounds, converged) = Iterate.fixpoint(comp0, 64, -1L)({ (state, _) =>
+      val comp = state.select(ID, "comp")
+      // one component left: no edge crosses
+      if (nComp <= 1) comp.select(col(ID), col("comp").as("old"), col("comp"))
+      else {
+        val e = canon
           .join(st(comp.select(col(ID).as(SRC), col("comp").as("c_src"))), SRC)
           .join(st(comp.select(col(ID).as(DST), col("comp").as("c_dst"))), DST)
-          .filter(col("c_src") =!= col("c_dst")),
-        count(lit(1)), _.count())
-      if (nCross == 0) { more = false; Release.free(e) }
-      else {
+          .filter(col("c_src") =!= col("c_dst"))
         // per-component min edge, deterministic tie-break
         val key = struct(col(WEIGHT), col(SRC), col(DST))
         val fromSrc = e.select(col("c_src").as("comp"), key.as("k"))
@@ -57,7 +66,6 @@ object TreeDag {
           .select(col("k.src").as(SRC), col("k.dst").as(DST), col("k.weight").as(WEIGHT))
           .distinct()
           .mat
-        Release.free(e)
         mst = mst.union(chosen) // lazy: only read after the loop
         // merge components along the chosen star forest — a lean min-label
         // propagation over ONLY the touched components (≤ 2·|chosen| ids;
@@ -89,17 +97,22 @@ object TreeDag {
             .select(col(ID), col("ml").as("old"),
               least(col("ml"), coalesce(col("nm"), col("ml"))).as("ml"))
         }, Some(sum(when(col("ml") < col("old"), 1L).otherwise(0L))), (_, _, ch) => ch == 0)
+        side = Seq(cgSym, merged)
         val lbl = merged.select(col(ID), col("ml"))
-        val prevComp = comp
-        comp = comp.join(st(lbl.withColumnRenamed(ID, "comp")), Seq("comp"), "left")
-          .select(col(ID), coalesce(col("ml"), col("comp")).as("comp"))
-          .mat
-        Release.free(cgSym, merged, prevComp)
+        comp.join(st(lbl.withColumnRenamed(ID, "comp")), Seq("comp"), "left")
+          .select(col(ID), col("comp").as("old"), coalesce(col("ml"), col("comp")).as("comp"))
       }
-    }
+    }, Some(sum(when(col(ID) === col("old") && col("comp") =!= col("old"), 1L)
+        .otherwise(0L))), { (_, _, gone) =>
+      Release.free(side: _*)
+      side = Nil
+      nComp -= gone
+      gone == 0
+    })
+    require(converged, "boruvkaMst: components still merging after 64 rounds")
     val mstOut = mst.mat
-    Release.free(mst, comp, canon) // the chosen edges' chain ends in mstOut
-    (if (maximum) mstOut.withColumn(WEIGHT, -col(WEIGHT)) else mstOut, round)
+    Release.free(mst, last, canon) // the chosen edges' chain ends in mstOut
+    (if (maximum) mstOut.withColumn(WEIGHT, -col(WEIGHT)) else mstOut, rounds)
   }
 
   /** Topological levels of a DAG by zero-in-degree peeling: level(v) =

@@ -4,6 +4,7 @@ import graft.prims.Mat._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.{PropertyGraph, Structure, Gr}
+import graft.prims.{Hint, Iterate, Release}
 
 /** Triangle counting and k-truss.
   *
@@ -57,7 +58,7 @@ object Triangles {
     val ab = e.select(col(SRC).as("a"), col(DST).as("b"))
     val bc = e.select(col(SRC).as("b"), col(DST).as("c"))
     val ac = e.select(col(SRC).as("a"), col(DST).as("c"))
-    ab.join(bc, "b").join(graft.prims.Hint.state(ac, nE), Seq("a", "c"), "left_semi")
+    ab.join(bc, "b").join(Hint.state(ac, nE), Seq("a", "c"), "left_semi")
       .select("a", "b", "c")
   }
 
@@ -100,7 +101,7 @@ object Triangles {
       val comp = verts.select(col(ID).as(SRC)).crossJoin(verts.select(col(ID).as(DST)))
         .filter(col(SRC) < col(DST))
         .join(e.select(SRC, DST), Seq(SRC, DST), "left_anti").mat
-      graft.prims.Release.free(verts)
+      Release.free(verts)
       val cund = comp.select(SRC, DST)
         .union(comp.select(col(DST).as(SRC), col(SRC).as(DST)))
       val inter = cund.select(col(SRC).as("mid"), col(DST).as("u"))
@@ -116,7 +117,7 @@ object Triangles {
         .select(col(SRC), col(DST),
           (col("ds") + col("dd") - lit(nV) + coalesce(col("cc"), lit(0L))).as("support"))
     }
-    graft.prims.Release.free(verts)
+    Release.free(verts)
     val bounds = e.agg(least(min(SRC), min(DST)), greatest(max(SRC), max(DST))).first()
     val sup =
       if (!bounds.isNullAt(0) && bounds.getLong(0) >= 0 && bounds.getLong(1) < (1L << 31)) {
@@ -132,7 +133,7 @@ object Triangles {
         // is what keeps the WEDGE stream — the dominant intermediate —
         // out of the exchange entirely; past the gate the semi-join
         // degrades to a shuffle and the wedge volume is the bill.
-        val epB = graft.prims.Hint.state(ep, nE, maxRows = 32000000L)
+        val epB = Hint.state(ep, nE, maxRows = 32000000L)
         // Degree-ordered wedge enumeration (r11 — the ledger's named
         // lever). Support is orientation-INVARIANT, so the oracle
         // constraint that pins `oriented()` to id order (its (a,b,c)
@@ -146,7 +147,7 @@ object Triangles {
         // (arboricity bound; Chiba–Nishizeki / compact-forward).
         val deg = e.select(col(SRC).as(ID)).union(e.select(col(DST).as(ID)))
           .groupBy(ID).agg(count(lit(1)).as("d"))
-        val degB = graft.prims.Hint.state(deg, nV)
+        val degB = Hint.state(deg, nV)
         val low = col("ds") < col("dd") ||
           (col("ds") === col("dd") && col(SRC) < col(DST))
         val ow = e
@@ -192,7 +193,7 @@ object Triangles {
     kTrussWithRounds(g, k, maxIter)._1
 
   /** k-truss also returning the number of peel rounds until fixpoint (for
-    * oracle round-budget assertions).
+    * oracle round-budget assertions), the confirming round included.
     *
     * INCREMENTAL support maintenance (the reference's `k_truss_impl.cuh`
     * shape): the full Σ deg² wedge stream is paid ONCE for the initial
@@ -204,6 +205,14 @@ object Triangles {
     * subtracts their contribution from the survivors' support. A triangle
     * with 2+ deleted edges is found by several patterns and deduplicated so
     * it decrements exactly once.
+    *
+    * The peel runs on [[Iterate.fixpoint]] over (src, dst, support). The
+    * metric is the next round's delete count, which the stop rule keeps
+    * and stops at 0, so neither `del` (a filter of the state) nor `dec` is
+    * materialized. `dec` is sized by a bound: every dead triangle holds a
+    * deleted edge, which (support ≤ k−3) lies in at most k−3 live
+    * triangles, so `dec` has at most 3·|del|·(k−3) rows. Throws if
+    * `maxIter` peel rounds end before the fixpoint.
     *
     * Two scale regimes on top of that shape (r11 — the scale-20 probe
     * measured the unregimed loop's wall as round-1 BULK maintenance,
@@ -259,32 +268,30 @@ object Triangles {
       return (e0.select(SRC, DST), 1)
     // (src, dst, support); freeing the support frame frees e0 with it
     val sup0 = edgeSupportOf(e0)
-    var alive = sup0.mat
-    graft.prims.Release.free(sup0)
-    // live-edge count maintained arithmetically (del rows are distinct live
-    // edges), so the bulk-regime gate costs zero extra jobs per round
-    var nAlive = alive.count()
+    val alive0 = sup0.mat
+    Release.free(sup0)
+    val dying = col("support") < k - 2
+    val delCount = coalesce(sum(when(dying, 1L)), lit(0L))
+    // one scan for the live-edge and first delete counts; the live count is
+    // then maintained arithmetically (del rows are distinct live edges), so
+    // the bulk-regime gate costs zero extra jobs per round
+    val c0 = alive0.agg(count(lit(1)), delCount).first()
+    var nAlive = c0.getLong(0)
+    var nDel = c0.getLong(1)
+    var survivors: DataFrame = null // the bulk round's edge set
     def tri(d: DataFrame, p1: String, p2: String): DataFrame =
       d.select(col(SRC).as(p1), col(DST).as(p2))
-    var it = 0
-    var done = false
-    while (!done && it < maxIter) {
-      it += 1
-      val (del, nDel) = graft.prims.Iterate.materializeCount(
-        alive.filter(col("support") < k - 2).select(SRC, DST),
-        count(lit(1)), _.count())
-      if (nDel == 0) done = true
-      else if (nDel >= bulkRecomputeFrac * nAlive) {
+    val (alive, rounds, _) = Iterate.fixpoint(alive0, if (nDel == 0) 0 else maxIter, -1L)({ (alive, _) =>
+      val del = alive.filter(dying).select(SRC, DST)
+      val bulk = nDel >= bulkRecomputeFrac * nAlive
+      nAlive -= nDel
+      if (bulk) {
         // bulk regime: one Σ deg² support recompute over the survivors —
         // strictly cheaper than Σ_del·deg wedge maintenance once del is a
         // large fraction of the frame (the survivors are the SMALLER side,
         // and the five full-frame joins of the incremental path vanish)
-        val survivors = alive.filter(col("support") >= k - 2).select(SRC, DST).mat
-        val prev = alive
-        val sup = edgeSupportOf(survivors)
-        alive = sup.mat
-        graft.prims.Release.free(prev, sup)
-        nAlive -= nDel
+        survivors = alive.filter(col("support") >= k - 2).select(SRC, DST).mat
+        edgeSupportOf(survivors)
       } else {
         val e = alive.select(SRC, DST) // edge set at the start of the round
         // each pattern SEEDS from del — |del| ⋈ E on one vertex key, then a
@@ -306,7 +313,7 @@ object Triangles {
         // broadcasts a ~5M-row build side into four joins must not flip
         // with small graph-size changes. 1M admits every genuine cascade
         // tail while the acknowledged bulk round keeps the shuffled plan.
-        val delB = graft.prims.Hint.state(del, nDel, maxRows = 1000000L)
+        val delB = Hint.state(del, nDel, maxRows = 1000000L)
         // wedge candidates with the closing edge (cu, cv) explicit; all
         // three triangle edges are canonically oriented (a<b<c), so the
         // closing key per pattern is fixed at plan time
@@ -328,26 +335,27 @@ object Triangles {
           .join(e.select(col(SRC).as("cu"), col(DST).as("cv")), Seq("cu", "cv"), "left_semi")
           .select("a", "b", "c")
           .distinct()
-        val (dec, nDec) = graft.prims.Iterate.materializeCount(
-          dead
-            .select(explode(array(
-              struct(col("a").as(SRC), col("b").as(DST)),
-              struct(col("b").as(SRC), col("c").as(DST)),
-              struct(col("a").as(SRC), col("c").as(DST)))).as("t"))
-            .select(col(s"t.$SRC"), col(s"t.$DST"))
-            .groupBy(SRC, DST).agg(count(lit(1)).as("dec")),
-          count(lit(1)), _.count())
-        val prev = alive
-        alive = alive.join(delB, Seq(SRC, DST), "left_anti")
-          .join(graft.prims.Hint.state(dec, nDec), Seq(SRC, DST), "left")
+        val dec = dead
+          .select(explode(array(
+            struct(col("a").as(SRC), col("b").as(DST)),
+            struct(col("b").as(SRC), col("c").as(DST)),
+            struct(col("a").as(SRC), col("c").as(DST)))).as("t"))
+          .select(col(s"t.$SRC"), col(s"t.$DST"))
+          .groupBy(SRC, DST).agg(count(lit(1)).as("dec"))
+        alive.join(delB, Seq(SRC, DST), "left_anti")
+          .join(Hint.state(dec, 3L * nDel * (k - 3)), Seq(SRC, DST), "left")
           .select(col(SRC), col(DST),
             (col("support") - coalesce(col("dec"), lit(0L))).as("support"))
-          .mat
-        graft.prims.Release.free(prev, dec)
-        nAlive -= nDel
       }
-      graft.prims.Release.free(del)
-    }
-    (alive.select(SRC, DST), it)
+    }, Some(delCount), { (_, _, m) =>
+      Release.free(survivors)
+      survivors = null
+      nDel = m
+      m == 0
+    })
+    // nDel is the delete count of the returned state: 0 iff it is the truss
+    require(nDel == 0, s"kTruss: edges below support ${k - 2} remain after $maxIter peel rounds")
+    // + the confirming round, which found nothing to delete
+    (alive.select(SRC, DST), rounds + 1)
   }
 }

@@ -107,6 +107,32 @@ class AlgoSpec extends SparkSpec {
     assert(c(1L) == c(2L) && c(2L) == c(3L) && c(4L) != c(1L))
   }
 
+  test("SCC throws when maxRounds ends before every vertex is extracted") {
+    // cycle 1→2→3→1 feeds cycle 4→5→6→4: round 1 extracts {1, 2, 3} (its
+    // fwd and bwd labels agree on 1), while {4, 5, 6} is reached forward
+    // from 1 and so waits for round 2
+    val g = graphOf(Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 4L)))
+    val c = Components.scc(g).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(c == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 4L))
+    val e = intercept[IllegalArgumentException](Components.scc(g, maxRounds = 1))
+    assert(e.getMessage.contains("unextracted"), e.getMessage)
+  }
+
+  test("k-truss throws when maxIter ends before the peel settles") {
+    // vertex 7 hangs on 1, 2 and 3 (1–3 absent): 1–7 and 3–7 lie in one
+    // triangle each and go in peel round 1, which leaves 2–7 in none, so
+    // it goes in round 2; the rest is the 4-truss
+    val es = Seq((1L, 2L), (1L, 4L), (1L, 5L), (1L, 6L), (1L, 7L), (2L, 3L), (2L, 4L),
+      (2L, 5L), (2L, 6L), (2L, 7L), (3L, 4L), (3L, 5L), (3L, 6L), (3L, 7L), (4L, 6L), (5L, 6L))
+    val g = graphOf(es, directed = false)
+    val (truss, rounds) = Triangles.kTrussWithRounds(g, k = 4)
+    val got = truss.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got == es.filter(_._2 != 7L).toSet, got)
+    assert(rounds == 3, s"2 peel rounds + the confirming round, got $rounds")
+    val e = intercept[IllegalArgumentException](Triangles.kTrussWithRounds(g, k = 4, maxIter = 1))
+    assert(e.getMessage.contains("peel rounds"), e.getMessage)
+  }
+
   test("complement-path edge support and intersections match brute force on a dense graph") {
     // K7 minus 4 edges: density 17/21 > 1/2 with a NON-empty complement —
     // the regime where the cc terms of the complement identities actually

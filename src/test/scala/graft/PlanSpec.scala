@@ -317,4 +317,37 @@ class PlanSpec extends SparkSpec {
         "the bipartite step's nbrMin attach left the broadcast:\n" + plan)
     }
   }
+
+  test("k-truss incremental rounds on the RMAT fixture broadcast del into the seed joins") {
+    // the q_ktruss_rmat call; its incremental rounds are the ones whose plan
+    // seeds wedges (the closing-edge column cu), the bulk rounds recompute
+    val rounds = roundPlans("cu#") {
+      graft.algos.Triangles.kTrussWithRounds(Fixtures.rmatGraph(spark), k = 5)._1.collect()
+    }
+    // the seed joins: del ⋈ the live edges on one triangle vertex
+    val seed = """Join \[[ab]#\d+L?\], \[[ab]#\d+L?\], Inner""".r
+    rounds.foreach { plan =>
+      val joins = plan.linesIterator.filter(l => seed.findFirstIn(l).nonEmpty).toSeq
+      assert(joins.nonEmpty && joins.forall(_.contains("BroadcastHashJoin")) &&
+        !joins.exists(_.contains("SortMergeJoin")),
+        "a k-truss seed join left the broadcast:\n" + plan)
+    }
+  }
+
+  test("Boruvka rounds attach the component map to the edge table with a broadcast join") {
+    // a 12-cycle with distinct weights: several merge rounds
+    val g = wGraphOf((0L until 12L).map(i => (i, (i + 1) % 12, 1.0 + (i * 7) % 12)),
+      directed = false)
+    val rounds = roundPlans("NOT (c_src#") {
+      graft.algos.TreeDag.boruvkaMst(g).collect()
+    }
+    assert(rounds.size >= 2, s"${rounds.size} Boruvka rounds")
+    // the cross-edge filter marks the round plan; canon ⋈ comp, once per endpoint
+    val attach = """Join \[(src|dst)#\d+L?\], \[(src|dst)#\d+L?\], Inner""".r
+    rounds.foreach { plan =>
+      val joins = plan.linesIterator.filter(l => attach.findFirstIn(l).nonEmpty).toSeq
+      assert(joins.size >= 2 && joins.forall(_.contains("BroadcastHashJoin")),
+        "a Boruvka comp attach left the broadcast:\n" + plan)
+    }
+  }
 }

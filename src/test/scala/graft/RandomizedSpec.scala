@@ -452,11 +452,15 @@ class RandomizedSpec extends SparkSpec {
         val expect = vs.map { v =>
           v -> (reach(v, out) intersect reach(v, in)).min
         }.toMap
-        val got = Components.scc(graphOf(es)).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
         // engine components must partition identically (labels may differ);
-        // both sides canonicalize to the min member, so compare directly
-        assert(got == expect, s"seed $seed")
+        // both sides canonicalize to the min member, so compare directly.
+        // Caps of 1 run the trim one sweep at a time and the coloring
+        // through its cap doubling, round after round
+        for ((propCap, trimCap) <- Seq((20, 20), (1, 1))) {
+          val got = Components.scc(graphOf(es), propCap = propCap, trimCap = trimCap).collect()
+            .map(r => r.getLong(0) -> r.getLong(1)).toMap
+          assert(got == expect, s"seed $seed, propCap $propCap, trimCap $trimCap")
+        }
       }
     }
   }
